@@ -7,7 +7,7 @@ term-sharded shuffle):
   tf(docid, term, tf) ⋈ doc ordinals/lengths
     -> [salt hot terms]  groupBy(term, salt): sorted partial posting arrays
     -> groupBy(term):    merge partials (flatten + array_sort — JVM-side)
-    -> segment + encode: Arrow pandas UDF, delta+varbyte blocks w/ block-max
+    -> segment + encode: mapInArrow, delta+varbyte blocks w/ block-max
     -> postings table partitioned by shard
 
 Skew handling is explicit (north_rule): a df pre-pass marks hot terms
@@ -37,7 +37,6 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..config import BM25Config, IndexConfig
-from .codec import delta_encode, vb_encode
 
 BLOCK_SCHEMA = T.StructType(
     [
@@ -85,7 +84,7 @@ def _segment_schema(lang_col: str | None, key_col: str = "term") -> str:
 def _quotient_np(tfs: np.ndarray, dls: np.ndarray, bm25: BM25Config,
                  avgdl) -> np.ndarray:
     """Per-posting BM25 quotient, BIT-IDENTICAL to the WAND cursor's
-    arithmetic (`query/wand.py _Cursor.cur_score`): same operand order, same
+    arithmetic (`query/wand.py _Cursor.take_upto`): same operand order, same
     float64 ops, so a block's stored max quotient is an exact upper bound of
     every cursor-computed score in that block (multiplying by a positive idf
     is monotone). `avgdl` may be a scalar or a per-row array."""
@@ -94,146 +93,16 @@ def _quotient_np(tfs: np.ndarray, dls: np.ndarray, bm25: BM25Config,
     return tfs * (bm25.k1 + 1.0) / (tfs + bm25.k1 * (one_minus_b + dls * b_over))
 
 
-def _encode_group(ords, tfs, dls, qs, block_size, seg_postings):
-    """Encode one sorted (term, salt) group -> list of segment part-dicts
-    (splitting if the group exceeds seg_postings)."""
-    n = ords.size
-    segs = []
-    for s in range(max(1, -(-n // seg_postings))):
-        lo, hi = s * seg_postings, min((s + 1) * seg_postings, n)
-        so, st, sd, sq = ords[lo:hi], tfs[lo:hi], dls[lo:hi], qs[lo:hi]
-        blocks = []
-        for b0 in range(0, so.size, block_size):
-            b1 = min(b0 + block_size, so.size)
-            blocks.append(
-                {
-                    "base": int(so[b0]),
-                    "last": int(so[b1 - 1]),
-                    "n": int(b1 - b0),
-                    "max_q": float(sq[b0:b1].max()),
-                    "docs": delta_encode(so[b0:b1]),
-                    "tfs": vb_encode(st[b0:b1]),
-                    "dls": vb_encode(sd[b0:b1]),
-                }
-            )
-        segs.append(
-            {
-                "n_postings": int(hi - lo),
-                "first_ord": int(so[0]),
-                "last_ord": int(so[-1]),
-                "max_q": float(sq.max()),
-                "blocks": blocks,
-            }
-        )
-    return segs
-
-
-def _encode_partitions(block_size: int, seg_postings: int, lang_col: str | None,
-                       bm25: BM25Config, avgdl_by_lang: dict,
-                       key_col: str = "term"):
-    """mapInPandas encoder over FLAT rows sorted by (term[, lang], salt,
-    doc_ord) within each partition. Groups are contiguous; the trailing
-    (possibly incomplete) group of each Arrow batch is carried into the next
-    batch, and flushed at end-of-partition. All data crosses the Arrow
-    boundary as plain primitive columns — the fast path.
-
-    The block-bound quotient is computed HERE (numpy, from tf/dl plus the
-    broadcast-scalar avgdl) rather than shuffled: per-term constants (df,
-    idf, shard) and per-posting derivations have no business riding an
-    O(postings) shuffle when they can be recomputed or re-joined over the
-    ~1000x smaller encoded-segment rows."""
-    out_cols = (
-        [key_col] + ([lang_col] if lang_col else [])
-        + ["n_postings", "first_ord", "last_ord", "max_q", "blocks"]
-    )
-    key_is_id = key_col == "term_id"
-
-    def encode_groups(pdf: pd.DataFrame) -> pd.DataFrame:
-        terms = (
-            pdf[key_col].to_numpy(np.int64)
-            if key_is_id
-            else pdf[key_col].to_numpy()
-        )
-        # PACKED shuffle columns (build_postings packs them): _os carries
-        # salt<<40 | doc_ord (sorting by _os IS sorting by (salt, doc_ord)
-        # — salt occupies the high bits), _td carries tf<<32 | dl. ~16
-        # uncompressible bytes per raw posting row off the one big shuffle
-        # vs four separate fields, and the sort key is a single long.
-        os_ = pdf["_os"].to_numpy(np.int64)
-        td = pdf["_td"].to_numpy(np.int64)
-        salts = os_ >> np.int64(40)
-        ords = os_ & np.int64((1 << 40) - 1)
-        tfs = td >> np.int64(32)
-        dls = td & np.int64(0xFFFFFFFF)
-        change = np.ones(len(pdf), dtype=bool)
-        change[1:] = (terms[1:] != terms[:-1]) | (salts[1:] != salts[:-1])
-        if lang_col:
-            langs = pdf[lang_col].to_numpy()
-            change[1:] |= langs[1:] != langs[:-1]
-        starts = np.flatnonzero(change)
-        ends = np.append(starts[1:], len(pdf))
-        if lang_col:
-            # explicit dict lookup per distinct language: a missing (or NA)
-            # language must KeyError at build time, not silently map to NaN
-            # quotients and unusable block bounds
-            uniq, inv = np.unique(langs, return_inverse=True)
-            vals = np.array([avgdl_by_lang[u] for u in uniq], dtype=np.float64)
-            avgdls = vals[inv]
-        else:
-            avgdls = avgdl_by_lang[None]
-        qs = _quotient_np(
-            tfs.astype(np.float64), dls.astype(np.float64), bm25, avgdls
-        )
-        rows = []
-        for s, e in zip(starts, ends):
-            for part in _encode_group(
-                ords[s:e], tfs[s:e], dls[s:e], qs[s:e], block_size, seg_postings
-            ):
-                key_val = int(terms[s]) if key_is_id else terms[s]
-                row = {key_col: key_val, **part}
-                if lang_col:
-                    row[lang_col] = langs[s]
-                rows.append(row)
-        return pd.DataFrame(rows, columns=out_cols)
-
-    # carry detection compares the group key (key_col[, lang], salt); salt
-    # is the high 24 bits of the packed _os column
-    carry_cols = [key_col] + ([lang_col] if lang_col else [])
-
-    def fn(batches):
-        carry: pd.DataFrame | None = None
-        for pdf in batches:
-            if carry is not None and len(carry):
-                pdf = pd.concat([carry, pdf], ignore_index=True)
-            carry = None
-            if not len(pdf):
-                continue
-            # the trailing group is contiguous at the end (sorted input)
-            mask = np.ones(len(pdf), dtype=bool)
-            for c in carry_cols:
-                col = pdf[c].to_numpy()
-                mask &= col == pdf.iloc[-1][c]
-            os_np = pdf["_os"].to_numpy(np.int64) >> np.int64(40)
-            mask &= os_np == os_np[-1]
-            # length of the trailing run of True
-            rev = mask[::-1]
-            n_tail = int(np.argmin(rev)) if not rev.all() else len(pdf)
-            head, carry = pdf.iloc[: len(pdf) - n_tail], pdf.iloc[len(pdf) - n_tail :]
-            if len(head):
-                yield encode_groups(head)
-        if carry is not None and len(carry):
-            yield encode_groups(carry)
-
-    return fn
-
-
 def _encode_partitions_arrow(block_size: int, seg_postings: int,
                              lang_col: str | None, bm25: BM25Config,
                              avgdl_by_lang: dict, key_col: str = "term"):
-    """mapInArrow twin of `_encode_partitions` — same input contract (FLAT
-    rows sorted by (key[, lang], salt, doc_ord) within each partition, salt
-    and doc_ord packed in _os, tf and dl packed in _td), same output
-    segments byte-for-byte, with the per-block Python eliminated:
+    """mapInArrow posting encoder over FLAT rows sorted by (key[, lang],
+    salt, doc_ord) within each partition (salt and doc_ord packed in _os,
+    tf and dl packed in _td — see build_postings). Groups are contiguous;
+    the trailing (possibly incomplete) group of each Arrow batch is carried
+    into the next batch and flushed at end-of-partition. Each (key[, lang],
+    salt) group is split into segments of <= seg_postings postings and
+    each segment into block_size-posting blocks, with no per-block Python:
 
     - group/segment/block boundaries are computed as numpy index arrays
       (blocks tile each batch contiguously, so one `np.maximum.reduceat`
@@ -246,11 +115,11 @@ def _encode_partitions_arrow(block_size: int, seg_postings: int,
       runs on dictionary-encoded indices and output keys are an Arrow
       `take` at segment starts.
 
-    The pandas encoder spent ~13 us/posting building per-block dicts and
-    re-invoking the codec per 128-posting block (measured r6, sf0.1); this
-    path is the same arithmetic over whole batches. The per-doc pandas
-    encoder remains behind SPARK_GRAFT_ENCODER=pandas as the executable
-    spec; tests assert segment equality between the two."""
+    The block-bound quotient is computed HERE (numpy, from tf/dl plus the
+    broadcast-scalar avgdl) rather than shuffled: per-term constants (df,
+    idf, shard) and per-posting derivations have no business riding an
+    O(postings) shuffle when they can be recomputed or re-joined over the
+    ~1000x smaller encoded-segment rows."""
     import pyarrow as pa
     import pyarrow.compute as pc
 
@@ -304,8 +173,9 @@ def _encode_partitions_arrow(block_size: int, seg_postings: int,
         blk_starts = seg_starts[blk_of_seg] + blk_in_seg * block_size
         blk_ends = np.minimum(blk_starts + block_size, seg_ends[blk_of_seg])
         if langs_np is not None:
-            # explicit lookup per distinct language: a missing language
-            # must KeyError at build time (same contract as the pandas twin)
+            # explicit lookup per distinct language: a missing (or NA)
+            # language must KeyError at build time, not silently map to NaN
+            # quotients and unusable block bounds
             vals = np.array([avgdl_by_lang[v] for v in lang_vals],
                             dtype=np.float64)
             avgdls = vals[langs_np]
@@ -483,7 +353,7 @@ def build_postings(
         ).otherwise(F.lit(0)),
     )
     # SORT-BASED assembly: shuffle FLAT rows partitioned by (term, salt) and
-    # sorted by doc_ord, then encode groups in mapInPandas with carry-over at
+    # sorted by doc_ord, then encode groups in mapInArrow with carry-over at
     # batch boundaries. Flat primitive columns are the Arrow fast path — the
     # previous collect_list + array<struct> design spent ~16s/129k-turn build
     # just serializing nested arrays JVM->Python (measured with a no-op UDF);
@@ -540,25 +410,11 @@ def build_postings(
     salt_of = F.shiftright(F.col("_os"), 40)
     parted = salted.select(*flat_cols).repartition(n_enc, *group_keys, salt_of)
     parted = parted.sortWithinPartitions(*group_keys, "_os")
-    # Arrow-native vectorized encoder by default (whole-batch codec + zero
-    # per-block Python — measured ~2x the pandas encoder's stage CPU at
-    # sf0.1); SPARK_GRAFT_ENCODER=pandas keeps the per-group pandas twin
-    # (the executable spec) selectable for A/B and differential tests.
-    import os as _os_mod
-
-    if _os_mod.environ.get("SPARK_GRAFT_ENCODER", "arrow") == "pandas":
-        seg = parted.mapInPandas(
-            _encode_partitions(idx_cfg.block_size, seg_postings, lang_col,
-                               bm25, avgdl_by_lang, key_col=key_col),
-            schema=_segment_schema(lang_col, key_col),
-        )
-    else:
-        seg = parted.mapInArrow(
-            _encode_partitions_arrow(idx_cfg.block_size, seg_postings,
-                                     lang_col, bm25, avgdl_by_lang,
-                                     key_col=key_col),
-            schema=_segment_schema(lang_col, key_col),
-        )
+    seg = parted.mapInArrow(
+        _encode_partitions_arrow(idx_cfg.block_size, seg_postings, lang_col,
+                                 bm25, avgdl_by_lang, key_col=key_col),
+        schema=_segment_schema(lang_col, key_col),
+    )
     # dense per-term segment ids over the compressed rows (metadata only —
     # the WAND cursor orders segments by first_ord, not seg_id); df/idf
     # re-join and shard recomputes here, over ~#terms segment rows instead

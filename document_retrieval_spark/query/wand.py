@@ -4,16 +4,21 @@ pruning and a bounded min-heap").
 
 Distribution model: queries are the parallel unit. Query terms join to their
 posting segments (inner join == the inverted-index probe J1, pruning to
-touched terms only), then ``groupBy(query_id).applyInPandas`` runs the
-document-at-a-time WAND loop per query with
+touched terms only), then ``groupBy(query_id).applyInPandas`` runs one
+strip-at-a-time WAND pass per query (`_wand_one_query_blocked`):
 
-- lazy block decode (a block's 3 varbyte streams are only decoded when the
-  cursor actually lands in it),
-- global and block-level upper bounds ub = idf * max_q (safe because
-  variant-1 idf >= 0, SURVEY §2.9),
-- a bounded min-heap of k candidates keyed (score, -doc_ord) so equal scores
-  keep the smaller ordinal == smaller docid — the engine tie rule,
-- the classic pivot/seek loop with the BMW shallow-skip refinement.
+- the doc-ordinal axis is cut into STRIPS ending at the nearest
+  w-blocks-ahead block end across the query's term cursors (w adapts:
+  doubles after a scored strip up to 8, resets to 1 after a skip);
+- a strip whose summed block-max upper bounds (idf * max_q, safe because
+  variant-1 idf >= 0, SURVEY §2.9) cannot beat the current top-k threshold
+  is skipped on metadata alone — nothing in it is decoded;
+- a surviving strip is decoded lazily (runs of whole blocks in one varbyte
+  pass) and scored as NumPy arrays, summing each doc's term scores in
+  ascending term order so scores are bit-reproducible;
+- top-k candidates buffer and compress by one lexsort on (score desc,
+  doc_ord asc) — equal scores keep the smaller ordinal == smaller docid,
+  the engine tie rule.
 
 This is the pruned twin of query/bm25.py's exhaustive scorer; tests assert
 they (and the NumPy oracle) agree rank-identically. At 2k reference queries
@@ -30,15 +35,12 @@ to this per-query layout.
 
 from __future__ import annotations
 
-import heapq
-
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..config import BM25Config
-from .bm25 import bm25_term_score  # noqa: F401  (doc parity reference)
 from ..operators.codec import delta_decode, vb_decode
 
 _EMPTY_I64 = np.empty(0, dtype=np.int64)
@@ -49,7 +51,7 @@ class _Cursor:
     """Iterates one term's posting segments block-by-block with lazy decode."""
 
     __slots__ = (
-        "idf", "k1", "one_minus_b", "b_over", "avgdl", "segs", "seg_i",
+        "idf", "k1", "one_minus_b", "b_over", "segs", "seg_i",
         "blk_i", "ords", "tfs", "dls", "pos", "done", "ub", "order_key", "hi",
     )
 
@@ -70,7 +72,6 @@ class _Cursor:
         # segs: [{first_ord, last_ord, max_q, blocks:[{base,last,n,max_q,docs,tfs,dls}]}]
         self.idf = idf
         self.k1 = bm25.k1
-        self.avgdl = avgdl
         if bm25.length_norm == "standard":
             self.one_minus_b = 1.0 - bm25.b
             self.b_over = bm25.b / avgdl
@@ -107,42 +108,8 @@ class _Cursor:
     def cur_doc(self) -> int:
         return int(self.ords[self.pos])
 
-    def cur_block_last(self) -> int:
-        return int(self._cur_blocks()[self.blk_i]["last"])
-
-    def cur_block_ub(self) -> float:
-        return self.idf * float(self._cur_blocks()[self.blk_i]["max_q"])
-
-    def cur_score(self) -> float:
-        tf = self.tfs[self.pos]
-        dl = self.dls[self.pos]
-        denom = tf + self.k1 * (self.one_minus_b + dl * self.b_over)
-        # quotient FIRST, then * idf: the encoder stores per-block maxima of
-        # this exact quotient expression (operators/postings.py _quotient_np),
-        # and multiplying by a positive idf is monotone — so block/segment
-        # upper bounds can never be a final-ulp below an actual score
-        return self.idf * (tf * (self.k1 + 1.0) / denom)
-
     def _clamp(self):
         if not self.done and self.hi is not None and self.cur_doc() >= self.hi:
-            self.done = True
-
-    def advance(self):
-        self.pos += 1
-        if self.pos < self.ords.size:
-            self._clamp()
-            return
-        self.blk_i += 1
-        if self.blk_i < len(self._cur_blocks()):
-            self._load_block()
-            self._clamp()
-            return
-        self.seg_i += 1
-        self.blk_i = 0
-        if self.seg_i < len(self.segs):
-            self._load_block()
-            self._clamp()
-        else:
             self.done = True
 
     def _bulk_decode(self, i: int, j: int):
@@ -176,14 +143,15 @@ class _Cursor:
 
     def take_upto(self, end: int) -> tuple[np.ndarray, np.ndarray]:
         """Gather (doc_ords, scores) for every posting with
-        cur_doc <= doc_ord <= end and advance past them — the vectorized
-        batch twin of cur_score()+advance(). Score arithmetic is the exact
-        elementwise expression of cur_score() (quotient first, then * idf)
-        in the same float64 ops, so batch scores are bit-identical to the
-        per-doc path. Runs of WHOLE blocks within the consumed range are
-        decoded in one segmented shot (_bulk_decode); partially consumed
-        blocks keep the per-block path, and blocks a seek skips are still
-        never decoded."""
+        cur_doc <= doc_ord <= end and advance past them. Each score is the
+        quotient FIRST, then * idf: the encoder stores per-block maxima of
+        this exact quotient expression (operators/postings.py _quotient_np),
+        and multiplying by a positive idf is monotone — so block/segment
+        upper bounds can never be a final-ulp below an actual score.
+
+        Runs of WHOLE blocks within the consumed range are decoded in one
+        segmented shot (_bulk_decode); partially consumed blocks keep the
+        per-block path, and blocks a seek skips are never decoded."""
         out_o: list[np.ndarray] = []
         out_s: list[np.ndarray] = []
         while not self.done and self.cur_doc() <= end:
@@ -240,15 +208,15 @@ class _Cursor:
     def block_last_ahead(self, w: int) -> int:
         """last doc ordinal of the block (w-1) ahead of the current one in
         this segment (clamped to the segment's final block) — the strip
-        boundary for a w-block-wide strip. w=1 == cur_block_last()."""
+        boundary for a w-block-wide strip."""
         blocks = self._cur_blocks()
         return int(blocks[min(self.blk_i + w - 1, len(blocks) - 1)]["last"])
 
     def block_ub_ahead(self, w: int) -> float:
         """idf * max block quotient over the current and next (w-1) blocks
         — a valid upper bound for any posting this cursor contributes to a
-        strip that ends at or before block_last_ahead(w). w=1 ==
-        cur_block_ub(). Metadata only; decodes nothing."""
+        strip that ends at or before block_last_ahead(w). Metadata only;
+        decodes nothing."""
         m = 0.0
         for b in self._cur_blocks()[self.blk_i : self.blk_i + w]:
             q = b["max_q"]
@@ -287,103 +255,39 @@ class _Cursor:
         self._clamp()
 
 
-def _wand_one_query(cursors: list[_Cursor], k: int) -> list[tuple[int, float]]:
-    """Classic WAND with block-max shallow skips; returns [(doc_ord, score)]
-    ranked by (score desc, doc_ord asc)."""
-    heap: list[tuple[float, int]] = []  # (score, -doc_ord) min-heap
-
-    def theta() -> float:
-        return heap[0][0] if len(heap) >= k else float("-inf")
-
-    alive = [c for c in cursors if not c.done]
-    while alive:
-        alive.sort(key=lambda c: c.cur_doc())
-        th = theta()
-        acc = 0.0
-        pivot = -1
-        for i, c in enumerate(alive):
-            acc += c.ub
-            if acc > th:
-                pivot = i
-                break
-        if pivot < 0:
-            break  # no remaining doc can beat theta
-        pivot_doc = alive[pivot].cur_doc()
-        if alive[0].cur_doc() == pivot_doc:
-            # all cursors 0..pivot sit on pivot_doc (sorted); block-max check
-            matching = [c for c in alive if not c.done and c.cur_doc() == pivot_doc]
-            block_ub = sum(c.cur_block_ub() for c in matching)
-            if block_ub <= th:
-                # shallow skip: no doc until the nearest block end can win
-                d_skip = min(c.cur_block_last() for c in matching) + 1
-                nxt = [c.cur_doc() for c in alive if c.cur_doc() > pivot_doc]
-                if nxt:
-                    d_skip = min(d_skip, min(nxt))
-                d_skip = max(d_skip, pivot_doc + 1)
-                for c in matching:
-                    c.seek(d_skip)
-            else:
-                score = sum(
-                    c.cur_score()
-                    for c in sorted(matching, key=lambda c: c.order_key)
-                )
-                if score > th or (len(heap) < k):
-                    item = (score, -pivot_doc)
-                    if len(heap) < k:
-                        heapq.heappush(heap, item)
-                    elif item > heap[0]:
-                        heapq.heapreplace(heap, item)
-                for c in matching:
-                    c.advance()
-        else:
-            # advance the highest-ub cursor among those strictly BEFORE the
-            # pivot doc (index-before is not enough: an earlier cursor may
-            # already sit on pivot_doc, and seeking it would not move)
-            pre = [c for c in alive[:pivot] if c.cur_doc() < pivot_doc]
-            chosen = max(pre, key=lambda c: c.ub)
-            chosen.seek(pivot_doc)
-        alive = [c for c in alive if not c.done]
-
-    out = sorted(((s, -nd) for s, nd in heap), key=lambda x: (-x[0], x[1]))
-    return [(d, s) for s, d in out]
-
-
 def _wand_one_query_blocked(
     cursors: list[_Cursor], k: int
 ) -> list[tuple[int, float]]:
-    """STRIP-at-a-time block-max WAND — the vectorized twin of
-    `_wand_one_query` (same exact top-k, same tie rule, bit-identical
-    scores; tests assert result equality between the two kernels).
+    """STRIP-at-a-time block-max WAND over one query's cursors; returns
+    [(doc_ord, score)] ranked by (score desc, doc_ord asc).
 
-    The per-doc kernel spends O(union-size) Python iterations per query
-    (sort + list rebuilds per pivot doc). Here the doc-ordinal axis is
-    processed in STRIPS bounded by the nearest w-blocks-ahead end across
-    alive cursors (w adapts: doubling after scored strips up to 8, reset
-    to 1 on a skip — dense regions bulk-decode, prunable regions keep
-    single-block skip granularity): a strip whose summed w-block-max upper
-    bound can't beat theta is skipped whole (at w=1 exactly BMW's shallow
-    skip boundary), and a surviving strip is gathered and scored as NumPy
-    arrays (`_Cursor.take_upto`, with runs of whole blocks decoded in one
-    segmented varbyte pass), hundreds to thousands of postings per
-    interpreter iteration instead of one.
+    The doc-ordinal axis is processed in STRIPS bounded by the nearest
+    w-blocks-ahead end across alive cursors (w adapts: doubling after
+    scored strips up to 8, reset to 1 on a skip — dense regions
+    bulk-decode, prunable regions keep single-block skip granularity): a
+    strip whose summed w-block-max upper bound can't beat theta is skipped
+    whole (at w=1 exactly BMW's shallow skip boundary), and a surviving
+    strip is gathered and scored as NumPy arrays (`_Cursor.take_upto`,
+    with runs of whole blocks decoded in one segmented varbyte pass),
+    hundreds to thousands of postings per interpreter iteration.
 
     Exactness: every doc in strip [d, strip_end] can only carry terms whose
     cursors currently overlap the strip (cur_doc <= strip_end), so their
     summed current-block maxima upper-bound any doc score in the strip.
     Scores accumulate via np.add.at over cursors concatenated in ascending
     order_key — np.ufunc.at applies updates in index order, so each doc's
-    float summation order is exactly the per-doc kernel's sorted-term
-    order.
+    float summation order is ascending term order, the same as the
+    oracle's sorted(set(query)) loop.
 
     Top-k bookkeeping is BUFFERED, not a per-doc heap: surviving strip
     candidates above the current theta append to a numpy buffer; when the
     buffer exceeds ~max(4k, 1024) entries it compresses to the exact top-k
     via one lexsort on (-score, doc_ord) and theta jumps to the k-th best.
     Theta is therefore slightly STALE between compressions — a lower bound
-    of the heap kernel's exact theta — so strips prune no more (never
-    less correct) than the per-doc kernel, and the final lexsort selection
-    applies the identical (score desc, doc_ord asc) tie rule. Exact, with
-    zero per-document interpreter work."""
+    of the exact k-th best score — so strips prune a little less, never
+    incorrectly, and the final lexsort selection applies the (score desc,
+    doc_ord asc) tie rule. Exact, with zero per-document interpreter
+    work."""
     cand_o: list[np.ndarray] = []
     cand_s: list[np.ndarray] = []
     n_cand = 0
@@ -468,17 +372,6 @@ def _wand_one_query_blocked(
     return list(zip(o.tolist(), s.tolist()))
 
 
-import os as _os
-
-# kernel selector: blocked (vectorized strips) is the default; the per-doc
-# kernel stays available for A/B and as the executable spec
-_WAND_KERNEL = (
-    _wand_one_query
-    if _os.environ.get("SPARK_GRAFT_WAND_KERNEL", "blocked") == "perdoc"
-    else _wand_one_query_blocked
-)
-
-
 def wand_topk(
     query_terms: DataFrame,   # (query_id, term[, lang])
     postings: DataFrame,      # encoded segments from build_postings
@@ -511,7 +404,7 @@ def wand_topk(
     def score_group(pdf: pd.DataFrame) -> pd.DataFrame:
         qid = pdf["query_id"].iloc[0]
         avgdl = float(pdf["_avgdl"].iloc[0])  # one lang (hence avgdl) per query
-        ranked = _WAND_KERNEL(_cursors_from_pdf(pdf, bm25, avgdl), k)
+        ranked = _wand_one_query_blocked(_cursors_from_pdf(pdf, bm25, avgdl), k)
         return pd.DataFrame(
             {
                 "query_id": qid,
@@ -573,8 +466,8 @@ def _cursors_from_pdf(pdf: pd.DataFrame, bm25: BM25Config, avgdl: float,
         if idf < 0.0:
             # data-driven guard: an index persisted with idf_plus_one=False
             # (BM25 variants 3/5) carries negative idf for df > N/2 terms;
-            # ub = idf*max_q would then be a LOWER bound and the pivot/
-            # block-max pruning silently drops true top-k members
+            # ub = idf*max_q would then be a LOWER bound and the strip
+            # pruning would silently drop true top-k members
             raise ValueError(
                 f"negative idf ({idf}) for term {term!r}: WAND's block-max "
                 "upper bounds require idf >= 0 — variant-3/5 indexes must "
@@ -639,68 +532,42 @@ def _touched_segments(
         query_terms = query_terms.coalesce(1)
     query_terms = query_terms.dropDuplicates(["query_id", *join_keys])
     if term_dict is not None and "term_id" in postings.columns:
-        # ID-PUSHDOWN PATH (dict-mode index): translate the batch through
-        # the broadcast dictionary (inner join == the OOV-drop semantics
-        # the string path gets from its inner segments join), push the
-        # bounded int64 IN below the scan, and probe the segments on the
+        # ID-PUSHDOWN (dict-mode index): translate the batch through the
+        # broadcast dictionary (inner join == the OOV-drop semantics the
+        # string key gets from its inner segments join) and probe on the
         # long key. The string `term` column rides along from the query
         # side for the output contract.
-        dict_cols = [*join_keys, "term_id"]
-        qt_id = query_terms.join(
-            F.broadcast(term_dict.select(*dict_cols)), join_keys
+        query_terms = query_terms.join(
+            F.broadcast(term_dict.select(*join_keys, "term_id")), join_keys
         )
-        ids = [
-            r["term_id"]
-            for r in qt_id.select("term_id")
-            .distinct()
-            .limit(max_pushdown_terms + 1)
-            .collect()
-        ]
-        if len(ids) <= max_pushdown_terms:
-            postings = postings.filter(F.col("term_id").isin(ids))
-        else:
-            postings = postings.join(
-                F.broadcast(qt_id.select("term_id").distinct()),
-                "term_id", "leftsemi",
-            )
-        id_keys = ["term_id"] + ([lang_col] if lang_col else [])
-        touched = postings.drop("term").join(F.broadcast(qt_id), id_keys)
-        if lang_col:
-            touched = touched.join(
-                F.broadcast(coll.select(lang_col, "avgdl")), lang_col
-            )
-            avgdl_col = F.col("avgdl")
-        else:
-            if avgdl is None:
-                avgdl = float(coll.select("avgdl").first()["avgdl"])
-            avgdl_col = F.lit(float(avgdl))
-        return touched.select(
-            "query_id", "term", "idf", "first_ord", "last_ord", "max_q",
-            "blocks", avgdl_col.alias("_avgdl"),
-        )
-    # Explicit IN-filter on the touched terms BEFORE the join: against a
+        postings = postings.drop("term")
+        key, key_vals = "term_id", None
+    else:
+        key, key_vals = "term", terms
+    # Explicit IN-filter on the touched keys BEFORE the join: against a
     # persisted index this becomes a parquet PushedFilter (only touched
     # shards/row-groups are read — the "load only that language's model"
     # routing of `final_implementation.py:320-326`, generalized to terms).
-    # The distinct term list of a query batch is small by construction
+    # The distinct key list of a query batch is small by construction
     # (2k queries x <=6 terms); the driver collect is bounded by limit().
-    if terms is None:
-        terms = [
-            r["term"]
-            for r in query_terms.select("term")
+    if key_vals is None:
+        key_vals = [
+            r[key]
+            for r in query_terms.select(key)
             .distinct()
             .limit(max_pushdown_terms + 1)
             .collect()
         ]
-    if len(terms) <= max_pushdown_terms:
-        postings = postings.filter(F.col("term").isin(list(terms)))
+    if len(key_vals) <= max_pushdown_terms:
+        postings = postings.filter(F.col(key).isin(list(key_vals)))
     else:
         # huge batch: broadcast semi-join prune instead of a 50k-literal IN
         # (no parquet pushdown, but still reads/joins only touched terms)
         postings = postings.join(
-            F.broadcast(query_terms.select("term").distinct()), "term", "leftsemi"
+            F.broadcast(query_terms.select(key).distinct()), key, "leftsemi"
         )
-    touched = postings.join(F.broadcast(query_terms), join_keys)
+    probe_keys = [key] + ([lang_col] if lang_col else [])
+    touched = postings.join(F.broadcast(query_terms), probe_keys)
     if lang_col:
         touched = touched.join(
             F.broadcast(coll.select(lang_col, "avgdl")), lang_col
@@ -819,7 +686,7 @@ def wand_topk_docpart(
         b = int(pdf["bucket"].iloc[0])
         avgdl = float(pdf["_avgdl"].iloc[0])
         lo, hi = b * width, (b + 1) * width
-        ranked = _WAND_KERNEL(
+        ranked = _wand_one_query_blocked(
             _cursors_from_pdf(pdf, bm25, avgdl, lo=lo, hi=hi), k
         )
         return pd.DataFrame(

@@ -8,9 +8,14 @@ made for the 10^12-turn target and merely validated at fixture scale.
 
 from __future__ import annotations
 
+import logging
 import os
+import shutil
+import tempfile
 
 from pyspark.sql import SparkSession
+
+_log = logging.getLogger(__name__)
 
 # application ids whose session already ran the warm-start pass
 _WARMED: set[str] = set()
@@ -30,9 +35,12 @@ def _warmup_session(spark: SparkSession) -> None:
     intermediate is unpersisted, and results are discarded. Opt out with
     SPARK_GRAFT_WARMUP=0 (unit tests and one-shot CLIs do — a single short
     query cannot amortize the pass; sessions that serve many queries can).
-    Failures are swallowed: a session must never fail to construct because
-    its warm-up did.
+    Failures are logged (one WARN) and swallowed: a session must never
+    fail to construct because its warm-up did. Whatever the pass cached or
+    wrote so far is released either way.
     """
+    cached = []
+    wdir = None
     try:
         from pyspark.sql import functions as F
 
@@ -64,9 +72,6 @@ def _warmup_session(spark: SparkSession) -> None:
         # warmed over a local relation leaves the parquet-scan variant of
         # the same pipeline cold (its first task still pays the multi-second
         # Janino compile — measured on the dedup shingle stage, r6).
-        import shutil
-        import tempfile
-
         wdir = tempfile.mkdtemp(prefix="spark_graft_warmup_")
         tr_pdf.to_parquet(os.path.join(wdir, "tr.parquet"),
                           coerce_timestamps="us",
@@ -74,22 +79,26 @@ def _warmup_session(spark: SparkSession) -> None:
         tr = spark.read.parquet(os.path.join(wdir, "tr.parquet"))
         queries = spark.createDataFrame(q_pdf[["query_id", "query"]])
 
-        tf = term_frequencies_from_turns(tr, REFERENCE_PROFILE).persist()
-        dls = tf.groupBy("docid").agg(
+        def persist(df):
+            cached.append(df.persist())
+            return df
+
+        tf = persist(term_frequencies_from_turns(tr, REFERENCE_PROFILE))
+        dls = persist(tf.groupBy("docid").agg(
             F.sum("tf").cast("int").alias("dl")
-        ).persist()
-        docs_ord = assign_doc_ordinals(dls, approx_rows=n_docs).persist()
-        coll = dls.agg(
+        ))
+        docs_ord = persist(assign_doc_ordinals(dls, approx_rows=n_docs))
+        coll = persist(dls.agg(
             F.count("*").alias("n_docs"),
             (F.sum("dl").cast("double") / F.count("*")).alias("avgdl"),
-        ).persist()
-        stats = build_term_stats(tf, coll).persist()
+        ))
+        stats = persist(build_term_stats(tf, coll))
         avgdl = float(coll.first()["avgdl"])
-        postings = build_postings(
+        postings = persist(build_postings(
             tf.join(docs_ord, "docid"), stats,
             IndexConfig(n_shards=8, salt_df_threshold=2000, n_salts=8),
             bm25, avgdl_by_lang=avgdl,
-        ).persist()
+        ))
         qt = prepare_query_terms(queries, REFERENCE_PROFILE, bm25)
         terms = sorted({
             t for q in q_pdf["query"]
@@ -139,12 +148,14 @@ def _warmup_session(spark: SparkSession) -> None:
             F.col("vec_id").alias("probe_id"), "embedding"
         )
         brute_force_cosine_topk(vecs, probes, k=5).count()
-
-        for df in (tf, dls, docs_ord, coll, stats, postings):
+    except Exception as exc:  # noqa: BLE001 — warm-up is best-effort by contract
+        _log.warning("session warm-up failed, continuing cold: %r", exc,
+                     exc_info=True)
+    finally:
+        for df in cached:
             df.unpersist()
-        shutil.rmtree(wdir, ignore_errors=True)
-    except Exception:  # noqa: BLE001 — warm-up is best-effort by contract
-        pass
+        if wdir is not None:
+            shutil.rmtree(wdir, ignore_errors=True)
 
 
 def get_spark(

@@ -75,6 +75,18 @@ def test_id_pushdown_matches_string_path(spark, dict_index, queries_df):
     assert "term_id IN" in plan or "In(term_id" in plan or (
         "term_id" in plan and "PushedFilters" in plan
     ), plan
+    # above max_pushdown_terms the id probe prunes by broadcast semi-join
+    # instead of an IN-list; both layouts must still match the string path
+    semi = wand_topk(
+        qt, dict_index.postings, dict_index.doc_map, dict_index.coll, BM25,
+        k=10, term_dict=tdict, max_pushdown_terms=2,
+    )
+    assert "LeftSemi" in semi._jdf.queryExecution().executedPlan().toString()
+    assert _rows(semi) == want
+    assert _rows(wand_topk_docpart(
+        qt, dict_index.postings, dict_index.doc_map, dict_index.coll, BM25,
+        k=10, n_buckets=3, term_dict=tdict, max_pushdown_terms=2,
+    )) == want
 
 
 def test_id_pushdown_docpart_matches(spark, dict_index, queries_df):

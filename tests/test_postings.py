@@ -259,11 +259,23 @@ def test_single_partition_ordinals_lazy_and_dense(spark):
     assert ordered == sorted(a)
 
 
-def test_arrow_encoder_matches_pandas_encoder(spark, transcripts_df, monkeypatch):
-    """The mapInArrow vectorized encoder and the per-group pandas encoder
-    (the executable spec) must produce the same segments byte-for-byte:
-    same (term, salt-range) segmentation, same block boundaries/bounds and
-    identical varbyte streams."""
+def _segment_key(term, seg):
+    return (
+        term, seg["n_postings"], seg["first_ord"], seg["last_ord"],
+        seg["max_q"],
+        tuple(
+            (b["base"], b["last"], b["n"], b["max_q"],
+             bytes(b["docs"]), bytes(b["tfs"]), bytes(b["dls"]))
+            for b in seg["blocks"]
+        ),
+    )
+
+
+def test_arrow_encoder_matches_reference_encoder(spark, transcripts_df):
+    """build_postings' whole-batch Arrow encoder must write the same
+    segments byte-for-byte as the per-block reference encoder
+    (tests/postings_reference.py): same (term, salt-range) segmentation,
+    same block boundaries/bounds and identical varbyte streams."""
     from document_retrieval_spark.operators import assemble_documents
     from document_retrieval_spark.operators.postings import (
         assign_doc_ordinals,
@@ -275,35 +287,49 @@ def test_arrow_encoder_matches_pandas_encoder(spark, transcripts_df, monkeypatch
         term_frequencies,
         tokenize_documents,
     )
+    from postings_reference import encode_segments
 
     docs = tokenize_documents(assemble_documents(transcripts_df), REFERENCE_PROFILE)
     docs_ord = assign_doc_ordinals(docs.select("docid", "dl"))
     tf = term_frequencies(docs)
     stats = build_term_stats(tf, collection_stats(docs))
     tf_ord = tf.join(docs_ord, "docid")
-    # small blocks/segments + low salt threshold: multi-block, multi-segment,
-    # salted groups all exercised; tiny Arrow batches force the carry path
-    cfg = IndexConfig(n_shards=8, salt_df_threshold=10, n_salts=4, block_size=16)
+    bm25 = BM25Config()
+    dfs = {r["term"]: r["df"] for r in stats.select("term", "df").collect()}
+    avgdl = float(stats.select("avgdl").first()["avgdl"])
+    post = tf_ord.select("term", "doc_ord", "tf", "dl").toPandas()
+    post = post.sort_values("doc_ord")
+    # (block_size, seg_postings, salt_df_threshold) on the 50-doc fixture:
+    # multi-block lists; then several salt ranges per hot term plus
+    # non-hot groups longer than seg_postings (split into segments).
+    # Tiny Arrow batches force the encoder's carry path.
     spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "64")
     try:
-        def norm(df):
-            rows = []
-            for r in df.collect():
-                rows.append((
-                    r["term"], r["n_postings"], r["first_ord"], r["last_ord"],
-                    round(r["max_q"], 12),
-                    tuple(
-                        (b["base"], b["last"], b["n"], round(b["max_q"], 12),
-                         bytes(b["docs"]), bytes(b["tfs"]), bytes(b["dls"]))
-                        for b in r["blocks"]
-                    ),
-                ))
-            return sorted(rows)
-
-        monkeypatch.setenv("SPARK_GRAFT_ENCODER", "pandas")
-        ref = norm(build_postings(tf_ord, stats, cfg, BM25Config(), seg_postings=64))
-        monkeypatch.setenv("SPARK_GRAFT_ENCODER", "arrow")
-        got = norm(build_postings(tf_ord, stats, cfg, BM25Config(), seg_postings=64))
+        for block_size, seg_postings, threshold in [(16, 64, 10), (4, 8, 24)]:
+            cfg = IndexConfig(n_shards=8, salt_df_threshold=threshold,
+                              n_salts=4, block_size=block_size)
+            got = sorted(
+                _segment_key(r["term"], r)
+                for r in build_postings(
+                    tf_ord, stats, cfg, bm25, seg_postings=seg_postings
+                ).collect()
+            )
+            # reference: a hot term (df > threshold) groups by doc-ordinal
+            # range doc_ord // seg_postings, any other term is one group
+            want = []
+            for term, grp in post.groupby("term"):
+                if dfs[term] > threshold:
+                    salt = grp["doc_ord"] // seg_postings
+                else:
+                    salt = np.zeros(len(grp), dtype=np.int64)
+                for _, g in grp.groupby(salt):
+                    want += [
+                        _segment_key(term, seg)
+                        for seg in encode_segments(
+                            g["doc_ord"], g["tf"], g["dl"], bm25, avgdl,
+                            block_size, seg_postings,
+                        )
+                    ]
+            assert got == sorted(want), (block_size, seg_postings, threshold)
     finally:
         spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "256")
-    assert got == ref

@@ -1,6 +1,7 @@
 """Pure-Python randomized differential test of the WAND kernel vs brute force
-(no Spark) — exercises multi-block/multi-segment cursors, shallow skips, and
-the bounded heap across 200 seeded random posting configurations."""
+(no Spark) — exercises multi-block/multi-segment cursors, strip skips, the
+buffered top-k and [lo, hi)-clamped cursors across 200 seeded random posting
+configurations."""
 
 from __future__ import annotations
 
@@ -9,90 +10,31 @@ import math
 import numpy as np
 
 from document_retrieval_spark.config import BM25Config
-from document_retrieval_spark.operators.codec import delta_encode, vb_encode
-from document_retrieval_spark.query.wand import _Cursor, _wand_one_query
+from document_retrieval_spark.query.wand import _Cursor, _wand_one_query_blocked
+from postings_reference import encode_segments
 
 BM25 = BM25Config()
 AVGDL = 30.0
 
 
-def make_segs(postings, block, segp):
-    segs = []
-    for s0 in range(0, len(postings), segp):
-        chunk = postings[s0 : s0 + segp]
-        blocks = []
-        for b0 in range(0, len(chunk), block):
-            bl = chunk[b0 : b0 + block]
-            o = np.array([p[0] for p in bl], dtype=np.int64)
-            t = np.array([p[1] for p in bl], dtype=np.float64)
-            d = np.array([p[2] for p in bl], dtype=np.float64)
-            q = t * (BM25.k1 + 1) / (t + BM25.k1 * (1 - BM25.b + d / AVGDL))
-            blocks.append(
-                {
-                    "base": int(o[0]),
-                    "last": int(o[-1]),
-                    "n": len(bl),
-                    "max_q": float(q.max()),
-                    "docs": delta_encode(o),
-                    "tfs": vb_encode(t.astype(np.uint64)),
-                    "dls": vb_encode(d.astype(np.uint64)),
-                }
-            )
-        segs.append(
-            {
-                "first_ord": chunk[0][0],
-                "last_ord": chunk[-1][0],
-                "max_q": max(b["max_q"] for b in blocks),
-                "blocks": blocks,
-            }
-        )
-    return segs
-
-
-def brute(terms, k):
-    scores = {}
+def brute(terms, k, lo=0, hi=None):
+    """Exhaustive top-k with the kernel's float expression, each doc's term
+    scores summed in ascending term order — so scores compare with ==."""
+    k1, one_minus_b, b_over = BM25.k1, 1.0 - BM25.b, 1.0 / AVGDL
+    scores: dict[int, float] = {}
     for idf, plist in terms:
         for o, t, d in plist:
-            s = idf * t * (BM25.k1 + 1) / (t + BM25.k1 * (1 - BM25.b + d / AVGDL))
+            if o < lo or (hi is not None and o >= hi):
+                continue
+            s = idf * (t * (k1 + 1.0) / (t + k1 * (one_minus_b + d * b_over)))
             scores[o] = scores.get(o, 0.0) + s
     return sorted(scores.items(), key=lambda x: (-x[1], x[0]))[:k]
 
 
-def test_wand_kernel_randomized():
-    rng = np.random.default_rng(7)
-    N = 200
-    dls = rng.integers(10, 60, size=N)
-    for trial in range(200):
-        nt = rng.integers(1, 6)
-        terms = []
-        for _ in range(nt):
-            df = int(rng.integers(1, N))
-            ords = np.sort(rng.choice(N, size=df, replace=False))
-            plist = [(int(o), int(rng.integers(1, 5)), int(dls[o])) for o in ords]
-            idf = float(math.log1p((N - df + 0.5) / (df + 0.5)))
-            terms.append((idf, plist))
-        k = int(rng.choice([1, 3, 10, 25]))
-        bs, sp = int(rng.choice([2, 8, 16])), int(rng.choice([8, 32, 64]))
-        cursors = [
-            _Cursor(idf, make_segs(pl, bs, sp), BM25, AVGDL, order_key=i)
-            for i, (idf, pl) in enumerate(terms)
-        ]
-        got = _wand_one_query(cursors, k)
-        want = brute(terms, k)
-        assert len(got) == len(want), trial
-        for (gd, gs), (wd, ws) in zip(got, want):
-            assert gd == wd and math.isclose(gs, ws, rel_tol=1e-9), trial
-
-
-def test_blocked_kernel_bit_identical_to_perdoc():
-    """The vectorized strip kernel must return EXACTLY the per-doc
-    kernel's result — same docs, bit-identical float scores (same
-    ascending-term summation order), same tie behavior — across the same
-    200 randomized posting configurations, plus [lo, hi)-clamped cursors
-    (the docpart layout's bucket ranges)."""
-    from document_retrieval_spark.query.wand import _wand_one_query_blocked
-
-    rng = np.random.default_rng(13)
+def _configs(seed):
+    """200 seeded random queries: (terms, k, cursor factory, rng). The
+    factory builds fresh cursors, optionally clamped to [lo, hi)."""
+    rng = np.random.default_rng(seed)
     N = 200
     dls = rng.integers(10, 60, size=N)
     for trial in range(200):
@@ -107,19 +49,31 @@ def test_blocked_kernel_bit_identical_to_perdoc():
         k = int(rng.choice([1, 3, 10, 25]))
         bs, sp = int(rng.choice([2, 8, 16])), int(rng.choice([8, 32, 64]))
 
-        def mk(lo=None, hi=None):
+        def mk(lo=None, hi=None, terms=terms, bs=bs, sp=sp):
             return [
-                _Cursor(idf, make_segs(pl, bs, sp), BM25, AVGDL, order_key=i,
-                        lo=lo, hi=hi)
+                _Cursor(idf, encode_segments(*zip(*pl), BM25, AVGDL, bs, sp),
+                        BM25, AVGDL, order_key=i, lo=lo, hi=hi)
                 for i, (idf, pl) in enumerate(terms)
             ]
 
-        want = _wand_one_query(mk(), k)
-        got = _wand_one_query_blocked(mk(), k)
-        assert got == want, trial  # bit-identical scores included
-        # clamped (docpart bucket) variant
+        yield trial, terms, k, mk, rng
+
+
+def test_wand_kernel_randomized():
+    """The strip kernel returns EXACTLY the brute-force top-k — same docs,
+    bit-identical float scores, same (score desc, doc_ord asc) tie rule."""
+    for trial, terms, k, mk, _ in _configs(7):
+        assert _wand_one_query_blocked(mk(), k) == brute(terms, k), trial
+
+
+def test_blocked_kernel_bit_identical_to_perdoc():
+    """The strip kernel matches the per-doc exhaustive scorer bit for bit,
+    both unclamped and with [lo, hi)-clamped cursors (the docpart layout's
+    bucket ranges), on a second seed."""
+    N = 200
+    for trial, terms, k, mk, rng in _configs(13):
+        assert _wand_one_query_blocked(mk(), k) == brute(terms, k), trial
         lo = int(rng.integers(0, N // 2))
         hi = int(rng.integers(lo + 1, N + 1))
-        want_c = _wand_one_query(mk(lo=lo, hi=hi), k)
         got_c = _wand_one_query_blocked(mk(lo=lo, hi=hi), k)
-        assert got_c == want_c, (trial, lo, hi)
+        assert got_c == brute(terms, k, lo, hi), (trial, lo, hi)

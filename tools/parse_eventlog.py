@@ -15,7 +15,7 @@ def main() -> int:
     stages = {}
     stage_tasks = defaultdict(lambda: {"n": 0, "task_ms": 0, "gc_ms": 0,
                                        "sh_read": 0, "sh_write": 0,
-                                       "input": 0, "py_ms": 0})
+                                       "input": 0})
     with open(path) as f:
         for line in f:
             try:
@@ -49,9 +49,6 @@ def main() -> int:
                 st["n"] += 1
                 st["task_ms"] += m.get("Executor Run Time", 0)
                 st["gc_ms"] += m.get("JVM GC Time", 0)
-                st["py_ms"] += int(
-                    (ev.get("Task Executor Metrics") or {}).get(
-                        "ProcessTreePythonRSSMemory", 0) and 0)
                 sr = m.get("Shuffle Read Metrics") or {}
                 sw = m.get("Shuffle Write Metrics") or {}
                 st["sh_read"] += sr.get("Remote Bytes Read", 0) + sr.get(

@@ -414,34 +414,22 @@ def wand_topk(
             }
         )
 
-    # Finer-than-default query partitioning: per-query WAND cost is skewed
-    # (a hot-term query touches ~3x the median's postings), and with only
-    # spark.sql.shuffle.partitions buckets the slowest bucket gates the
-    # stage. HashPartitioning on query_id satisfies the groupBy's required
-    # distribution, so this is ONE shuffle, just finer-grained — tasks pack
-    # onto cores as they free up. The default (8x defaultParallelism) is
-    # tuned for at-scale batches where per-task kernel work dwarfs the
-    # ~25 ms per-task Arrow/launch overhead (measured +12% on a 1M-turn
-    # batch, WAND phase 2->8-core speedup 2.4x -> 4.0x); for SMALL corpora
-    # the overhead dominates — pass n_query_parts ~ 2x parallelism there
-    # (measured: 129k-turn batch 4.8-6.2 s at 8x vs 3.8-3.9 s at 2x).
-    if n_query_parts is not None:
-        parted = touched.repartition(n_query_parts, "query_id")
-    elif terms is not None and len(terms) <= 64:
-        # SMALL batch (driver knows the term list — typically one query):
-        # the kernel work is a handful of segments, so scheduling dominates;
-        # a number-pinned repartition would launch par*8 mostly-EMPTY tasks
-        # per call (~hundreds of ms of pure task-launch on a 1-query
-        # latency path). A column-only repartition is an AQE coalesce
-        # target, so the exchange sizes itself to the actual bytes —
-        # one task for one query, which is exactly this layout's latency
-        # model (one core runs the whole query).
-        parted = touched.repartition("query_id")
-    else:
-        parted = touched.repartition(
-            touched.sparkSession.sparkContext.defaultParallelism * 8,
-            "query_id",
-        )
+    # One scoring task per core by default. Each Python task costs about
+    # 0.3 s of CPU whatever its size (4-vCPU box, CPython 3.11, Spark 4.1;
+    # BENCH.md "Python task cost"): the worker calls
+    # importlib.invalidate_caches() per task (worker_util.setup_spark_files),
+    # which makes each of its ~16 zip importers re-read the directory of
+    # pyspark.zip (~150 ms). At evaluation batch sizes that set-up outweighs
+    # the kernel work a finer split would spread out. A number-pinned
+    # HashPartitioning on query_id satisfies the groupBy's distribution, so
+    # this stays ONE shuffle; AQE does not coalesce it, and empty partitions
+    # start no Python worker, so one query still costs one Python task.
+    # Callers whose per-query kernel work is heavy enough to want finer,
+    # skew-absorbing tasks pass n_query_parts, as bench.py does (8x cores
+    # above 500k turns).
+    if n_query_parts is None:
+        n_query_parts = touched.sparkSession.sparkContext.defaultParallelism
+    parted = touched.repartition(n_query_parts, "query_id")
     res = parted.groupBy("query_id").applyInPandas(
         score_group, schema="query_id string, rank int, doc_ord long, score double"
     )
@@ -473,14 +461,15 @@ def _cursors_from_pdf(pdf: pd.DataFrame, bm25: BM25Config, avgdl: float,
                 "upper bounds require idf >= 0 — variant-3/5 indexes must "
                 "be scored with the exhaustive join scorer"
             )
+        # zip the column arrays: itertuples() builds a namedtuple class
+        # (an eval) per term group
         segs = [
-            {
-                "first_ord": int(r.first_ord),
-                "last_ord": int(r.last_ord),
-                "max_q": float(r.max_q),
-                "blocks": list(r.blocks),
-            }
-            for r in grp.itertuples()
+            {"first_ord": int(f), "last_ord": int(l), "max_q": float(m),
+             "blocks": list(b)}
+            for f, l, m, b in zip(
+                grp["first_ord"].to_numpy(), grp["last_ord"].to_numpy(),
+                grp["max_q"].to_numpy(), grp["blocks"].to_numpy(),
+            )
         ]
         cursors.append(_Cursor(idf, segs, bm25, avgdl, order_key=ti,
                                lo=lo, hi=hi))

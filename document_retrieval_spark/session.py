@@ -12,6 +12,7 @@ import logging
 import os
 import shutil
 import tempfile
+import time
 
 from pyspark.sql import SparkSession
 
@@ -200,5 +201,7 @@ def get_spark(
     app_id = spark.sparkContext.applicationId
     if warmup and app_id not in _WARMED:
         _WARMED.add(app_id)  # before the run: getOrCreate re-entry must not re-warm
+        t0 = time.perf_counter()
         _warmup_session(spark)
+        _log.info("session warm-up took %.2f s", time.perf_counter() - t0)
     return spark

@@ -25,3 +25,20 @@ def test_failed_warmup_cleans_up_and_warns(spark, tmp_path, monkeypatch,
     warns = [r for r in caplog.records if r.levelno == logging.WARNING]
     assert len(warns) == 1
     assert "injected warm-up failure" in warns[0].getMessage()
+
+
+def test_warmup_logs_its_duration(spark, monkeypatch, caplog):
+    """get_spark logs one INFO line with the seconds the warm-up pass took."""
+    calls = []
+    monkeypatch.setattr(session, "_warmup_session", calls.append)
+    monkeypatch.setattr(session, "_WARMED", set())
+    with caplog.at_level(logging.INFO, logger=session.__name__):
+        # the conftest session's settings, so getOrCreate changes nothing
+        got = session.get_spark("tests", master="local[4]",
+                                shuffle_partitions=4, warmup=True)
+    assert got is spark and calls == [spark]
+    infos = [r for r in caplog.records if r.levelno == logging.INFO]
+    assert len(infos) == 1
+    msg = infos[0].getMessage()
+    assert msg.startswith("session warm-up took ") and msg.endswith(" s")
+    assert float(msg.split()[-2]) >= 0.0

@@ -5,6 +5,7 @@ must be rank-identical to the exhaustive join scorer AND the NumPy oracle
 from __future__ import annotations
 
 import math
+import re
 
 import pytest
 
@@ -214,3 +215,31 @@ def test_docpart_refuses_lang_partitioned_coll(built, queries_df):
     two_row = coll.unionByName(coll)
     with pytest.raises(ValueError, match="2 rows"):
         wand_topk_docpart(qt, postings, docs_ord, two_row, bm25, k=K)
+
+
+@pytest.mark.parametrize(
+    "with_terms, n_query_parts",
+    [(False, None), (True, None), (False, 3)],
+    ids=["no_terms", "short_term_list", "n_query_parts_3"],
+)
+def test_wand_query_partitioning_in_plan(
+    spark, built, queries_df, capsys, with_terms, n_query_parts
+):
+    """The scoring exchange is one number-pinned hash partitioning on
+    query_id: defaultParallelism partitions unless n_query_parts is given,
+    whether or not the caller passes a (short) term list."""
+    docs, docs_ord, tf, coll, stats, postings = built
+    bm25 = BM25Config()
+    qt = prepare_query_terms(queries_df.limit(10), REFERENCE_PROFILE, bm25)
+    terms = None
+    if with_terms:
+        terms = [r["term"] for r in qt.select("term").distinct().collect()]
+        assert 1 < len(terms) <= 64
+    wand_topk(qt, postings, docs_ord, coll, bm25, k=K, terms=terms,
+              n_query_parts=n_query_parts).explain("formatted")
+    plan = capsys.readouterr().out
+    want = n_query_parts or spark.sparkContext.defaultParallelism
+    found = re.findall(
+        r"hashpartitioning\(query_id#\d+, (\d+)\), (REPARTITION_BY_\w+)", plan
+    )
+    assert found == [(str(want), "REPARTITION_BY_NUM")], plan

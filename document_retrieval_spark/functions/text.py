@@ -196,3 +196,13 @@ def tokenize_pandas_udf(cfg: TokenizerConfig):
         return s.map(one)
 
     return _tok
+
+
+def tokenize(col: Column, cfg: TokenizerConfig) -> Column:
+    """The engine's tokenizer for `cfg`: the native expression when every
+    step is expressible in the JVM, the Arrow-batched UDF for lemma/stem
+    configs (the only Python in the pipeline, and only when the config
+    demands it)."""
+    if cfg.lemmatize or cfg.stem_lang:
+        return tokenize_pandas_udf(cfg)(col)
+    return tokenize_expr(col, cfg)

@@ -4,28 +4,36 @@ Pipeline shape (the Spark-first successor of team_run1's map -> driver-merge,
 `team_run1.py:80-121`, whose single-threaded reduce we replace with a
 term-sharded shuffle):
 
-  tf(docid, term, tf) ⋈ doc ordinals/lengths
-    -> [salt hot terms]  groupBy(term, salt): sorted partial posting arrays
-    -> groupBy(term):    merge partials (flatten + array_sort — JVM-side)
-    -> segment + encode: mapInArrow, delta+varbyte blocks w/ block-max
-    -> postings table partitioned by shard
+  tf(doc_ord, term|term_id, tf, dl)
+    -> salt: hot terms (df pre-pass) get salt = doc_ord // seg_postings,
+       every other term salt 0
+    -> ONE shuffle of flat packed rows, keyed (term[, lang], salt) — or
+       (term_id, salt) in id mode — and sorted by doc_ord per partition
+    -> segment + encode: mapInArrow, delta+varbyte blocks with block-max
+    -> (id mode) restore `term` by a dictionary join over the encoded rows
+    -> per-term seg_id / n_segs / shard over the encoded rows
 
-Skew handling is explicit (north_rule): a df pre-pass marks hot terms
-(df > salt_df_threshold); their per-(term,salt) partials bound any single
-reduce group to ~df/n_salts postings — the engine's answer to the 20x en-shard
-skew the reference hard-codes around (`final_implementation.py:228`).
+Skew handling is explicit (north_rule): range salting cuts a hot term's
+postings into doc-contiguous, disjoint groups of at most seg_postings, so
+no reduce group exceeds that bound and every group IS a final segment —
+there is no second merge shuffle (the reference hard-codes around its 20x
+en-shard skew instead, `final_implementation.py:228`).
 
-Block-max metadata: each 128-posting block stores max_q = max over the block
-of the BM25 tf/length quotient  tf*(k1+1)/(tf + k1*(1-b+dl/avgdl)); a term's
-score upper bound in that block is idf*max_q. Safe for WAND because variant-1
-idf = log1p(...) >= 0 (SURVEY §2.9).
+Block-max metadata: each block stores max_q = max over the block of the
+BM25 tf/length quotient `_quotient_np`; a term's score upper bound in that
+block is idf*max_q. Safe for WAND because variant-1 idf = log1p(...) >= 0
+(SURVEY §2.9). The WAND cursor scores with the same function.
+
+Output rows carry `term` (never a term id), so every index is probed on the
+same key. With a term dictionary the shuffle keys and carries int64
+`term_id` instead of the string, and the id stays inside the build.
 
 Scale notes:
-- doc ordinals come from zipWithIndex on a range-partitioned sort — the one
-  legitimate RDD use (no driver collect, no single-partition window).
-- hot terms are additionally split into SEGMENT rows of <= seg_postings
-  postings so no single output row exceeds ~hundreds of KB (a df=10^9 term
-  becomes ~8k rows, not one 3 GB row).
+- doc ordinals come from a two-pass range-partition ranking
+  (`assign_doc_ordinals`), JVM-only, with no driver collect.
+- a segment row holds <= seg_postings postings, so no single output row
+  exceeds ~hundreds of KB (a df=10^9 term becomes ~8k rows, not one 3 GB
+  row).
 """
 
 from __future__ import annotations
@@ -83,9 +91,9 @@ def _segment_schema(lang_col: str | None, key_col: str = "term") -> str:
 
 def _quotient_np(tfs: np.ndarray, dls: np.ndarray, bm25: BM25Config,
                  avgdl) -> np.ndarray:
-    """Per-posting BM25 quotient, BIT-IDENTICAL to the WAND cursor's
-    arithmetic (`query/wand.py _Cursor.take_upto`): same operand order, same
-    float64 ops, so a block's stored max quotient is an exact upper bound of
+    """Per-posting BM25 quotient — the one expression both the encoder
+    (block maxima) and the WAND cursor (`query/wand.py _Cursor.take_upto`)
+    evaluate, so a block's stored max quotient is an exact upper bound of
     every cursor-computed score in that block (multiplying by a positive idf
     is monotone). `avgdl` may be a scalar or a per-row array."""
     one_minus_b = 1.0 - bm25.b
@@ -446,12 +454,7 @@ def build_postings(
             F.count("*").over(Window.partitionBy(*group_keys)).cast("int"),
         )
         .select(
-            # id mode persists term_id ALONGSIDE the string: query-time
-            # probes can then push In(term_id, ...) — int64 parquet
-            # stats/dictionaries prune better than string IN at 10^8-term
-            # vocabularies (query/wand.py id-pushdown path)
-            *keys, *(["term_id"] if have_ids else []),
-            "shard", "seg_id", "n_segs", "df", "idf",
+            *keys, "shard", "seg_id", "n_segs", "df", "idf",
             "n_postings", "first_ord", "last_ord", "max_q", "blocks",
         )
     )

@@ -22,7 +22,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..config import TokenizerConfig
-from ..functions.text import tokenize_expr
+from ..functions.text import tokenize
 
 
 def tokenize_documents(
@@ -35,15 +35,11 @@ def tokenize_documents(
 
     Configs whose steps are all native expressions use the JVM-side
     tokenizer; lemma/stem configs fall back to the Arrow-batched pandas UDF
-    (the only Python in the pipeline, and only when the config demands it).
+    (`functions.text.tokenize`).
     """
-    if cfg.lemmatize or cfg.stem_lang:
-        from ..functions.text import tokenize_pandas_udf
-
-        tok = tokenize_pandas_udf(cfg)(F.col(text_col))
-    else:
-        tok = tokenize_expr(F.col(text_col), cfg)
-    return docs.withColumn("tokens", tok).withColumn("dl", F.size("tokens"))
+    return docs.withColumn(
+        "tokens", tokenize(F.col(text_col), cfg)
+    ).withColumn("dl", F.size("tokens"))
 
 
 def term_frequencies(
@@ -95,12 +91,7 @@ def build_term_dictionary(
     if cfg.bigrams:
         raise ValueError("bigrams span turn boundaries: build the dictionary "
                          "from assembled documents instead")
-    if cfg.lemmatize or cfg.stem_lang:
-        from ..functions.text import tokenize_pandas_udf
-
-        tok = tokenize_pandas_udf(cfg)(F.col("text"))
-    else:
-        tok = tokenize_expr(F.col("text"), cfg)
+    tok = tokenize(F.col("text"), cfg)
     from .ordinals import dense_rank_ordinals
 
     keys = ["term"] + ([lang_col] if lang_col else [])
@@ -183,12 +174,7 @@ def term_frequencies_from_turns(
             "bigrams span turn boundaries: use assemble_documents + "
             "tokenize_documents + term_frequencies"
         )
-    if cfg.lemmatize or cfg.stem_lang:
-        from ..functions.text import tokenize_pandas_udf
-
-        tok = tokenize_pandas_udf(cfg)(F.col("text"))
-    else:
-        tok = tokenize_expr(F.col("text"), cfg)
+    tok = tokenize(F.col("text"), cfg)
     if conv_map is not None:
         # (conv_id -> doc_ord) broadcast-applied BEFORE the group-by: the
         # tf exchange then keys on an int64 ordinal instead of the conv_id
@@ -205,6 +191,7 @@ def term_frequencies_from_turns(
         )
         key_names = ["docid"] + ([lang_col] if lang_col else [])
     exploded = transcripts.select(*keys, F.explode(tok).alias("term"))
+    term_col = "term"
     if term_dict is not None:
         # map term -> int64 id BEFORE the aggregation (broadcast hash join
         # inside the same codegen stage as tokenize/explode): the one tf
@@ -233,18 +220,13 @@ def term_frequencies_from_turns(
                 )).cast("long"),
             ).otherwise(F.col("term_id")),
         )
-        if doc_clustered:
-            # after the dict join: the doc-keyed exchange then carries
-            # (doc, term_id) longs, not term strings
-            exploded = exploded.repartition(key_names[0])
-        return (
-            exploded.groupBy(*key_names, "term_id")
-            .agg(F.count("*").alias("tf"))
-        )
+        term_col = "term_id"
     if doc_clustered:
+        # after the dict join, if any: the doc-keyed exchange then carries
+        # (doc, term_id) longs, not term strings
         exploded = exploded.repartition(key_names[0])
     return (
-        exploded.groupBy(*key_names, "term")
+        exploded.groupBy(*key_names, term_col)
         .agg(F.count("*").alias("tf"))
     )
 

@@ -28,7 +28,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..config import BM25Config, TokenizerConfig
-from ..functions.text import tokenize_expr
+from ..functions.text import tokenize
 from ..operators.topk import topk_per_group
 
 
@@ -42,13 +42,9 @@ def prepare_query_terms(
     """queries(query_id, query[, lang]) -> (query_id[, lang], term), with
     distinct terms per query when cfg says so (set(query), `cell 3:29`)."""
     keys = ["query_id"] + ([lang_col] if lang_col else [])
-    if cfg.lemmatize or cfg.stem_lang:
-        from ..functions.text import tokenize_pandas_udf
-
-        tok = tokenize_pandas_udf(cfg)(F.col(query_col))
-    else:
-        tok = tokenize_expr(F.col(query_col), cfg)
-    exploded = queries.select(*keys, F.explode(tok).alias("term"))
+    exploded = queries.select(
+        *keys, F.explode(tokenize(F.col(query_col), cfg)).alias("term")
+    )
     if bm25.unique_query_terms:
         exploded = exploded.dropDuplicates(keys + ["term"])
     return exploded

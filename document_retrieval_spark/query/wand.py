@@ -42,6 +42,7 @@ from pyspark.sql import functions as F
 
 from ..config import BM25Config
 from ..operators.codec import delta_decode, vb_decode
+from ..operators.postings import _quotient_np
 
 _EMPTY_I64 = np.empty(0, dtype=np.int64)
 _EMPTY_F64 = np.empty(0, dtype=np.float64)
@@ -51,7 +52,7 @@ class _Cursor:
     """Iterates one term's posting segments block-by-block with lazy decode."""
 
     __slots__ = (
-        "idf", "k1", "one_minus_b", "b_over", "segs", "seg_i",
+        "idf", "bm25", "avgdl", "segs", "seg_i",
         "blk_i", "ords", "tfs", "dls", "pos", "done", "ub", "order_key", "hi",
     )
 
@@ -71,13 +72,8 @@ class _Cursor:
         self.order_key = order_key
         # segs: [{first_ord, last_ord, max_q, blocks:[{base,last,n,max_q,docs,tfs,dls}]}]
         self.idf = idf
-        self.k1 = bm25.k1
-        if bm25.length_norm == "standard":
-            self.one_minus_b = 1.0 - bm25.b
-            self.b_over = bm25.b / avgdl
-        else:
-            self.one_minus_b = 1.0 - bm25.b
-            self.b_over = 1.0 / avgdl
+        self.bm25 = bm25
+        self.avgdl = avgdl
         self.segs = sorted(segs, key=lambda s: s["first_ord"])
         self.seg_i = 0
         self.blk_i = 0
@@ -144,10 +140,10 @@ class _Cursor:
     def take_upto(self, end: int) -> tuple[np.ndarray, np.ndarray]:
         """Gather (doc_ords, scores) for every posting with
         cur_doc <= doc_ord <= end and advance past them. Each score is the
-        quotient FIRST, then * idf: the encoder stores per-block maxima of
-        this exact quotient expression (operators/postings.py _quotient_np),
-        and multiplying by a positive idf is monotone — so block/segment
-        upper bounds can never be a final-ulp below an actual score.
+        quotient FIRST, then * idf: the quotient is the encoder's own
+        `_quotient_np`, whose per-block maxima the segments store, and
+        multiplying by a positive idf is monotone — so block/segment upper
+        bounds can never be a final-ulp below an actual score.
 
         Runs of WHOLE blocks within the consumed range are decoded in one
         segmented shot (_bulk_decode); partially consumed blocks keep the
@@ -164,11 +160,11 @@ class _Cursor:
                 if jh < self.ords.size and jh <= j:
                     j, clamped = jh, True
             if j > self.pos:
-                tf = self.tfs[self.pos : j]
-                dl = self.dls[self.pos : j]
-                denom = tf + self.k1 * (self.one_minus_b + dl * self.b_over)
                 out_o.append(self.ords[self.pos : j])
-                out_s.append(self.idf * (tf * (self.k1 + 1.0) / denom))
+                out_s.append(self.idf * _quotient_np(
+                    self.tfs[self.pos : j], self.dls[self.pos : j],
+                    self.bm25, self.avgdl,
+                ))
             if clamped:
                 self.done = True
                 break
@@ -187,9 +183,10 @@ class _Cursor:
                 k += 1
             if k > self.blk_i + 1:
                 ords, tf, dl = self._bulk_decode(self.blk_i + 1, k)
-                denom = tf + self.k1 * (self.one_minus_b + dl * self.b_over)
                 out_o.append(ords)
-                out_s.append(self.idf * (tf * (self.k1 + 1.0) / denom))
+                out_s.append(
+                    self.idf * _quotient_np(tf, dl, self.bm25, self.avgdl)
+                )
             self.blk_i = k
             if self.blk_i >= nb:
                 self.seg_i += 1
@@ -395,10 +392,13 @@ def wand_topk(
     `terms`: optional pre-known distinct term list of the batch (callers that
     hold the query set locally — e.g. scripts/query.py reading a CSV — pass
     it, avoiding any driver-side collect here).
+
+    `term_dict` (a `(term, term_id)` table) is ignored: the probe keys on
+    `term` for every index. Kept so that existing callers still work.
     """
     touched = _touched_segments(
         query_terms, postings, coll, bm25, lang_col, terms,
-        max_pushdown_terms, term_dict, avgdl
+        max_pushdown_terms, avgdl
     )
 
     def score_group(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -484,20 +484,17 @@ def _touched_segments(
     lang_col: str | None,
     terms: list[str] | None,
     max_pushdown_terms: int,
-    term_dict: DataFrame | None = None,
     avgdl: float | None = None,
 ) -> DataFrame:
     """Shared probe stage of both WAND layouts: validate the config, prune
     the postings scan to the batch's touched terms, join query terms to
     their segments and attach each query's avgdl.
 
-    `term_dict` ((term[, lang], term_id)): when the index was built in
-    dictionary mode its postings persist int64 term_id alongside the
-    string — mapping the query batch through the (broadcast) dictionary
-    lets the scan prune with `In(term_id, ...)` instead of a string IN:
-    int64 parquet column stats/dictionaries are cheaper to evaluate and
-    prune better at 10^8-term vocabularies, and the segments join keys on
-    a long instead of a string."""
+    The probe key is `term` for every index: a dictionary-built index keeps
+    int64 term ids inside its build shuffles only, and its postings carry
+    the `term` string like a string-built one. Columns are selected by
+    name, so an older index that still persists an id column probes the
+    same way."""
     join_keys = ["term"] + ([lang_col] if lang_col else [])
     if not bm25.unique_query_terms:
         # duplicate-term scoring (variants 2-5's literal loops) would count
@@ -517,46 +514,37 @@ def _touched_segments(
         # a query DF born from createDataFrame is a parallelize RDD with
         # defaultParallelism slices, so every evaluation launches that many
         # Python tasks for a handful of rows (~190 ms of pure task launch
-        # per latency-path call, measured r6); fold it to one task first
+        # per latency-path call, measured r6); fold it to one task first.
+        # This narrows the QUERY side only: the dropDuplicates exchange
+        # below follows it and the result is broadcast, so a large batch
+        # over a small vocabulary still scores in wand_topk's own
+        # query_id partitions (tests/test_wand.py).
         query_terms = query_terms.coalesce(1)
     query_terms = query_terms.dropDuplicates(["query_id", *join_keys])
-    if term_dict is not None and "term_id" in postings.columns:
-        # ID-PUSHDOWN (dict-mode index): translate the batch through the
-        # broadcast dictionary (inner join == the OOV-drop semantics the
-        # string key gets from its inner segments join) and probe on the
-        # long key. The string `term` column rides along from the query
-        # side for the output contract.
-        query_terms = query_terms.join(
-            F.broadcast(term_dict.select(*join_keys, "term_id")), join_keys
-        )
-        postings = postings.drop("term")
-        key, key_vals = "term_id", None
-    else:
-        key, key_vals = "term", terms
-    # Explicit IN-filter on the touched keys BEFORE the join: against a
+    # Explicit IN-filter on the touched terms BEFORE the join: against a
     # persisted index this becomes a parquet PushedFilter (only touched
     # shards/row-groups are read — the "load only that language's model"
     # routing of `final_implementation.py:320-326`, generalized to terms).
-    # The distinct key list of a query batch is small by construction
+    # The distinct term list of a query batch is small by construction
     # (2k queries x <=6 terms); the driver collect is bounded by limit().
-    if key_vals is None:
-        key_vals = [
-            r[key]
-            for r in query_terms.select(key)
+    if terms is None:
+        terms = [
+            r["term"]
+            for r in query_terms.select("term")
             .distinct()
             .limit(max_pushdown_terms + 1)
             .collect()
         ]
-    if len(key_vals) <= max_pushdown_terms:
-        postings = postings.filter(F.col(key).isin(list(key_vals)))
+    if len(terms) <= max_pushdown_terms:
+        postings = postings.filter(F.col("term").isin(list(terms)))
     else:
         # huge batch: broadcast semi-join prune instead of a 50k-literal IN
         # (no parquet pushdown, but still reads/joins only touched terms)
         postings = postings.join(
-            F.broadcast(query_terms.select(key).distinct()), key, "leftsemi"
+            F.broadcast(query_terms.select("term").distinct()), "term",
+            "leftsemi",
         )
-    probe_keys = [key] + ([lang_col] if lang_col else [])
-    touched = postings.join(F.broadcast(query_terms), probe_keys)
+    touched = postings.join(F.broadcast(query_terms), join_keys)
     if lang_col:
         touched = touched.join(
             F.broadcast(coll.select(lang_col, "avgdl")), lang_col
@@ -611,7 +599,10 @@ def wand_topk_docpart(
     an override: a caller that already holds the collection stats passes
     the scalar and saves the one-row driver job per query. It MUST equal
     the index's avgdl (scripts/query.py guards user overrides; this
-    parameter is for pass-through of the true value)."""
+    parameter is for pass-through of the true value).
+
+    `term_dict` is ignored, as in `wand_topk`. Kept so that existing callers
+    still work."""
     from ..operators.topk import topk_per_group
 
     extra = [c for c in coll.columns if c not in ("n_docs", "avgdl")]
@@ -623,7 +614,7 @@ def wand_topk_docpart(
         )
     touched = _touched_segments(
         query_terms, postings, coll, bm25, None, terms, max_pushdown_terms,
-        term_dict, avgdl
+        avgdl
     )
     spark = touched.sparkSession
     if n_buckets is None:

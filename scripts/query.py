@@ -27,18 +27,6 @@ if _ROOT not in sys.path:
     sys.path.insert(0, _ROOT)
 
 
-def _term_dict_of(idx, lang_col: str | None = None):
-    """(term[, lang], term_id) from a dict-mode index's persisted stats, or
-    None for string-mode indexes. Enables the WAND probe's int64
-    In(term_id, ...) pushdown (query/wand.py id-pushdown path)."""
-    if "term_id" not in idx.postings.columns:
-        return None
-    if "term_id" not in idx.term_stats.columns:
-        return None
-    cols = ["term"] + ([lang_col] if lang_col else []) + ["term_id"]
-    return idx.term_stats.select(*cols)
-
-
 def main(argv=None) -> int:
     ap = argparse.ArgumentParser(description=__doc__)
     ap.add_argument("--index", required=True)
@@ -156,14 +144,15 @@ def main(argv=None) -> int:
         # conjunctive filter silently returns empty/wrong results
         idx_lang = ((idx.manifest or {}).get("fingerprint", {})
                     .get("index", {}).get("lang_col"))
-        extra_stat_cols = [
-            c for c in idx.term_stats.columns
-            if c not in ("term", "term_id", "df", "idf", "n_docs", "avgdl")
+        # term stats take their partition columns from the collection
+        # stats they are joined with
+        extra_coll_cols = [
+            c for c in idx.coll.columns if c not in ("n_docs", "avgdl")
         ]
-        if idx_lang or extra_stat_cols:
+        if idx_lang or extra_coll_cols:
             ap.error(
                 "--phrase requires a single-language index; this index is "
-                f"partitioned by {idx_lang or extra_stat_cols} (per-language "
+                f"partitioned by {idx_lang or extra_coll_cols} (per-language "
                 "term stats would duplicate candidate rows and the "
                 "conjunctive all-terms filter would silently drop matches)"
             )
@@ -210,12 +199,11 @@ def main(argv=None) -> int:
                      "use the default wand scorer with --lang-col")
         topk = wand_topk_docpart(
             qt, idx.postings, idx.doc_map, idx.coll, bm25, k=args.k,
-            term_dict=_term_dict_of(idx),
         )
     else:
         topk = wand_topk(
             qt, idx.postings, idx.doc_map, idx.coll, bm25, k=args.k,
-            lang_col=args.lang_col, term_dict=_term_dict_of(idx, args.lang_col),
+            lang_col=args.lang_col,
         )
     topk.write.mode("overwrite").parquet(args.out)
 

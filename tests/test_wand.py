@@ -218,19 +218,30 @@ def test_docpart_refuses_lang_partitioned_coll(built, queries_df):
 
 
 @pytest.mark.parametrize(
-    "with_terms, n_query_parts",
-    [(False, None), (True, None), (False, 3)],
-    ids=["no_terms", "short_term_list", "n_query_parts_3"],
+    "with_terms, n_query_parts, copies",
+    [(False, None, 1), (True, None, 1), (False, 3, 1), (True, None, 100)],
+    ids=["no_terms", "short_term_list", "n_query_parts_3",
+         "1k_queries_short_term_list"],
 )
 def test_wand_query_partitioning_in_plan(
-    spark, built, queries_df, capsys, with_terms, n_query_parts
+    spark, built, queries_df, capsys, with_terms, n_query_parts, copies
 ):
     """The scoring exchange is one number-pinned hash partitioning on
     query_id: defaultParallelism partitions unless n_query_parts is given,
-    whether or not the caller passes a (short) term list."""
+    whether or not the caller passes a (short) term list — also for a
+    1,000-query batch over a small vocabulary, where the probe folds the
+    query side to one task (that fold must not narrow the scoring stage)."""
+    from pyspark.sql import functions as F
+
     docs, docs_ord, tf, coll, stats, postings = built
     bm25 = BM25Config()
     qt = prepare_query_terms(queries_df.limit(10), REFERENCE_PROFILE, bm25)
+    if copies > 1:
+        qt = qt.crossJoin(spark.range(copies).withColumnRenamed("id", "c")).select(
+            F.concat_ws("-", "query_id", F.col("c").cast("string")).alias("query_id"),
+            "term",
+        )
+        assert qt.select("query_id").distinct().count() == 10 * copies
     terms = None
     if with_terms:
         terms = [r["term"] for r in qt.select("term").distinct().collect()]

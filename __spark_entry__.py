@@ -1697,10 +1697,31 @@ def _q_bm25_topk_lemma(spark, sf_dir):
                            _lemma_tf_path(sf_dir))
 
 
+def _write_staged(df: DataFrame, path: str) -> None:
+    """Byte-stable stage of a staged-tf table: one file with a fixed name
+    (matched by the oracle's `*.parquet` glob), rows in (doc_id, term)
+    order, zstd whatever the session's default codec. Written by pyarrow
+    on the driver (the table is gate-sized): Spark names each part file
+    with a per-write UUID, and its parquet writer orders each column's
+    encoding list differently from one JVM to the next."""
+    import shutil
+
+    import pyarrow.parquet as pq
+
+    table = df.toArrow().sort_by(
+        [("doc_id", "ascending"), ("term", "ascending")]
+    )
+    shutil.rmtree(path, ignore_errors=True)
+    os.makedirs(path)
+    pq.write_table(
+        table, os.path.join(path, "part-00000.zstd.parquet"), compression="zstd"
+    )
+
+
 def _staged_tf_topk(spark, sf_dir, profile, path):
     """Shared engine side of the staged-analyzed-tf gates: tokenize with
-    the analyzer profile, stage (doc_id, term, tf, dl) deterministically,
-    then score BM25 from the staged parquet."""
+    the analyzer profile, stage (doc_id, term, tf, dl) byte-stably
+    (`_write_staged`), then score BM25 from the staged parquet."""
     from pyspark.sql import functions as F
 
     from document_retrieval_spark.config import BM25Config
@@ -1726,7 +1747,7 @@ def _staged_tf_topk(spark, sf_dir, profile, path):
             F.col("dl").cast("int").alias("dl"),
         )
     )
-    staged.coalesce(1).write.mode("overwrite").parquet(path)  # eager stage
+    _write_staged(staged, path)  # eager stage
 
     tf = spark.read.parquet(path)
     per_doc = tf.select("doc_id", "dl").distinct()

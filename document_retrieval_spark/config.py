@@ -115,7 +115,16 @@ class BM25Config:
 
 @dataclass(frozen=True)
 class IndexConfig:
-    """Physical index layout knobs (engine-only; the oracle has no layout)."""
+    """Physical index layout knobs (engine-only; the oracle has no layout).
+
+    `IndexBuilder` keys tf, term stats and postings on the `term` string,
+    as the reference's per-language index does
+    (`final_implementation.py:320-326`); dense int64 term ids are
+    operator-level only (`operators.stats.build_term_dictionary`). Every
+    field is part of the index manifest's fingerprint (`vars(index)`), so
+    adding or removing a field makes the next `build()` on an existing
+    index rebuild every stage.
+    """
 
     n_shards: int = 32           # term-shard count for the build shuffle
     n_shard_groups: int = 8      # checkpoint/resume granularity (FIXTURES.md §5)
@@ -134,15 +143,6 @@ class IndexConfig:
     # the reference's one-model-per-language production design
     # (`final_implementation.py:300-326`). None = single global model.
     lang_col: str | None = None
-    # Int-term-id dictionary (vocab stage): dense int64 ids are broadcast-
-    # applied BEFORE the tf group-by, so the tf exchange, the stats agg and
-    # the posting-salt shuffle key and carry longs instead of term strings
-    # (2-5x fewer key bytes on realistic vocabularies; strings stay at the
-    # API boundary — tf/stats parquet keep a `term` column). Costs one
-    # extra tokenize pass at first build; compaction EXTENDS the persisted
-    # dictionary, so steady-state incremental builds pay only the delta.
-    # Applies to turn-local (non-bigram) builds; bigram builds keep strings.
-    term_dict: bool = True
 
 
 @dataclass(frozen=True)

@@ -41,7 +41,6 @@ from ..sources.fs import fs_for, read_json, write_json_atomic
 from ..operators.assemble import assemble_documents
 from ..operators.postings import assign_doc_ordinals, build_postings
 from ..operators.stats import (
-    build_term_dictionary,
     build_term_stats,
     collection_stats,
     term_frequencies,
@@ -86,7 +85,7 @@ class IndexBuilder:
         }
 
     # ---- MVCC for the REBUILT stage family (stats + postings) ----
-    # docs/doc_map/tf/vocab are append-only: an in-flight reader's captured
+    # docs/doc_map/tf are append-only: an in-flight reader's captured
     # file listing stays valid across a compaction. stats and postings are
     # REBUILT by compaction, so they live under versioned dirs
     # (stats/v=N/..., postings/v=N/group=G) with a CURRENT.json pointer:
@@ -234,7 +233,6 @@ class IndexBuilder:
         # - bigram configs: bigrams span turn boundaries, so assemble +
         #   tokenize the full documents and share that frame between stages.
         turn_local = not self.cfg.tokenizer.bigrams
-        use_dict = self.cfg.index.term_dict and turn_local
         docs_tok: DataFrame | None = None
         tf_raw: DataFrame | None = None
 
@@ -247,35 +245,11 @@ class IndexBuilder:
                 ).persist()
             return docs_tok
 
-        # ---- vocab stage (term dictionary, IndexConfig.term_dict): the tf
-        # group-by below then keys/carries int64 term_id instead of the
-        # term string; compact() appends ids for genuinely-new terms, so
-        # incremental builds never re-derive the dictionary.
-        if use_dict:
-            if not self._complete("vocab"):
-                t0 = time.time()
-                obs = Observation()
-                build_term_dictionary(
-                    transcripts, self.cfg.tokenizer, lang_col=lang
-                ).observe(obs, F.count(F.lit(1)).alias("terms")).write.mode(
-                    "overwrite"
-                ).parquet(self._path("vocab"))
-                report["stages"]["vocab"] = self._write_manifest(
-                    "vocab", t0, {"terms": obs.get["terms"]},
-                    ["<input transcripts>"],
-                )
-            else:
-                report["skipped"].append("vocab")
-
-        def get_tdict() -> DataFrame:
-            return self.spark.read.parquet(self._path("vocab"))
-
         def get_tf_raw() -> DataFrame:
             nonlocal tf_raw
             if tf_raw is None:
                 tf_raw = term_frequencies_from_turns(
-                    transcripts, self.cfg.tokenizer, lang_col=lang,
-                    term_dict=get_tdict() if use_dict else None,
+                    transcripts, self.cfg.tokenizer, lang_col=lang
                 ).persist()
             return tf_raw
 
@@ -337,17 +311,9 @@ class IndexBuilder:
                 tf = term_frequencies(get_docs_tok(), lang_col=lang)
             doc_map = self.spark.read.parquet(self._path("doc_map"))
             g = self.cfg.index.n_shard_groups
-            tf_part = tf.join(doc_map.select("docid", "doc_ord", "dl"), "docid")
-            if use_dict:
-                # the string column re-attaches AFTER the group-by shuffle
-                # (broadcast map-side join over the int tf) so the persisted
-                # tf keeps the `term` API boundary for the exhaustive
-                # scorer; the postings stage column-prunes it away
-                tf_part = tf_part.join(
-                    F.broadcast(get_tdict().select("term", "term_id")),
-                    "term_id",
-                )
-            tf_part = tf_part.withColumn(
+            tf_part = tf.join(
+                doc_map.select("docid", "doc_ord", "dl"), "docid"
+            ).withColumn(
                 "shard_group", F.pmod(F.xxhash64("term"), F.lit(g)).cast("int")
             )
             obs = Observation()
@@ -366,9 +332,8 @@ class IndexBuilder:
             docs = self.spark.read.parquet(self._path("docs"))
             tf = self.spark.read.parquet(self._path("tf"))
             coll = collection_stats(docs, lang_col=lang)
-            term_key = "term_id" if use_dict else "term"
             stats = build_term_stats(
-                tf.select(term_key, "docid", *([lang] if lang else [])),
+                tf.select("term", "docid", *([lang] if lang else [])),
                 coll,
                 lang_col=lang,
                 # the persisted idf (and the idf baked into postings) must
@@ -377,16 +342,7 @@ class IndexBuilder:
                 # persist variant-1 ln(1+ratio) while the manifest fingerprint
                 # claims otherwise
                 idf_plus_one=self.cfg.bm25.idf_plus_one,
-                term_col=term_key,
             )
-            if use_dict:
-                # vocab-sized broadcast join restores the string boundary in
-                # the persisted stats (term AND term_id: build_postings'
-                # has-id branch shuffles on the id, queries join the string)
-                stats = stats.join(
-                    F.broadcast(get_tdict().select("term", "term_id")),
-                    "term_id",
-                )
             coll.write.mode("overwrite").parquet(self._path("stats/coll"))
             obs = Observation()
             stats.observe(obs, F.count(F.lit(1)).alias("terms")).write.mode(
@@ -415,8 +371,8 @@ class IndexBuilder:
             if lang
             else {None: float(coll_rows[0]["avgdl"])}
         )
-        tf_cols = (["term_id"] if use_dict else ["term"]) + (
-            ["docid", "doc_ord", "tf", "dl"] + ([lang] if lang else [])
+        tf_cols = ["term", "docid", "doc_ord", "tf", "dl"] + (
+            [lang] if lang else []
         )
         for g in range(self.cfg.index.n_shard_groups):
             stage = f"postings/group={g}"
@@ -511,11 +467,10 @@ class IndexBuilder:
         from pyspark.sql import Observation
 
         lang = self.cfg.index.lang_col
-        use_dict = self.cfg.index.term_dict and not self.cfg.tokenizer.bigrams
         self._recover_pending()
         # stats/postings may be legitimately invalidated (a rolled-forward
         # compaction rebuilds them below); only the append targets must exist
-        append_stages = ("docs", "doc_map", "tf") + (("vocab",) if use_dict else ())
+        append_stages = ("docs", "doc_map", "tf")
         for stage in append_stages:
             if not self._complete(stage):
                 raise ValueError(
@@ -559,40 +514,6 @@ class IndexBuilder:
         ).write.mode("overwrite").parquet(f"{pending}/doc_map")
 
         tf_new = term_frequencies(docs_tok, lang_col=lang)
-        n_vocab_new = 0
-        if use_dict:
-            # EXTEND the dictionary: genuinely-new terms get dense ids
-            # continuing after the current max (uniqueness + density
-            # preserved); existing terms keep their ids, so old postings/tf
-            # rows never re-map. This is what makes the vocab pass a
-            # one-time cost amortized across incremental builds.
-            from ..operators.ordinals import dense_rank_ordinals
-
-            dict_keys = ["term"] + ([lang] if lang else [])
-            tdict_old = self.spark.read.parquet(self._path("vocab"))
-            base_id = int(
-                tdict_old.agg(
-                    F.coalesce(F.max("term_id") + 1, F.lit(0)).alias("b")
-                ).collect()[0]["b"]
-            )
-            new_terms = (
-                tf_new.select(*dict_keys)
-                .distinct()
-                .join(tdict_old.select(*dict_keys), dict_keys, "left_anti")
-            )
-            obs = Observation()
-            dense_rank_ordinals(new_terms, dict_keys, "term_id").withColumn(
-                "term_id", F.col("term_id") + F.lit(base_id)
-            ).observe(obs, F.count(F.lit(1)).alias("terms")).write.mode(
-                "overwrite"
-            ).parquet(f"{pending}/vocab")
-            n_vocab_new = obs.get["terms"]
-            tdict_all = tdict_old.unionByName(
-                self.spark.read.parquet(f"{pending}/vocab")
-            )
-            tf_new = tf_new.join(
-                F.broadcast(tdict_all.select(*dict_keys, "term_id")), dict_keys
-            )
         g = self.cfg.index.n_shard_groups
         new_map = self.spark.read.parquet(f"{pending}/doc_map")
         tf_part = tf_new.join(
@@ -618,7 +539,7 @@ class IndexBuilder:
                 moves.append(
                     [os.path.join(PENDING, stage, rel), os.path.join(stage, rel)]
                 )
-        olds = {s: (self.manifest(s) or {}) for s in ("docs", "doc_map", "tf")}
+        olds = {s: (self.manifest(s) or {}) for s in append_stages}
         commit = {
             "moves": moves,
             "manifests": {
@@ -637,22 +558,6 @@ class IndexBuilder:
                               "appended": n_tf},
                     "inputs": ["<staged transcripts>", self._path("doc_map")],
                 },
-                **(
-                    {
-                        "vocab": {
-                            "extra": {
-                                "terms": (self.manifest("vocab") or {}).get(
-                                    "terms", 0
-                                )
-                                + n_vocab_new,
-                                "appended": n_vocab_new,
-                            },
-                            "inputs": ["<staged transcripts>"],
-                        }
-                    }
-                    if use_dict
-                    else {}
-                ),
             },
             "invalidate": ["stats"]
             + [f"postings/group={i}" for i in range(g)],

@@ -317,8 +317,8 @@ def build_postings(
     # because that is the very shuffle key the assembly repartition uses.
     _maybe_b = F.broadcast if stats_broadcast else (lambda df: df)
     # INT TERM IDS through the posting shuffle WHEN THE CALLER PROVIDES
-    # THEM (term dictionary mode — IndexBuilder's vocab stage, or bench's
-    # SPARK_GRAFT_TERM_DICT arm): the raw-posting exchange (and its sort)
+    # THEM (bench's SPARK_GRAFT_TERM_DICT arm; IndexBuilder keys on the
+    # term string): the raw-posting exchange (and its sort)
     # then keys and carries an int64 `term_id` instead of the term string,
     # and strings are restored on the ~1000x-smaller encoded-segment rows
     # by the dictionary join below. Without caller-provided ids the

@@ -42,14 +42,10 @@ def tokenize_documents(
     ).withColumn("dl", F.size("tokens"))
 
 
-def term_frequencies(
-    tok_docs: DataFrame,
-    lang_col: str | None = None,
-    doc_clustered: bool = True,
-) -> DataFrame:
+def term_frequencies(tok_docs: DataFrame, lang_col: str | None = None) -> DataFrame:
     """A1: (docid[, lang], term, tf).
 
-    doc_clustered=True (default) keys the one exchange on docid ALONE (see
+    The one exchange is keyed on docid ALONE (see
     term_frequencies_from_turns for the full rationale): the tf table comes
     out hash-partitioned by document, so every downstream per-doc
     aggregation — dl, doc norms, the per-(query, doc) score accumulations
@@ -57,9 +53,9 @@ def term_frequencies(
     from the persisted layout and drops its own corpus-sized exchange.
     """
     keys = ["docid"] + ([lang_col] if lang_col else [])
-    exploded = tok_docs.select(*keys, F.explode("tokens").alias("term"))
-    if doc_clustered:
-        exploded = exploded.repartition("docid")
+    exploded = tok_docs.select(
+        *keys, F.explode("tokens").alias("term")
+    ).repartition("docid")
     return (
         exploded.groupBy(*keys, "term")
         .agg(F.count("*").alias("tf"))
@@ -132,7 +128,6 @@ def term_frequencies_from_turns(
     lang_col: str | None = None,
     term_dict: DataFrame | None = None,
     conv_map: DataFrame | None = None,
-    doc_clustered: bool = True,
 ) -> DataFrame:
     """A1 computed TURN-LOCALLY: (docid[, lang], term, tf) with ONE shuffle.
 
@@ -152,9 +147,9 @@ def term_frequencies_from_turns(
     here because tf is order-free; dl = sum(tf) per doc (SURVEY A5, variant-1
     dl definition).
 
-    doc_clustered=True (default) keys that one exchange on the DOC key
-    alone (repartition before the group-by) instead of letting the
-    aggregation hash on (doc, term). Trade, measured at sf0.1 (r6):
+    That one exchange is keyed on the DOC key alone (repartition before
+    the group-by) instead of letting the aggregation hash on (doc, term).
+    Trade, measured at sf0.1 (r6):
     short-turn transcripts collapse only ~2x under the map-side partial agg
     (2.93M exploded tokens -> 1.47M tf rows), so keying the exchange on the
     doc key and aggregating entirely reduce-side moves similar bytes through
@@ -165,9 +160,7 @@ def term_frequencies_from_turns(
     scorers: 146 MB and 131 MB exchanges at sf0.1 fell to the ~1 MB
     post-agg window exchange), and (b) co-partitions tf with the doc-keyed
     ordinal/dl join of the posting path, so at scale that join no longer
-    reshuffles the tf table. doc_clustered=False restores the
-    (doc, term)-keyed aggregation exchange for corpora whose documents are
-    long enough that map-side collapse outweighs the layout benefit.
+    reshuffles the tf table.
     """
     if cfg.bigrams:
         raise ValueError(
@@ -202,8 +195,8 @@ def term_frequencies_from_turns(
         dict_keys = ["term"] + ([lang_col] if lang_col else [])
         # LEFT join + loud per-row failure on a dictionary miss: an inner
         # join would silently drop OOV tokens from tf (and hence dl, stats
-        # and the index) when a stale vocab checkpoint or a caller-supplied
-        # partial dictionary doesn't cover the input's vocabulary. The
+        # and the index) when a stale or partial caller-supplied
+        # dictionary doesn't cover the input's vocabulary. The
         # when-branch is never taken on a covering dict, so this costs
         # nothing in the designed flows (r4 ADVICE, stats.py:184).
         exploded = exploded.join(
@@ -214,26 +207,19 @@ def term_frequencies_from_turns(
                 F.col("term_id").isNull(),
                 F.raise_error(F.concat(
                     F.lit("term_frequencies: token absent from the term "
-                          "dictionary (stale vocab checkpoint or partial "
-                          "caller dict): "),
+                          "dictionary (stale or partial caller dict): "),
                     F.col("term"),
                 )).cast("long"),
             ).otherwise(F.col("term_id")),
         )
         term_col = "term_id"
-    if doc_clustered:
-        # after the dict join, if any: the doc-keyed exchange then carries
-        # (doc, term_id) longs, not term strings
-        exploded = exploded.repartition(key_names[0])
+    # after the dict join, if any: the doc-keyed exchange then carries
+    # (doc, term_id) longs, not term strings
+    exploded = exploded.repartition(key_names[0])
     return (
         exploded.groupBy(*key_names, term_col)
         .agg(F.count("*").alias("tf"))
     )
-
-
-def doc_stats(tok_docs: DataFrame, lang_col: str | None = None) -> DataFrame:
-    keys = ["docid"] + ([lang_col] if lang_col else [])
-    return tok_docs.select(*keys, "dl")
 
 
 def collection_stats(tok_docs: DataFrame, lang_col: str | None = None) -> DataFrame:

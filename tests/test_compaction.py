@@ -48,13 +48,19 @@ def test_stream_compact_equals_cold_build(spark, tmp_path_factory):
     # base corpus: conversations 0..59; three streamed batches add 60..89
     all_tr = gen_transcripts(90, seed=77)
     convs = sorted(all_tr["conv_id"].unique())
+    # one delta conversation carries a term the base has never seen: the
+    # compacted index must answer it exactly like the cold union build
+    novel, novel_conv = "zebrafish", convs[85]
+    first = all_tr.index[all_tr["conv_id"] == novel_conv][0]
+    all_tr.loc[first, "text"] += f" {novel}"
     base = all_tr[all_tr["conv_id"].isin(convs[:60])]
     deltas = [
         all_tr[all_tr["conv_id"].isin(convs[60 + 10 * i:60 + 10 * (i + 1)])]
         for i in range(3)
     ]
-    queries = gen_queries(all_tr, 30, seed=78)
-    qdf = spark.createDataFrame(queries[["query_id", "query"]])
+    queries = gen_queries(all_tr, 30, seed=78)[["query_id", "query"]]
+    queries.loc[len(queries)] = ["q_novel", novel]
+    qdf = spark.createDataFrame(queries)
 
     out_inc = str(tmp_path_factory.mktemp("idx_inc"))
     out_cold = str(tmp_path_factory.mktemp("idx_cold"))
@@ -64,6 +70,9 @@ def test_stream_compact_equals_cold_build(spark, tmp_path_factory):
 
     builder = IndexBuilder(spark, CFG, out_inc)
     builder.build(spark.createDataFrame(base, schema=transcripts_schema()))
+    assert load_index(spark, out_inc).term_stats.filter(
+        f"term = '{novel}'"
+    ).count() == 0
 
     # stream the deltas: drop 3 batch files, run the availableNow file-source
     # query into the staging table after each drop
@@ -97,6 +106,7 @@ def test_stream_compact_equals_cold_build(spark, tmp_path_factory):
     mism = {k: (got[k], want[k]) for k in want if got[k][0] != want[k][0]
             or not math.isclose(got[k][1], want[k][1], rel_tol=1e-9)}
     assert not mism, mism
+    assert got[("q_novel", 1)][0] == novel_conv
 
     # stats reflect the union corpus (N = 90 docs)
     idx = load_index(spark, out_inc)

@@ -1,7 +1,8 @@
 """Differential tests for the corpus-curation analysis ops added in round 5:
 Gopher/MassiveText repetition stats and deterministic hash sampling — the
 Spark gate vs its DuckDB oracle SQL on the sf0.001 documents table (the same
-comparison the driver runs at sf0.01), plus row-local unit checks.
+comparison the driver runs at sf0.01), plus row-local unit checks, and the
+byte-stability of the staged-tf table the stemmed/lemma gates score from.
 """
 
 from __future__ import annotations
@@ -87,3 +88,33 @@ def test_deterministic_sample_is_stable_and_sized(spark):
     assert a != c, "different salt must draw a different sample"
     with pytest.raises(ValueError):
         deterministic_sample(docs, "doc_id", 1.5)
+
+
+def test_staged_tf_write_is_byte_stable(spark, tmp_path):
+    """The staged-tf gates write one fixed-name zstd file, rows in
+    (doc_id, term) order: two runs leave the same file listing and the
+    same bytes, and those bytes are the committed stage, which another
+    process wrote."""
+    import fnmatch
+
+    import pyarrow.parquet as pq
+
+    path = tmp_path / "stemmed_tf"
+    runs = []
+    for _ in range(2):
+        assert entry_mod._staged_tf_topk(
+            spark, SF, entry_mod._stemmed_profile(), str(path)
+        ).count() > 0
+        runs.append({f: (path / f).read_bytes() for f in sorted(os.listdir(path))})
+    assert runs[0] == runs[1]
+    (name,) = runs[0]
+    assert fnmatch.fnmatch(name, "*.parquet")
+    with open(os.path.join(entry_mod._stemmed_tf_path(SF), name), "rb") as fh:
+        assert fh.read() == runs[0][name]
+    f = pq.ParquetFile(path / name)
+    assert f.metadata.row_group(0).column(0).compression == "ZSTD"
+    keys = [
+        (r["doc_id"], r["term"])
+        for r in f.read(columns=["doc_id", "term"]).to_pylist()
+    ]
+    assert keys == sorted(keys) and len(keys) > 0

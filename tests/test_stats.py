@@ -250,25 +250,3 @@ def test_partial_dict_raises_not_drops(spark, transcripts_df):
         ).collect()
     assert "term dictionary" in str(ei.value)
 
-
-def test_doc_clustered_tf_equals_unclustered(spark, transcripts_df):
-    """doc_clustered=True (the r6 default: the one tf exchange keyed on the
-    doc key) must produce row-identical tf to the (doc, term)-keyed
-    aggregation — only the physical layout may differ."""
-    from document_retrieval_spark.operators.stats import (
-        term_frequencies_from_turns,
-    )
-
-    a = {
-        (r["docid"], r["term"]): r["tf"]
-        for r in term_frequencies_from_turns(
-            transcripts_df, REFERENCE_PROFILE, doc_clustered=True
-        ).collect()
-    }
-    b = {
-        (r["docid"], r["term"]): r["tf"]
-        for r in term_frequencies_from_turns(
-            transcripts_df, REFERENCE_PROFILE, doc_clustered=False
-        ).collect()
-    }
-    assert a == b

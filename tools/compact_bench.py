@@ -1,6 +1,6 @@
 #!/usr/bin/env python3
 """Steady-state claim, measured: folding a 5% delta into a persisted
-term-dict index (compact) vs a cold rebuild of the union corpus."""
+index (compact) vs a cold rebuild of the union corpus."""
 import json, os, shutil, sys, time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 

@@ -24,6 +24,11 @@ Stage DAG (each independently resumable):
 Why shard groups: re-running one failed group re-reads ONLY tf partitions with
 that shard_group (parquet partition pruning), so recovery cost is
 O(1/n_shard_groups) of the build, not a full re-scan.
+
+build() runs the doc stages (docs, doc_map, tf) and then the global stages
+(stats, postings, publish). compact() appends newly staged conversations
+through the same doc-stage code, written to a staging dir and committed into
+the live tables, and then re-runs the global stages.
 """
 
 from __future__ import annotations
@@ -213,119 +218,119 @@ class IndexBuilder:
         additionally partitioned by language — the reference's
         one-model-per-language layout (`final_implementation.py:300-326`).
         """
+        report: dict = {"stages": {}, "skipped": []}
+        self._recover_pending()
+        self._doc_stages(transcripts, "", 0, report)
+        return self._global_stages(report)
+
+    def _doc_stages(self, transcripts: DataFrame, prefix: str, ord_base: int,
+                    report: dict) -> None:
+        """Turns -> the docs, doc_map and tf stages, each written at
+        ``self._path(prefix + stage)`` with its manifest (build(): the live
+        tables; compact(): its `_compact_pending/` staging dir) and skipped
+        when already complete. Doc ordinals start at ``ord_base``.
+
+        Tokenization strategy, ONE tokenize pass either way:
+        - non-bigram configs: TURN-LOCAL tokenize -> one-shuffle tf
+          (term_frequencies_from_turns). The raw conversation text never
+          shuffles, no token arrays are cached — only the collapsed
+          (docid, term, tf) long form persists; doc lengths derive from it
+          (dl = sum of tf, the reference's own A5 definition) and the docs
+          stage is a text-free metadata aggregate.
+        - bigram configs: bigrams span turn boundaries, so assemble +
+          tokenize the full documents and share that frame between stages.
+        The shared frame is unpersisted in a ``finally``: a failed stage
+        leaves nothing cached in the session.
+        """
         from pyspark.sql import Observation
 
         lang = self.cfg.index.lang_col
-        report: dict = {"stages": {}, "skipped": []}
-        self._recover_pending()
+        if self.cfg.tokenizer.bigrams:
+            shared = tokenize_documents(
+                assemble_documents(transcripts, lang_col=lang),
+                self.cfg.tokenizer,
+            )
+            docs_src = shared
+            tf_src = term_frequencies(shared, lang_col=lang)
+        else:
+            shared = tf_src = term_frequencies_from_turns(
+                transcripts, self.cfg.tokenizer, lang_col=lang
+            )
+            keys = ["conv_id"] + ([lang] if lang else [])
+            meta = (
+                transcripts.groupBy(*keys)
+                .agg(
+                    F.count("*").alias("n_turns"),
+                    F.min("ts").alias("first_ts"),
+                    F.max("ts").alias("last_ts"),
+                )
+                .withColumnRenamed("conv_id", "docid")
+            )
+            dls = tf_src.groupBy("docid").agg(F.sum("tf").cast("int").alias("dl"))
+            docs_src = meta.join(dls, "docid", "left").na.fill({"dl": 0})
+        doc_cols = ["docid", "dl", "n_turns", "first_ts", "last_ts"] + (
+            [lang] if lang else []
+        )
+        g = self.cfg.index.n_shard_groups
+
+        def path(stage: str) -> str:
+            return self._path(prefix + stage)
+
+        def run(stage: str, make, inputs: list[str], part: str | None = None):
+            name = prefix + stage
+            if self._complete(name):
+                report["skipped"].append(name)
+                return
+            t0 = time.time()
+            obs = Observation()
+            w = make().observe(
+                obs, F.count(F.lit(1)).alias("rows")
+            ).write.mode("overwrite")
+            if part:
+                w = w.partitionBy(part)
+            w.parquet(path(stage))
+            report["stages"][name] = self._write_manifest(
+                name, t0, {"rows": obs.get["rows"]}, inputs
+            )
+
+        shared.persist()  # feeds both the docs and the tf stage
+        try:
+            run("docs", lambda: docs_src.select(*doc_cols),
+                ["<input transcripts>"])
+            run(
+                "doc_map",
+                lambda: assign_doc_ordinals(
+                    self.spark.read.parquet(path("docs")).select("docid", "dl")
+                ).withColumn("doc_ord", F.col("doc_ord") + F.lit(ord_base)),
+                [path("docs")],
+            )
+            run(
+                "tf",
+                lambda: tf_src.join(
+                    self.spark.read.parquet(path("doc_map")).select(
+                        "docid", "doc_ord", "dl"
+                    ),
+                    "docid",
+                ).withColumn(
+                    "shard_group",
+                    F.pmod(F.xxhash64("term"), F.lit(g)).cast("int"),
+                ),
+                ["<input transcripts>", path("doc_map")],
+                part="shard_group",
+            )
+        finally:
+            shared.unpersist()
+
+    def _global_stages(self, report: dict) -> dict:
+        """stats -> postings -> rollup/publish over the live docs and tf
+        tables, written into the stats/postings version this run targets."""
+        from pyspark.sql import Observation
+
+        lang = self.cfg.index.lang_col
         # target version AFTER recovery (a rolled-forward compaction marks
         # the pointer stale, which moves the target to the next version)
         self._ver = self._resolve_target_ver()
         self._drop_stale_groups()
-
-        # Tokenization strategy, ONE tokenize pass either way:
-        # - fast path (non-bigram configs): TURN-LOCAL tokenize -> one-shuffle
-        #   tf (term_frequencies_from_turns). The raw conversation text never
-        #   shuffles, no token arrays are cached — only the collapsed
-        #   (docid, term, tf) long form persists; doc lengths derive from it
-        #   (dl = sum of tf, the reference's own A5 definition) and the docs
-        #   stage becomes a text-free metadata aggregate.
-        # - bigram configs: bigrams span turn boundaries, so assemble +
-        #   tokenize the full documents and share that frame between stages.
-        turn_local = not self.cfg.tokenizer.bigrams
-        docs_tok: DataFrame | None = None
-        tf_raw: DataFrame | None = None
-
-        def get_docs_tok() -> DataFrame:
-            nonlocal docs_tok
-            if docs_tok is None:
-                docs_tok = tokenize_documents(
-                    assemble_documents(transcripts, lang_col=lang),
-                    self.cfg.tokenizer,
-                ).persist()
-            return docs_tok
-
-        def get_tf_raw() -> DataFrame:
-            nonlocal tf_raw
-            if tf_raw is None:
-                tf_raw = term_frequencies_from_turns(
-                    transcripts, self.cfg.tokenizer, lang_col=lang
-                ).persist()
-            return tf_raw
-
-        doc_cols = ["docid", "dl", "n_turns", "first_ts", "last_ts"] + (
-            [lang] if lang else []
-        )
-        if not self._complete("docs"):
-            t0 = time.time()
-            if turn_local:
-                keys = ["conv_id"] + ([lang] if lang else [])
-                meta = (
-                    transcripts.groupBy(*keys)
-                    .agg(
-                        F.count("*").alias("n_turns"),
-                        F.min("ts").alias("first_ts"),
-                        F.max("ts").alias("last_ts"),
-                    )
-                    .withColumnRenamed("conv_id", "docid")
-                )
-                dls = get_tf_raw().groupBy("docid").agg(
-                    F.sum("tf").cast("int").alias("dl")
-                )
-                docs_src = meta.join(dls, "docid", "left").na.fill({"dl": 0})
-            else:
-                docs_src = get_docs_tok()
-            obs = Observation()
-            docs_src.select(*doc_cols).observe(
-                obs, F.count(F.lit(1)).alias("rows")
-            ).write.mode("overwrite").parquet(self._path("docs"))
-            report["stages"]["docs"] = self._write_manifest(
-                "docs", t0, {"rows": obs.get["rows"]}, ["<input transcripts>"]
-            )
-        else:
-            report["skipped"].append("docs")
-
-        if not self._complete("doc_map"):
-            t0 = time.time()
-            src = (
-                get_docs_tok()
-                if docs_tok is not None
-                else self.spark.read.parquet(self._path("docs"))
-            )
-            doc_map = assign_doc_ordinals(src.select("docid", "dl"))
-            obs = Observation()
-            doc_map.observe(obs, F.count(F.lit(1)).alias("rows")).write.mode(
-                "overwrite"
-            ).parquet(self._path("doc_map"))
-            report["stages"]["doc_map"] = self._write_manifest(
-                "doc_map", t0, {"rows": obs.get["rows"]}, [self._path("docs")]
-            )
-        else:
-            report["skipped"].append("doc_map")
-
-        if not self._complete("tf"):
-            t0 = time.time()
-            if turn_local:
-                tf = get_tf_raw()
-            else:
-                tf = term_frequencies(get_docs_tok(), lang_col=lang)
-            doc_map = self.spark.read.parquet(self._path("doc_map"))
-            g = self.cfg.index.n_shard_groups
-            tf_part = tf.join(
-                doc_map.select("docid", "doc_ord", "dl"), "docid"
-            ).withColumn(
-                "shard_group", F.pmod(F.xxhash64("term"), F.lit(g)).cast("int")
-            )
-            obs = Observation()
-            tf_part.observe(obs, F.count(F.lit(1)).alias("rows")).write.mode(
-                "overwrite"
-            ).partitionBy("shard_group").parquet(self._path("tf"))
-            report["stages"]["tf"] = self._write_manifest(
-                "tf", t0, {"rows": obs.get["rows"]},
-                ["<input transcripts>", self._path("doc_map")],
-            )
-        else:
-            report["skipped"].append("tf")
 
         if not self._complete("stats"):
             t0 = time.time()
@@ -354,11 +359,6 @@ class IndexBuilder:
             )
         else:
             report["skipped"].append("stats")
-
-        if docs_tok is not None:
-            docs_tok.unpersist()
-        if tf_raw is not None:
-            tf_raw.unpersist()
 
         fault_after = int(os.environ.get("FAULT_AFTER_SHARD", "-1"))
         stats_b = self.spark.read.parquet(self._path("stats/terms"))
@@ -435,18 +435,23 @@ class IndexBuilder:
         this job periodically merges them.
 
         Incremental work (proportional to the DELTA):
-          - assemble+tokenize only the staged conversations,
-          - docs / doc_map / tf stages are APPENDED (new doc ordinals
-            continue after the current max, preserving uniqueness+density),
-          - conversations already indexed are dropped (anti-join on docid) —
-            the staging contract is complete conversations (the streaming
-            assembler's session-window watermark provides exactly that).
+          - conversations already indexed are dropped first (anti-join of
+            the staged turns on conv_id against the live docs) — the staging
+            contract is complete conversations (the streaming assembler's
+            session-window watermark provides exactly that),
+          - the remaining turns go through build()'s own doc stages
+            (`_doc_stages`), so they are tokenized exactly as a cold build
+            tokenizes them: turn-locally, or as assembled documents when the
+            tokenizer emits bigrams,
+          - docs / doc_map / tf are APPENDED (new doc ordinals continue after
+            the current max, preserving uniqueness+density).
 
         Rebuilt work (REQUIRED for correctness, proportional to the index,
         not the corpus text): stats and postings — N, df, idf and therefore
         every segment's idf column change globally when documents arrive, so
-        the encode pass re-runs from the (cheap, already-tokenized) tf table.
-        Tokenization — the dominant cost at transcript scale — never re-runs.
+        build()'s global stages re-run from the (cheap, already-tokenized)
+        tf table. Tokenization — the dominant cost at transcript scale —
+        never re-runs for indexed conversations.
 
         Note on ordering: appended ordinals are NOT docid-sorted across the
         old/new boundary, so an exact-score TIE may rank in arrival order
@@ -464,9 +469,6 @@ class IndexBuilder:
         orphan docs rows that the anti-join then treats as already indexed —
         silently unsearchable forever.
         """
-        from pyspark.sql import Observation
-
-        lang = self.cfg.index.lang_col
         self._recover_pending()
         # stats/postings may be legitimately invalidated (a rolled-forward
         # compaction rebuilds them below); only the append targets must exist
@@ -477,55 +479,26 @@ class IndexBuilder:
                     f"compact() requires a completed build (stage {stage!r} "
                     "is missing/stale); run build() first"
                 )
-        report: dict = {"stages": {}, "skipped": []}
 
-        # materialize the delta ONCE to a staging table, severing its lineage
-        # from the docs path: applying the commit refreshes that path's file
-        # listing, which would otherwise invalidate this plan's cache and
-        # re-run the anti-join against the already-appended rows (dropping
-        # every new doc). IO cost is one write+read of the DELTA only.
-        existing = self.spark.read.parquet(self._path("docs"))
-        delta_path = self._path("_compact_delta")
-        tokenize_documents(
-            assemble_documents(staged_turns, lang_col=lang), self.cfg.tokenizer
-        ).join(existing.select("docid"), "docid", "left_anti").write.mode(
-            "overwrite"
-        ).parquet(delta_path)
-        self.spark.catalog.refreshByPath(delta_path)
-        docs_tok = self.spark.read.parquet(delta_path)
-
-        pending = self._path(PENDING)
-        self.fs.rmtree(pending)
-        doc_cols = ["docid", "dl", "n_turns", "first_ts", "last_ts"] + (
-            [lang] if lang else []
+        indexed = self.spark.read.parquet(self._path("docs")).select(
+            F.col("docid").alias("conv_id")
         )
-        # ---- stage the three appends under pending/ (live table untouched)
-        obs = Observation()
-        docs_tok.select(*doc_cols).observe(
-            obs, F.count(F.lit(1)).alias("rows")
-        ).write.mode("overwrite").parquet(f"{pending}/docs")
-        n_new = obs.get["rows"]
-
+        new_turns = staged_turns.join(indexed, "conv_id", "left_anti")
         base = self.spark.read.parquet(self._path("doc_map")).agg(
             F.coalesce(F.max("doc_ord") + 1, F.lit(0)).alias("b")
         ).collect()[0]["b"]
-        assign_doc_ordinals(docs_tok.select("docid", "dl")).withColumn(
-            "doc_ord", F.col("doc_ord") + F.lit(int(base))
-        ).write.mode("overwrite").parquet(f"{pending}/doc_map")
 
-        tf_new = term_frequencies(docs_tok, lang_col=lang)
+        # ---- stage the three appends under pending/ (live table untouched).
+        # _doc_stages unpersists what it cached before returning, so nothing
+        # cached still depends on the live docs listing that the commit
+        # below refreshes
+        pending = self._path(PENDING)
+        self.fs.rmtree(pending)
+        staged: dict = {"stages": {}, "skipped": []}
+        self._doc_stages(new_turns, PENDING + "/", int(base), staged)
+        n_new = staged["stages"][f"{PENDING}/docs"]["rows"]
+        n_tf = staged["stages"][f"{PENDING}/tf"]["rows"]
         g = self.cfg.index.n_shard_groups
-        new_map = self.spark.read.parquet(f"{pending}/doc_map")
-        tf_part = tf_new.join(
-            new_map.select("docid", "doc_ord", "dl"), "docid"
-        ).withColumn(
-            "shard_group", F.pmod(F.xxhash64("term"), F.lit(g)).cast("int")
-        )
-        obs = Observation()
-        tf_part.observe(obs, F.count(F.lit(1)).alias("rows")).write.mode(
-            "overwrite"
-        ).partitionBy("shard_group").parquet(f"{pending}/tf")
-        n_tf = obs.get["rows"]
 
         # ---- write-ahead commit record: file moves + updated manifests +
         # the downstream manifests to invalidate, applied as one recovery-
@@ -567,17 +540,12 @@ class IndexBuilder:
             self.fs, os.path.join(pending, "COMMIT.json"), commit
         )  # commit point
         self._apply_commit(commit)
-        self.fs.rmtree(delta_path)
-        for s in append_stages:
-            report["stages"][s] = self.manifest(s)
 
-        # rebuild the global stages via build()'s stats+postings path
-        # (docs/doc_map/tf are complete, so build() skips them and never
-        # touches the `transcripts` argument)
-        rebuilt = self.build(self.spark.createDataFrame([], "conv_id string"))
-        report["stages"].update(rebuilt["stages"])
-        report["total"] = rebuilt["total"]
-        return report
+        report: dict = {
+            "stages": {s: self.manifest(s) for s in append_stages},
+            "skipped": [],
+        }
+        return self._global_stages(report)
 
     def _apply_commit(self, commit: dict) -> None:
         """Apply (or re-apply during recovery) a staged compaction: move the
@@ -614,7 +582,6 @@ class IndexBuilder:
             self._apply_commit(marker)
         elif self.fs.exists(pending):
             self.fs.rmtree(pending)
-        self.fs.rmtree(self._path("_compact_delta"))
 
     def _rollup(self, report: dict) -> dict:
         # roll-up manifest

@@ -7,6 +7,7 @@ from __future__ import annotations
 
 import math
 import os
+from dataclasses import replace
 
 import pytest
 
@@ -34,14 +35,27 @@ CFG = EngineConfig(
 )
 
 
-def _topk(spark, out, queries_df, k=10):
+def _topk(spark, out, queries_df, k=10, cfg=CFG):
     idx = load_index(spark, out)
-    qt = prepare_query_terms(queries_df, CFG.tokenizer, CFG.bm25)
-    res = wand_topk(qt, idx.postings, idx.doc_map, idx.coll, CFG.bm25, k=k)
+    qt = prepare_query_terms(queries_df, cfg.tokenizer, cfg.bm25)
+    res = wand_topk(qt, idx.postings, idx.doc_map, idx.coll, cfg.bm25, k=k)
     return {
         (r["query_id"], r["rank"]): (r["docid"], round(r["score"], 9))
         for r in res.collect()
     }
+
+
+def _rows(spark, out, table, cols):
+    """Sorted rows of a persisted append-only table, projected on cols (no
+    doc_ord: compaction appends ordinals in arrival order)."""
+    return sorted(
+        tuple(r) for r in spark.read.parquet(f"{out}/{table}").select(*cols)
+        .collect()
+    )
+
+
+DOC_COLS = ["docid", "dl", "n_turns", "first_ts", "last_ts"]
+TF_COLS = ["term", "docid", "tf", "dl"]
 
 
 def test_stream_compact_equals_cold_build(spark, tmp_path_factory):
@@ -115,6 +129,44 @@ def test_stream_compact_equals_cold_build(spark, tmp_path_factory):
     # ordinals stay dense + unique after append
     ords = [r["doc_ord"] for r in idx.doc_map.select("doc_ord").collect()]
     assert sorted(ords) == list(range(90))
+    # the appended tables hold exactly the cold build's rows
+    for table, cols in (("docs", DOC_COLS), ("tf", TF_COLS)):
+        assert _rows(spark, out_inc, table, cols) == _rows(
+            spark, out_cold, table, cols
+        ), table
+
+
+def test_bigram_compact_equals_cold_build(spark, tmp_path_factory):
+    """With bigrams on, build() and compact() take the assembled-document
+    tokenization (bigrams span turn boundaries); build + compact still
+    equals a cold build over the union."""
+    cfg = replace(CFG, tokenizer=replace(CFG.tokenizer, bigrams=True))
+    all_tr = gen_transcripts(40, seed=93)
+    convs = sorted(all_tr["conv_id"].unique())
+    base = all_tr[all_tr["conv_id"].isin(convs[:30])]
+    delta = all_tr[all_tr["conv_id"].isin(convs[30:])]
+    schema = transcripts_schema()
+    out_inc = str(tmp_path_factory.mktemp("idx_bigram_inc"))
+    out_cold = str(tmp_path_factory.mktemp("idx_bigram_cold"))
+
+    b = IndexBuilder(spark, cfg, out_inc)
+    b.build(spark.createDataFrame(base, schema=schema))
+    rep = b.compact(spark.createDataFrame(delta, schema=schema))
+    assert rep["stages"]["docs"]["appended"] == 10
+    IndexBuilder(spark, cfg, out_cold).build(
+        spark.createDataFrame(all_tr, schema=schema)
+    )
+
+    for table, cols in (("docs", DOC_COLS), ("tf", TF_COLS)):
+        assert _rows(spark, out_inc, table, cols) == _rows(
+            spark, out_cold, table, cols
+        ), table
+    assert any("_" in t for t, *_ in _rows(spark, out_inc, "tf", TF_COLS))
+    qdf = spark.createDataFrame(
+        gen_queries(all_tr, 15, seed=94)[["query_id", "query"]]
+    )
+    got = _topk(spark, out_inc, qdf, cfg=cfg)
+    assert got and got == _topk(spark, out_cold, qdf, cfg=cfg)
 
 
 def test_compact_per_language_index(spark, tmp_path_factory):

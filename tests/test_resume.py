@@ -6,8 +6,10 @@ index is content-identical to an uninterrupted build, and metrics
 from __future__ import annotations
 
 import os
+from dataclasses import replace
 
 import pytest
+from pyspark.sql import functions as F
 
 from document_retrieval_spark.config import (
     REFERENCE_PROFILE,
@@ -16,6 +18,7 @@ from document_retrieval_spark.config import (
     IndexConfig,
 )
 from document_retrieval_spark.index import IndexBuilder, load_index
+from document_retrieval_spark.index import build as build_mod
 from document_retrieval_spark.operators.postings import decode_postings_df
 
 
@@ -154,3 +157,24 @@ def test_builder_persists_variant_idf(spark, transcripts_df, tmp_path_factory):
     for r in rows:
         ratio = (n - r["df"] + 0.5) / (r["df"] + 0.5)
         assert abs(r["idf"] - math.log(ratio)) < 1e-9, r["term"]
+
+
+@pytest.mark.parametrize("bigrams", [False, True])
+def test_failed_doc_stage_releases_cache(spark, transcripts_df, cfg, tmp_path,
+                                         monkeypatch, bigrams):
+    """A doc-stage write that raises leaves nothing cached in the session:
+    the frame the docs and tf stages share (the turn-local tf, or the
+    tokenized documents with bigrams) is unpersisted on the failure path."""
+
+    def failing_ordinals(docs, **kwargs):
+        return docs.withColumn(
+            "doc_ord",
+            F.raise_error(F.lit("injected doc_map failure")).cast("long"),
+        )
+
+    spark.catalog.clearCache()
+    monkeypatch.setattr(build_mod, "assign_doc_ordinals", failing_ordinals)
+    cfg_b = replace(cfg, tokenizer=replace(cfg.tokenizer, bigrams=bigrams))
+    with pytest.raises(Exception, match="injected doc_map failure"):
+        IndexBuilder(spark, cfg_b, str(tmp_path)).build(transcripts_df)
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()

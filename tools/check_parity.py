@@ -44,7 +44,12 @@ def main() -> int:
     import __spark_entry__ as entry_mod
     from document_retrieval_spark.session import get_spark
 
-    spark = get_spark("parity", master="local[8]", shuffle_partitions=8)
+    spark = get_spark(
+        "parity", master="local[8]", shuffle_partitions=8,
+        # progress bars end in \r, not \n: keep them off so every PASS/FAIL
+        # line starts at column 0 of the log
+        extra_conf={"spark.ui.showConsoleProgress": "false"},
+    )
     con = duckdb.connect()
     for t in TABLES:
         con.execute(

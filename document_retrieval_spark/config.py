@@ -126,7 +126,10 @@ class IndexConfig:
     index rebuild every stage.
     """
 
-    n_shards: int = 32           # term-shard count for the build shuffle
+    # legacy knob: postings no longer carry a term-shard column, and the
+    # build shuffle is sized from the session's parallelism. Kept for
+    # config compatibility.
+    n_shards: int = 32
     n_shard_groups: int = 8      # checkpoint/resume granularity (FIXTURES.md §5)
     block_size: int = 128        # postings per delta+varbyte block (SURVEY §7 M2)
     # terms whose df exceeds this get salted during the build shuffle by

@@ -28,7 +28,8 @@ O(1/n_shard_groups) of the build, not a full re-scan.
 build() runs the doc stages (docs, doc_map, tf) and then the global stages
 (stats, postings, publish). compact() appends newly staged conversations
 through the same doc-stage code, written to a staging dir and committed into
-the live tables, and then re-runs the global stages.
+the live tables, and then re-runs the global stages; with no new
+conversation it changes nothing.
 """
 
 from __future__ import annotations
@@ -391,15 +392,13 @@ class IndexBuilder:
                 lang_col=lang,
                 avgdl_by_lang=avgdl_by,
             )
-            # metrics observed on the write — no re-read; terms counted
-            # exactly as sum(seg_id == 0) (one zeroth segment per term, so no
-            # distinct aggregate, which observe() disallows)
+            # metrics observed on the write — no re-read; the vocabulary
+            # size is the stats manifest's `terms`
             obs = Observation()
             observed = postings.observe(
                 obs,
                 F.count(F.lit(1)).alias("segments"),
                 F.sum("n_postings").alias("postings"),
-                F.sum(F.when(F.col("seg_id") == 0, 1).otherwise(0)).alias("terms"),
                 F.max("df").alias("max_df"),
                 F.expr("percentile_approx(df, 0.5)").alias("median_df"),
             )
@@ -415,7 +414,6 @@ class IndexBuilder:
                 {
                     "postings_written": int(agg["postings"] or 0),
                     "segments": int(agg["segments"]),
-                    "terms": int(agg["terms"] or 0),
                     "max_df": int(agg["max_df"] or 0),
                     "skew_ratio": round(skew, 2),
                 },
@@ -459,6 +457,9 @@ class IndexBuilder:
         rebuild; tests/test_compaction.py asserts result equality on a
         tie-free corpus).
 
+        With nothing new to append, compact() writes nothing and publishes
+        no version; the report's stages record ``appended: 0``.
+
         Crash consistency: the three appends are staged under
         `_compact_pending/` and applied only after an atomically-renamed
         COMMIT.json lands (write-ahead commit). A crash before the marker
@@ -497,6 +498,19 @@ class IndexBuilder:
         staged: dict = {"stages": {}, "skipped": []}
         self._doc_stages(new_turns, PENDING + "/", int(base), staged)
         n_new = staged["stages"][f"{PENDING}/docs"]["rows"]
+        if n_new == 0:
+            # nothing to append: no commit, no rebuild, no version flip —
+            # unless recovery above left the published version stale, in
+            # which case the rebuild it owes still runs
+            self.fs.rmtree(pending)
+            report = {
+                "stages": {s: {**self.manifest(s), "appended": 0}
+                           for s in append_stages},
+                "skipped": list(append_stages),
+            }
+            if not self._pointer().get("stale"):
+                return report
+            return self._global_stages(report)
         n_tf = staged["stages"][f"{PENDING}/tf"]["rows"]
         g = self.cfg.index.n_shard_groups
 

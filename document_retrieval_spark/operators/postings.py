@@ -10,8 +10,8 @@ term-sharded shuffle):
     -> ONE shuffle of flat packed rows, keyed (term[, lang], salt) — or
        (term_id, salt) in id mode — and sorted by doc_ord per partition
     -> segment + encode: mapInArrow, delta+varbyte blocks with block-max
-    -> (id mode) restore `term` by a dictionary join over the encoded rows
-    -> per-term seg_id / n_segs / shard over the encoded rows
+    -> df/idf (and, in id mode, `term`) by a broadcast join over the
+       encoded rows
 
 Skew handling is explicit (north_rule): range salting cuts a hot term's
 postings into doc-contiguous, disjoint groups of at most seg_postings, so
@@ -125,7 +125,7 @@ def _encode_partitions_arrow(block_size: int, seg_postings: int,
 
     The block-bound quotient is computed HERE (numpy, from tf/dl plus the
     broadcast-scalar avgdl) rather than shuffled: per-term constants (df,
-    idf, shard) and per-posting derivations have no business riding an
+    idf) and per-posting derivations have no business riding an
     O(postings) shuffle when they can be recomputed or re-joined over the
     ~1000x smaller encoded-segment rows."""
     import pyarrow as pa
@@ -230,11 +230,11 @@ def _encode_partitions_arrow(block_size: int, seg_postings: int,
             np.append(blk_cum, blk_of_seg.size).astype(np.int32), pa.int32()
         )
         blocks_list = pa.ListArray.from_arrays(list_off, blocks_struct)
-        seg_idx = pa.array(seg_starts, pa.int64())
-        cols = [key_arr.take(seg_idx)]
+        seg_rows = pa.array(seg_starts, pa.int64())
+        cols = [key_arr.take(seg_rows)]
         names = [key_col]
         if lang_col:
-            cols.append(lang_arr.take(seg_idx))
+            cols.append(lang_arr.take(seg_rows))
             names.append(lang_col)
         cols += [
             pa.array(seg_lens.astype(np.int32), pa.int32()),
@@ -292,11 +292,10 @@ def build_postings(
     seg_postings: int = 128 * 1024,
     lang_col: str | None = None,
     avgdl_by_lang: dict | float | None = None,
-    stats_broadcast: bool = True,
 ) -> DataFrame:
     """-> encoded postings table:
-    (term, shard, seg_id, n_segs, df, idf, n_postings, first_ord, last_ord,
-     max_q, blocks array<BLOCK>).
+    (term[, lang], df, idf, n_postings, first_ord, last_ord, max_q,
+     blocks array<BLOCK>), one row per segment.
 
     ONE raw-posting shuffle, keyed (term, salt) with explicit hot-term
     salting by DOC-ORDINAL RANGE: salt = doc_ord // seg_postings for terms
@@ -306,16 +305,14 @@ def build_postings(
     merge shuffle and no flatten+re-sort of raw postings (the previous
     two-stage design moved every posting twice and re-sorted hot terms in a
     single reducer). A hot group's size is bounded by the range width by
-    construction. Per-term segment numbering happens AFTER encode, over the
-    ~3 B/posting compressed rows (cheap window by term).
+    construction.
+
+    The (term, salt) repartition is the only exchange on the posting path:
+    both stats joins are broadcast, and segments are not numbered (a
+    term's segments are doc-disjoint and the WAND cursor orders them by
+    `first_ord`).
     """
     keys = ["term"] + ([lang_col] if lang_col else [])
-    # stats_broadcast=False for extreme vocabularies (~10^8+ terms at the
-    # 10^12-turn target, where a stats broadcast no longer fits an
-    # executor): both stats joins fall back to plain joins and AQE picks a
-    # shuffle strategy; the hot join then shuffles tf on term — acceptable
-    # because that is the very shuffle key the assembly repartition uses.
-    _maybe_b = F.broadcast if stats_broadcast else (lambda df: df)
     # INT TERM IDS through the posting shuffle WHEN THE CALLER PROVIDES
     # THEM (bench's SPARK_GRAFT_TERM_DICT arm; IndexBuilder keys on the
     # term string): the raw-posting exchange (and its sort)
@@ -328,17 +325,12 @@ def build_postings(
     # save (BENCH.md r4 A/B).
     have_ids = "term_id" in tf_ord.columns and "term_id" in term_stats.columns
     key_col = "term_id" if have_ids else "term"
-    if have_ids:
-        stats_id = term_stats
-        hot = stats_id.select(
-            "term_id", (F.col("df") > idx_cfg.salt_df_threshold).alias("is_hot")
-        )
-        salted_src = tf_ord.join(_maybe_b(hot), "term_id")
-    else:
-        hot = term_stats.select(
-            *keys, (F.col("df") > idx_cfg.salt_df_threshold).alias("is_hot")
-        )
-        salted_src = tf_ord.join(_maybe_b(hot), keys)
+    id_col = [key_col] if have_ids else []
+    join_key = id_col or keys
+    hot = term_stats.select(
+        *join_key, (F.col("df") > idx_cfg.salt_df_threshold).alias("is_hot")
+    )
+    salted_src = tf_ord.join(F.broadcast(hot), join_key)
     # avgdl reaches the encoder as a broadcast scalar per language (one tiny
     # collect), NOT as an O(postings) shuffle column
     if avgdl_by_lang is None:
@@ -368,7 +360,7 @@ def build_postings(
     # this path moves the same data as plain columnar batches.
     # The shuffle carries ONLY (term[, lang], salt, doc_ord, tf, dl): the
     # per-posting quotient is derived in the encoder, and per-TERM constants
-    # (df, idf, shard) re-attach over the encoded-segment rows below —
+    # (df, idf) re-attach over the encoded-segment rows below —
     # dropping ~28 uncompressible bytes from every raw posting row.
     lang_flat = [lang_col] if lang_col else []
     # PACK the per-posting fields into two longs for the one big shuffle:
@@ -423,40 +415,17 @@ def build_postings(
                                  bm25, avgdl_by_lang, key_col=key_col),
         schema=_segment_schema(lang_col, key_col),
     )
-    # dense per-term segment ids over the compressed rows (metadata only —
-    # the WAND cursor orders segments by first_ord, not seg_id); df/idf
-    # re-join and shard recomputes here, over ~#terms segment rows instead
-    # of ~#postings raw rows
-    from pyspark.sql import Window
-
-    # restore the string boundary (id mode: segments (term_id) |><| the
-    # dictionary over vocab-sized rows) / attach df+idf (string mode);
-    # seg_id / n_segs window partitions on the shuffle key either way
-    if have_ids:
-        if lang_col:
-            seg = seg.drop(lang_col)  # restored (with term) by the dict join
-        seg = seg.join(
-            _maybe_b(stats_id.select(*keys, "term_id", "df", "idf")), "term_id"
-        )
-    else:
-        seg = seg.join(_maybe_b(term_stats.select(*keys, "df", "idf")), keys)
-    # seg_id / n_segs number segments within one logical posting list —
-    # (term_id) in id mode, (term, lang) in string mode with languages
-    w = Window.partitionBy(*group_keys).orderBy("first_ord")
-    return (
-        seg
-        .withColumn(
-            "shard", F.pmod(F.xxhash64("term"), F.lit(idx_cfg.n_shards)).cast("int")
-        )
-        .withColumn("seg_id", (F.row_number().over(w) - 1).cast("int"))
-        .withColumn(
-            "n_segs",
-            F.count("*").over(Window.partitionBy(*group_keys)).cast("int"),
-        )
-        .select(
-            *keys, "shard", "seg_id", "n_segs", "df", "idf",
-            "n_postings", "first_ord", "last_ord", "max_q", "blocks",
-        )
+    # df/idf re-attach over the encoded segment rows (~#terms rows instead
+    # of ~#postings); in id mode the same dictionary join restores the
+    # term string (and lang, dropped here to come back with it)
+    if have_ids and lang_col:
+        seg = seg.drop(lang_col)
+    seg = seg.join(
+        F.broadcast(term_stats.select(*keys, *id_col, "df", "idf")), join_key
+    )
+    return seg.select(
+        *keys, "df", "idf", "n_postings", "first_ord", "last_ord", "max_q",
+        "blocks",
     )
 
 

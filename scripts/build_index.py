@@ -6,7 +6,7 @@ spark-submit --py-files").
     spark-submit --py-files dist/document_retrieval_spark.zip \
         scripts/build_index.py \
         --transcripts /path/to/transcripts.parquet \
-        --out /path/to/index [--synthesize 2000] [--shards 32] [--groups 8]
+        --out /path/to/index [--synthesize 2000] [--groups 8]
 
 Reads the transcripts table (Iceberg when the catalog is configured — see
 document_retrieval_spark.sources — else parquet), runs the resumable build,
@@ -34,7 +34,6 @@ def main(argv=None) -> int:
     ap.add_argument("--synthesize", type=int, default=0,
                     help="generate N synthetic conversations instead of reading "
                          "--transcripts (fixture generator, seed 42)")
-    ap.add_argument("--shards", type=int, default=32)
     ap.add_argument("--groups", type=int, default=8)
     ap.add_argument("--salt-df-threshold", type=int, default=10_000)
     ap.add_argument("--lang-col", default=None,
@@ -90,7 +89,6 @@ def main(argv=None) -> int:
         tokenizer=REFERENCE_PROFILE,
         bm25=BM25Config(**variant_cfg),
         index=IndexConfig(
-            n_shards=args.shards,
             n_shard_groups=args.groups,
             salt_df_threshold=args.salt_df_threshold,
             lang_col=args.lang_col,

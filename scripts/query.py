@@ -208,22 +208,9 @@ def main(argv=None) -> int:
     topk.write.mode("overwrite").parquet(args.out)
 
     if args.submission:
-        # (id, docids) with docids a stringified ranked list —
-        # `final_implementation.py:527-530`
-        sub = (
-            spark.read.parquet(args.out)
-            .groupBy("query_id")
-            .agg(
-                F.to_json(
-                    F.transform(
-                        F.array_sort(F.collect_list(F.struct("rank", "docid"))),
-                        lambda s: s["docid"],
-                    )
-                ).alias("docids")
-            )
-            .withColumnRenamed("query_id", "id")
-        )
-        sub.coalesce(1).write.mode("overwrite").csv(args.submission, header=True)
+        from document_retrieval_spark.sources.tables import write_submission_csv
+
+        write_submission_csv(spark.read.parquet(args.out), args.submission)
     spark.stop()
     return 0
 

@@ -26,7 +26,7 @@ def _run(args, **kw):
 def built_index(tmp_path_factory):
     out = str(tmp_path_factory.mktemp("cli") / "idx")
     r = _run(["scripts/build_index.py", "--synthesize", "400", "--out", out,
-              "--shards", "8", "--groups", "2", "--master", "local[4]"])
+              "--groups", "2", "--master", "local[4]"])
     assert r.returncode == 0, r.stderr[-2000:]
     report = json.loads(r.stdout[r.stdout.index("{"):])
     assert report["total"]["postings_written"] > 0
@@ -47,6 +47,32 @@ def test_build_then_query_auto(built_index, tmp_path):
     res = pd.read_parquet(outp)
     assert set(res.columns) == {"query_id", "rank", "docid", "score"}
     assert len(res) > 0 and res["rank"].min() == 1
+
+
+def test_query_submission_csv(built_index, tmp_path):
+    """--submission writes one (id, docids) CSV row per query, docids the
+    JSON list of the result's docids in rank order."""
+    import glob
+
+    qp = str(tmp_path / "queries.parquet")
+    pd.DataFrame(
+        {"query_id": ["q1", "q2", "q3"],
+         "query": ["spark000 index001", "query002 merge005", "zzzoov"]}
+    ).to_parquet(qp, index=False)
+    outp = str(tmp_path / "res.parquet")
+    subp = str(tmp_path / "submission")
+    r = _run(["scripts/query.py", "--index", built_index, "--queries", qp,
+              "--out", outp, "--k", "5", "--submission", subp,
+              "--master", "local[4]"])
+    assert r.returncode == 0, r.stderr[-2000:]
+    res = pd.read_parquet(outp).sort_values(["query_id", "rank"])
+    want = {q: list(g["docid"]) for q, g in res.groupby("query_id")}
+    assert set(want) == {"q1", "q2"}
+    (csv,) = glob.glob(os.path.join(subp, "part-*.csv"))
+    sub = pd.read_csv(csv, escapechar="\\")  # Spark escapes quotes with a backslash
+    assert list(sub.columns) == ["id", "docids"]
+    got = {row.id: json.loads(row.docids) for row in sub.itertuples()}
+    assert got == want
 
 
 def test_query_explicit_docpart(built_index, tmp_path):
@@ -82,7 +108,7 @@ def test_query_phrase_end_to_end(tmp_path):
                   allow_truncated_timestamps=True)
     idx = str(tmp_path / "idx")
     r = _run(["scripts/build_index.py", "--transcripts", trp, "--out", idx,
-              "--shards", "4", "--groups", "1", "--master", "local[4]"])
+              "--groups", "1", "--master", "local[4]"])
     assert r.returncode == 0, r.stderr[-2000:]
 
     by = tr.sort_values(["conv_id", "turn_idx"], kind="mergesort")

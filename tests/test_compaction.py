@@ -331,3 +331,57 @@ def test_reader_survives_compaction_swap(spark, tmp_path_factory):
     assert not os.path.exists(os.path.join(out, "postings", "v=1"))
     assert os.path.isdir(os.path.join(out, "postings", "v=2"))
     assert not os.path.exists(os.path.join(out, "stats", "v=1"))
+
+
+def test_compact_with_nothing_new_is_noop(spark, tmp_path_factory):
+    """Compacting the same delta twice: the second call appends nothing,
+    so it writes nothing, publishes no version and reclaims none — every
+    file (CURRENT.json, manifests, tables) keeps its bytes, and a reader
+    still holding the previous version keeps querying it."""
+    import hashlib
+
+    all_tr = gen_transcripts(40, seed=191)
+    convs = sorted(all_tr["conv_id"].unique())
+    base = all_tr[all_tr["conv_id"].isin(convs[:30])]
+    delta = spark.createDataFrame(
+        all_tr[all_tr["conv_id"].isin(convs[30:])], schema=transcripts_schema()
+    )
+    qdf = spark.createDataFrame(
+        gen_queries(base, 10, seed=192)[["query_id", "query"]]
+    )
+    qt = prepare_query_terms(qdf, CFG.tokenizer, CFG.bm25)
+    out = str(tmp_path_factory.mktemp("idx_noop"))
+    b = IndexBuilder(spark, CFG, out)
+    b.build(spark.createDataFrame(base, schema=transcripts_schema()))
+    reader = load_index(spark, out)  # holds version 1
+
+    def run(idx):
+        return sorted(
+            tuple(r) for r in wand_topk(
+                qt, idx.postings, idx.doc_map, idx.coll, CFG.bm25, k=10
+            ).collect()
+        )
+
+    before = run(reader)
+    assert before
+    assert b.compact(delta)["stages"]["docs"]["appended"] == 10
+
+    def snapshot():
+        files = {}
+        for root, _, names in os.walk(out):
+            for n in names:
+                p = os.path.join(root, n)
+                with open(p, "rb") as f:
+                    files[os.path.relpath(p, out)] = hashlib.sha256(
+                        f.read()).hexdigest()
+        return files
+
+    snap = snapshot()
+    report = b.compact(delta)
+    assert {s: report["stages"][s]["appended"]
+            for s in ("docs", "doc_map", "tf")} == {
+        "docs": 0, "doc_map": 0, "tf": 0}
+    assert snapshot() == snap
+    assert not os.path.exists(os.path.join(out, "_compact_pending"))
+    assert run(reader) == before
+    assert run(load_index(spark, out))

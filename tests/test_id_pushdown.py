@@ -84,9 +84,12 @@ def test_id_pushdown_matches_string_path(spark, index, tdict, queries_df):
                          k=10, max_pushdown_terms=2, **kw)
         assert "LeftSemi" in semi._jdf.queryExecution().executedPlan().toString()
         assert _rows(semi) == want
-    # an index written before the probe lost its id arm still carries a
-    # term_id column; the probe selects by name and ignores it
-    legacy = index.postings.withColumn("term_id", F.lit(-1).cast("long"))
+    # an index written by an older build still carries term_id, shard,
+    # seg_id and n_segs columns; the probe selects by name and ignores them
+    legacy = index.postings.select(
+        "*", F.lit(-1).cast("long").alias("term_id"),
+        *(F.lit(0).alias(c) for c in ("shard", "seg_id", "n_segs")),
+    )
     assert _rows(wand_topk(
         qt, legacy, index.doc_map, index.coll, BM25, k=10, term_dict=tdict,
     )) == want

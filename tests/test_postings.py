@@ -124,19 +124,28 @@ def test_posting_lists_strictly_increasing_and_blockmax(index_tables, bm25_cfg):
 def test_df_consistency_and_segments(index_tables):
     import pyspark.sql.functions as F
 
-    _, tf, stats, postings, _ = index_tables
+    from document_retrieval_spark.operators.postings import build_postings
+
+    docs_ord, tf, stats, postings, cfg = index_tables
     per_term = postings.groupBy("term").agg(
         F.sum("n_postings").alias("n"),
         F.first("df").alias("df"),
-        F.countDistinct("seg_id").alias("nseg"),
-        F.first("n_segs").alias("n_segs"),
     )
-    bad = per_term.filter(
-        (F.col("n") != F.col("df")) | (F.col("nseg") != F.col("n_segs"))
-    ).count()
-    assert bad == 0
+    assert per_term.filter(F.col("n") != F.col("df")).count() == 0
     # every term present
     assert per_term.count() == stats.count() == tf.select("term").distinct().count()
+    # the invariant the WAND cursor relies on: a term's segments, sorted by
+    # first_ord, are doc-disjoint (seg_postings=8 splits every hot term)
+    small = build_postings(tf.join(docs_ord, "docid"), stats, cfg,
+                           BM25Config(), seg_postings=8)
+    segs: dict[str, list[tuple[int, int]]] = {}
+    for r in small.select("term", "first_ord", "last_ord").collect():
+        segs.setdefault(r["term"], []).append((r["first_ord"], r["last_ord"]))
+    assert any(len(v) > 1 for v in segs.values())
+    for term, spans in segs.items():
+        spans.sort()
+        for (_, last), (nxt, _) in zip(spans, spans[1:]):
+            assert last < nxt, (term, spans)
 
 
 def test_salting_splits_hot_terms(spark, index_tables):
@@ -154,52 +163,34 @@ def test_salting_splits_hot_terms(spark, index_tables):
     assert total == hottest["df"]
 
 
-def test_shuffle_stats_join_equals_broadcast(spark, index_tables):
-    """stats_broadcast=False (the extreme-vocab path: both stats joins
-    downgrade to shuffle joins) must produce an identical index."""
-    from document_retrieval_spark.operators.postings import (
-        build_postings,
-        decode_postings_df,
-    )
-
-    docs_ord, tf, stats, postings, cfg = index_tables
-    # disable size-based broadcast conversion so the un-hinted joins really
-    # execute as shuffle joins (on fixture-sized stats AQE would otherwise
-    # silently broadcast them and this test would exercise nothing new)
-    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        # seg_postings=63 (not the fixture's 64): an identical closure would
-        # cache-match the fixture's CACHED postings plan (CacheManager
-        # canonicalization erases broadcast hints) and serve the broadcast
-        # plan from cache; decoded content is segmentation-invariant
-        alt = build_postings(tf.join(docs_ord, "docid"), stats, cfg,
-                             BM25Config(), seg_postings=63,
-                             stats_broadcast=False)
-        want = {(r["term"], r["doc_ord"]): (r["tf"], r["dl"])
-                for r in decode_postings_df(postings).collect()}
-        got = {(r["term"], r["doc_ord"]): (r["tf"], r["dl"])
-               for r in decode_postings_df(alt).collect()}
-        assert got == want and len(got) > 0
-        plan = alt._jdf.queryExecution().executedPlan().toString()
-        assert "SortMergeJoin" in plan or "ShuffledHashJoin" in plan, plan
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-
-
 def test_string_mode_multilang_segments_not_interleaved(spark):
     """r4 ADVICE (postings.py:303): in STRING mode with a lang column the
     same term string can occur in several languages; lang must be part of
     the shuffle/sort key or same-term rows from different languages
     interleave by doc_ord and the encoder opens a new segment per
     alternation. With all postings far under seg_postings, each
-    (term, lang) posting list must encode as exactly ONE segment with
-    n_segs == 1 counted per (term, lang), not across languages."""
-    import pandas as pd
-
+    (term, lang) posting list must encode as exactly ONE segment."""
     from document_retrieval_spark.operators.postings import build_postings
 
-    # 'shared' alternates en/fr by doc_ord — the worst interleave case
+    tf_ord, stats = _multilang_frames(spark)
+    cfg = IndexConfig(n_shards=4, salt_df_threshold=100, block_size=16,
+                      lang_col="lang")
+    seg = build_postings(
+        tf_ord, stats, cfg, BM25Config(), seg_postings=1024,
+        lang_col="lang", avgdl_by_lang={"en": 5.0, "fr": 5.0},
+    ).collect()
+    assert len(seg) == 4, [
+        (r["term"], r["lang"], r["first_ord"]) for r in seg
+    ]  # one segment per (term, lang) — no interleave splits
+    for r in seg:
+        assert r["n_postings"] == 4
+
+
+def _multilang_frames(spark):
+    """(tf_ord, term_stats) of 8 docs alternating en/fr by doc_ord; the term
+    'shared' occurs in both languages — the worst interleave case."""
+    import pandas as pd
+
     rows = []
     for doc_ord in range(8):
         lang = "en" if doc_ord % 2 == 0 else "fr"
@@ -219,19 +210,38 @@ def test_string_mode_multilang_segments_not_interleaved(spark):
             columns=["term", "lang", "df", "idf", "n_docs", "avgdl"],
         )
     )
-    cfg = IndexConfig(n_shards=4, salt_df_threshold=100, block_size=16,
-                      lang_col="lang")
-    seg = build_postings(
-        tf_ord, stats, cfg, BM25Config(), seg_postings=1024,
-        lang_col="lang", avgdl_by_lang={"en": 5.0, "fr": 5.0},
-    ).collect()
-    by_key = {(r["term"], r["lang"]): r for r in seg}
-    assert len(seg) == 4, [
-        (r["term"], r["lang"], r["seg_id"]) for r in seg
-    ]  # one segment per (term, lang) — no interleave splits
-    for (term, lang), r in by_key.items():
-        assert r["n_segs"] == 1 and r["seg_id"] == 0, (term, lang, r)
-        assert r["n_postings"] == 4
+    return tf_ord, stats
+
+
+@pytest.mark.parametrize("lang_col", [None, "lang"])
+def test_postings_columns_and_single_exchange(spark, lang_col):
+    """Postings carry only what a reader reads, and the build plan has one
+    shuffle — the (term[, lang], salt) repartition under the encoder —
+    with no Window and no exchange above MapInArrow."""
+    from document_retrieval_spark.operators.postings import build_postings
+
+    tf_ord, stats = _multilang_frames(spark)
+    if lang_col is None:
+        tf_ord, stats = (t.filter("lang = 'en'").drop("lang")
+                         for t in (tf_ord, stats))
+    cfg = IndexConfig(salt_df_threshold=2, block_size=16)
+    post = build_postings(tf_ord, stats, cfg, BM25Config(), seg_postings=4,
+                          lang_col=lang_col)
+    keys = ["term"] + ([lang_col] if lang_col else [])
+    assert post.columns == keys + [
+        "df", "idf", "n_postings", "first_ord", "last_ord", "max_q", "blocks",
+    ]
+    plan = post._sc._jvm.PythonSQLUtils.explainString(
+        post._jdf.queryExecution(), "formatted"
+    )
+    tree = plan.split("\n\n")[0].splitlines()
+    assert "Window" not in plan, plan
+    enc = next(i for i, line in enumerate(tree) if "MapInArrow" in line)
+    assert not any("Exchange" in line for line in tree[:enc]), plan
+    shuffles = [line for line in tree if "Exchange" in line
+                and "BroadcastExchange" not in line]
+    assert len(shuffles) == 1, plan
+    assert post.count() > 0
 
 
 def test_single_partition_ordinals_lazy_and_dense(spark):

@@ -7,7 +7,9 @@ FROZEN for measurement — this file is where extra benchmarks live.
     python bench_extra.py [--sections build,wand,exh,cosine,dedup,ann,tq]
 
 Prints one JSON line with per-phase seconds and writes the event log under
-/tmp/bench_r6_eventlog (parse with tools/parse_eventlog.py).
+/tmp/bench_r6_eventlog. `python3 perfbench/eventlog.py /tmp/bench_r6_eventlog`
+sums its task metrics per job group; the sections here set job
+descriptions, not groups, so all of their tasks land in `<none>`.
 """
 
 from __future__ import annotations

@@ -415,12 +415,13 @@ def wand_topk(
         )
 
     # One scoring task per core by default. Each Python task costs about
-    # 0.3 s of CPU whatever its size (4-vCPU box, CPython 3.11, Spark 4.1;
-    # BENCH.md "Python task cost"): the worker calls
-    # importlib.invalidate_caches() per task (worker_util.setup_spark_files),
-    # which makes each of its ~16 zip importers re-read the directory of
-    # pyspark.zip (~150 ms). At evaluation batch sizes that set-up outweighs
-    # the kernel work a finer split would spread out. A number-pinned
+    # 0.13 s of CPU (JVM plus worker) whatever its size with the package
+    # worker daemon (session.py), and about 0.4 s under Spark's stock
+    # daemon, whose workers import pyspark from its zip and re-read the
+    # zip's directory in importlib.invalidate_caches() on every task
+    # (4-vCPU box, CPython 3.11, Spark 4.1; BENCH.md "Python worker
+    # daemon"). At evaluation batch sizes that set-up outweighs the kernel
+    # work a finer split would spread out. A number-pinned
     # HashPartitioning on query_id satisfies the groupBy's distribution, so
     # this stays ONE shuffle; AQE does not coalesce it, and empty partitions
     # start no Python worker, so one query still costs one Python task.

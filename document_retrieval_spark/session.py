@@ -4,6 +4,18 @@ Local-mode settings follow the sandbox (local[32], single JVM); everything
 data-layout related (shuffle partitions, AQE, Arrow) is what we would set on a
 real multi-executor cluster too — partitioning decisions in the operators are
 made for the 10^12-turn target and merely validated at fixture scale.
+
+On ``local[...]`` masters the Python workers are forked from the package's
+own daemon (``_worker_daemon``, set as ``spark.python.daemon.module``). It
+drops Spark's pyspark/py4j zips and jars from ``sys.path`` when the
+interpreter has unpacked copies of the same version, so the per-task
+``importlib.invalidate_caches()`` of Spark's worker has no archive
+directory to re-read, and it imports pandas and pyarrow once before it
+forks. The daemon module must be importable where the workers start, and
+only a local JVM that ``get_spark`` itself launches is known to inherit
+the PYTHONPATH it exports. Other masters, and drivers run by
+``spark-submit`` (whose JVM starts before the driver), keep the stock
+daemon; ``extra_conf`` overrides either choice.
 """
 
 from __future__ import annotations
@@ -192,6 +204,14 @@ def get_spark(
         .config("spark.sql.parquet.compression.codec", "zstd")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "256")
     )
+    # the PYTHONPATH export above reaches the workers only through a local
+    # JVM that this process starts; spark-submit starts the JVM first and
+    # hands the driver its port in PYSPARK_GATEWAY_PORT
+    if (master == "local" or master.startswith("local[")) and (
+        "PYSPARK_GATEWAY_PORT" not in os.environ
+    ):
+        b = b.config("spark.python.daemon.module",
+                     "document_retrieval_spark._worker_daemon")
     for k, v in (extra_conf or {}).items():
         b = b.config(k, v)
     spark = b.getOrCreate()

@@ -69,7 +69,8 @@ def write_table(
 
 def write_submission_csv(topk: DataFrame, path: str) -> None:
     """Reference submission sink (S3): (id, docids) rows, docids = stringified
-    ranked list (`bm25_ranking.ipynb cell 7:1-5`)."""
+    ranked list (`bm25_ranking.ipynb cell 7:1-5`). Quotes inside a field are
+    doubled (RFC 4180), so CSV readers parse it with default settings."""
     sub = (
         topk.groupBy("query_id")
         .agg(
@@ -82,4 +83,6 @@ def write_submission_csv(topk: DataFrame, path: str) -> None:
         )
         .withColumnRenamed("query_id", "id")
     )
-    sub.coalesce(1).write.mode("overwrite").csv(path, header=True)
+    sub.coalesce(1).write.mode("overwrite").option("escape", '"').csv(
+        path, header=True
+    )

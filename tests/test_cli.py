@@ -69,7 +69,7 @@ def test_query_submission_csv(built_index, tmp_path):
     want = {q: list(g["docid"]) for q, g in res.groupby("query_id")}
     assert set(want) == {"q1", "q2"}
     (csv,) = glob.glob(os.path.join(subp, "part-*.csv"))
-    sub = pd.read_csv(csv, escapechar="\\")  # Spark escapes quotes with a backslash
+    sub = pd.read_csv(csv)
     assert list(sub.columns) == ["id", "docids"]
     got = {row.id: json.loads(row.docids) for row in sub.itertuples()}
     assert got == want

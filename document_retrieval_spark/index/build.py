@@ -19,7 +19,11 @@ Stage DAG (each independently resumable):
   postings/group=G   encoded posting segments, one job per shard group G
                      (partition-pruned read of tf) — the per-partition
                      checkpoint unit; FAULT_AFTER_SHARD injects a crash after
-                     group N for the resume test (FIXTURES.md §5)
+                     group N for the resume test (FIXTURES.md §5). The write
+                     rebalances, so AQE sizes its files: a small group is
+                     one file, and a term probe opens one file, not one per
+                     encoder partition; each file is sorted by
+                     ([lang,] term, first_ord)
 
 Why shard groups: re-running one failed group re-reads ONLY tf partitions with
 that shard_group (parquet partition pruning), so recovery cost is
@@ -402,7 +406,27 @@ class IndexBuilder:
                 F.max("df").alias("max_df"),
                 F.expr("percentile_approx(df, 0.5)").alias("median_df"),
             )
-            w = observed.write.mode("overwrite")
+            # The encoder's output keeps its (term, salt) repartition's
+            # number of partitions, which AQE never coalesces, so without
+            # the rebalance every group would be written as one file per
+            # encoder task however small it is, and every term probe would
+            # open all of them. The rebalance costs one more shuffle of the
+            # encoded segments (about the index size); AQE then coalesces
+            # small partitions and splits skewed ones to its advisory size.
+            # It keys on the language when there is one (a term key would
+            # put a file of every language in every task), else on the
+            # term, so a term's segments share one hash partition's files.
+            # The rebalance scatters the encoder's term order, so each
+            # partition is sorted again: a file's row groups and pages stay
+            # term-clustered, and a probe's term IN-filter skips the rest
+            # by their min/max.
+            rebalance_key = F.col(lang) if lang else F.col("term")
+            w = (
+                observed.hint("rebalance", rebalance_key)
+                .sortWithinPartitions(*([lang] if lang else []), "term",
+                                      "first_ord")
+                .write.mode("overwrite")
+            )
             if lang:
                 w = w.partitionBy(lang)
             w.parquet(self._path(stage))

@@ -40,9 +40,19 @@ def prepare_query_terms(
     lang_col: str | None = None,
 ) -> DataFrame:
     """queries(query_id, query[, lang]) -> (query_id[, lang], term), with
-    distinct terms per query when cfg says so (set(query), `cell 3:29`)."""
+    distinct terms per query when cfg says so (set(query), `cell 3:29`).
+
+    This is the one place where the query side becomes ONE partition:
+    every scorer broadcasts it, so spreading it buys nothing. Folding it
+    before the explode lets this dedup, and the WAND probe's, run inside
+    that partition with no exchange, and a query frame born from
+    createDataFrame (defaultParallelism slices) starts one task, not one
+    per core. The fold is narrow, so everything upstream of `queries`
+    and the tokenizer (a pandas UDF under stemming or lemmatizing
+    profiles) run in that one task too: it is meant for query batches of
+    broadcast size, not for tokenizing a large table."""
     keys = ["query_id"] + ([lang_col] if lang_col else [])
-    exploded = queries.select(
+    exploded = queries.coalesce(1).select(
         *keys, F.explode(tokenize(F.col(query_col), cfg)).alias("term")
     )
     if bm25.unique_query_terms:

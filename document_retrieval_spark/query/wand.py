@@ -510,17 +510,10 @@ def _touched_segments(
     # (query_id, term) rows would duplicate a term's segments inside one
     # cursor and break the sorted-cursor invariant (doc ordinals must be
     # strictly increasing within a cursor).
-    if terms is not None and len(terms) <= 64:
-        # small batch (driver knows the term list — typically one query):
-        # a query DF born from createDataFrame is a parallelize RDD with
-        # defaultParallelism slices, so every evaluation launches that many
-        # Python tasks for a handful of rows (~190 ms of pure task launch
-        # per latency-path call, measured r6); fold it to one task first.
-        # This narrows the QUERY side only: the dropDuplicates exchange
-        # below follows it and the result is broadcast, so a large batch
-        # over a small vocabulary still scores in wand_topk's own
-        # query_id partitions (tests/test_wand.py).
-        query_terms = query_terms.coalesce(1)
+    # A frame from prepare_query_terms is one partition (see there), so
+    # this dedup runs inside it with no exchange; a caller's own
+    # multi-partition frame is deduplicated through one, which is correct
+    # and only slower.
     query_terms = query_terms.dropDuplicates(["query_id", *join_keys])
     # Explicit IN-filter on the touched terms BEFORE the join: against a
     # persisted index this becomes a parquet PushedFilter (only touched

@@ -171,6 +171,24 @@ def _warmup_session(spark: SparkSession) -> None:
             shutil.rmtree(wdir, ignore_errors=True)
 
 
+# cgroup v2 memory limit of this process's cgroup: a number of bytes, or
+# "max" when unlimited (a container sees the host's RAM in sysconf)
+_CGROUP_MEMORY_MAX = "/sys/fs/cgroup/memory.max"
+
+
+def _default_driver_memory() -> str:
+    """The driver heap when SPARK_DRIVER_MEMORY is unset: 24g, or half the
+    memory this process may use where that is less. That memory is the
+    machine's physical memory, or the cgroup v2 limit where one is set."""
+    mem = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    try:
+        with open(_CGROUP_MEMORY_MAX) as f:
+            mem = min(mem, int(f.read()))
+    except (OSError, ValueError):  # no cgroup v2 file, or "max"
+        pass
+    return f"{min(24 * 1024, mem // 2**21)}m"
+
+
 def get_spark(
     app_name: str = "document_retrieval_spark",
     master: str | None = None,
@@ -199,7 +217,8 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "24g"))
+        .config("spark.driver.memory",
+                os.environ.get("SPARK_DRIVER_MEMORY") or _default_driver_memory())
         .config("spark.ui.enabled", "false")
         .config("spark.sql.parquet.compression.codec", "zstd")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "256")

@@ -190,6 +190,7 @@ def test_compact_per_language_index(spark, tmp_path_factory):
     b.build(spark.createDataFrame(base))
     rep = b.compact(spark.createDataFrame(delta))
     assert rep["stages"]["docs"]["appended"] == 20
+    _assert_postings_files(out_inc, cfg)
     IndexBuilder(spark, cfg, out_cold).build(spark.createDataFrame(all_tr))
 
     qdf = spark.createDataFrame(queries[["query_id", "query", "lang"]])
@@ -385,3 +386,64 @@ def test_compact_with_nothing_new_is_noop(spark, tmp_path_factory):
     assert not os.path.exists(os.path.join(out, "_compact_pending"))
     assert run(reader) == before
     assert run(load_index(spark, out))
+
+
+def _assert_postings_files(out, cfg):
+    """Every postings group (each language directory of it, with lang_col)
+    is ONE parquet file, sorted by ([lang,] term, first_ord): the write
+    rebalances, so AQE sizes the files instead of the encoder's partition
+    count, and each file is term-clustered for the probe's IN-filter."""
+    import pyarrow.parquet as pq
+
+    from document_retrieval_spark.index.build import _current_postings_dir
+
+    base = _current_postings_dir(out)
+    lang = cfg.index.lang_col
+    for g in range(cfg.index.n_shard_groups):
+        gdir = os.path.join(base, f"group={g}")
+        leaves = ([os.path.join(gdir, d) for d in os.listdir(gdir)
+                   if d.startswith(f"{lang}=")] if lang else [gdir])
+        assert leaves, gdir
+        for leaf in leaves:
+            files = [n for n in os.listdir(leaf) if n.endswith(".parquet")]
+            assert len(files) == 1, (leaf, files)
+            t = pq.read_table(os.path.join(leaf, files[0]),
+                              columns=["term", "first_ord"])
+            keys = list(zip(t["term"].to_pylist(),
+                            t["first_ord"].to_pylist()))
+            assert keys == sorted(keys), leaf
+
+
+def test_postings_groups_written_as_one_file(spark, tmp_path_factory):
+    """build() and compact() write each small postings group as ONE
+    term-sorted parquet file, and the published postings are
+    build_postings' rows over the persisted tf and stats."""
+    from document_retrieval_spark.operators.postings import build_postings
+
+    all_tr = gen_transcripts(40, seed=193)
+    convs = sorted(all_tr["conv_id"].unique())
+    out = str(tmp_path_factory.mktemp("idx_files"))
+    b = IndexBuilder(spark, CFG, out)
+
+    def check():
+        _assert_postings_files(out, CFG)
+        idx = load_index(spark, out)
+        avgdl = float(idx.coll.first()["avgdl"])
+        want = build_postings(
+            idx.tf.select("term", "docid", "doc_ord", "tf", "dl"),
+            idx.term_stats, CFG.index, CFG.bm25, avgdl_by_lang=avgdl,
+        )
+
+        def rows(df):
+            return sorted(tuple(r) for r in df.select(*want.columns).collect())
+
+        assert rows(idx.postings) == rows(want)
+
+    b.build(spark.createDataFrame(
+        all_tr[all_tr["conv_id"].isin(convs[:30])], schema=transcripts_schema()
+    ))
+    check()
+    b.compact(spark.createDataFrame(
+        all_tr[all_tr["conv_id"].isin(convs[30:])], schema=transcripts_schema()
+    ))
+    check()

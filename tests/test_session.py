@@ -165,3 +165,28 @@ def test_daemon_module_on_local_masters_only(monkeypatch):
     # spark-submit started the JVM before the driver, without the export
     monkeypatch.setenv("PYSPARK_GATEWAY_PORT", "40000")
     assert key not in _conf_of(monkeypatch, master="local[4]")
+
+
+def test_driver_memory_default_fits_the_machine(monkeypatch, tmp_path):
+    """Without SPARK_DRIVER_MEMORY the driver heap is 24g or half the
+    memory the process may use (physical memory, or a lower cgroup v2
+    limit), whichever is less; the variable still wins."""
+    key = "spark.driver.memory"
+    monkeypatch.delenv("SPARK_DRIVER_MEMORY", raising=False)
+    page = 4096
+    limit = tmp_path / "memory.max"
+    monkeypatch.setattr(session, "_CGROUP_MEMORY_MAX", str(limit))
+
+    def machine(gib):
+        sizes = {"SC_PAGE_SIZE": page, "SC_PHYS_PAGES": gib * 2**30 // page}
+        monkeypatch.setattr(session.os, "sysconf", sizes.__getitem__)
+
+    machine(15)  # no cgroup file
+    assert _conf_of(monkeypatch, master="local[4]")[key] == "7680m"
+    machine(256)
+    limit.write_text("max\n")
+    assert _conf_of(monkeypatch, master="local[4]")[key] == "24576m"
+    limit.write_text(f"{8 * 2**30}\n")  # a container capped at 8 GiB
+    assert _conf_of(monkeypatch, master="local[4]")[key] == "4096m"
+    monkeypatch.setenv("SPARK_DRIVER_MEMORY", "2g")
+    assert _conf_of(monkeypatch, master="local[4]")[key] == "2g"

@@ -228,9 +228,9 @@ def test_wand_query_partitioning_in_plan(
 ):
     """The scoring exchange is one number-pinned hash partitioning on
     query_id: defaultParallelism partitions unless n_query_parts is given,
-    whether or not the caller passes a (short) term list — also for a
-    1,000-query batch over a small vocabulary, where the probe folds the
-    query side to one task (that fold must not narrow the scoring stage)."""
+    whether or not the caller passes a term list — also for a 1,000-query
+    batch over a small vocabulary: prepare_query_terms folds the query side
+    to one partition, and that fold must not narrow the scoring stage."""
     from pyspark.sql import functions as F
 
     docs, docs_ord, tf, coll, stats, postings = built
@@ -245,7 +245,7 @@ def test_wand_query_partitioning_in_plan(
     terms = None
     if with_terms:
         terms = [r["term"] for r in qt.select("term").distinct().collect()]
-        assert 1 < len(terms) <= 64
+        assert len(terms) > 1
     wand_topk(qt, postings, docs_ord, coll, bm25, k=K, terms=terms,
               n_query_parts=n_query_parts).explain("formatted")
     plan = capsys.readouterr().out
@@ -254,3 +254,80 @@ def test_wand_query_partitioning_in_plan(
         r"hashpartitioning\(query_id#\d+, (\d+)\), (REPARTITION_BY_\w+)", plan
     )
     assert found == [(str(want), "REPARTITION_BY_NUM")], plan
+
+
+def _subtree(lines: list[str], i: int) -> list[str]:
+    """Line i of an explain("simple") tree and every line below it."""
+    def depth(line: str) -> int:
+        return len(line) - len(line.lstrip(" :+-"))
+
+    out = [lines[i]]
+    for line in lines[i + 1:]:
+        if depth(line) <= depth(lines[i]):
+            break
+        out.append(line)
+    return out
+
+
+@pytest.mark.parametrize("layout", ["wand_topk", "wand_topk_docpart"])
+def test_single_query_side_plans_no_shuffle(spark, built, queries_df, capsys,
+                                            layout):
+    """One query with its terms passed, as a serving client calls it: the
+    query side is one partition, so the plan has no Exchange below its
+    BroadcastExchange, and the call runs 4 Spark jobs (docpart 5: its
+    top-k merge adds one)."""
+    from document_retrieval_spark.query import wand
+
+    docs, docs_ord, tf, coll, stats, postings = built
+    bm25 = BM25Config()
+    q = queries_df.limit(1).collect()[0]
+    one = spark.createDataFrame([(q["query_id"], q["query"])],
+                                "query_id string, query string")
+    qt = prepare_query_terms(one, REFERENCE_PROFILE, bm25)
+    terms = sorted({r["term"] for r in qt.collect()})
+    assert terms
+    c = coll.first()
+    kw = {"k": K, "terms": terms, "avgdl": float(c["avgdl"])}
+    if layout == "wand_topk_docpart":
+        kw["n_docs"] = int(c["n_docs"])
+    res = getattr(wand, layout)(qt, postings, docs_ord, coll, bm25, **kw)
+
+    res.explain()
+    lines = capsys.readouterr().out.splitlines()
+    # the innermost broadcast over the query scan (the map-back broadcast
+    # of the scored candidates holds the whole probe below it)
+    broadcasts = [_subtree(lines, i) for i, line in enumerate(lines)
+                  if "BroadcastExchange" in line]
+    query_side = min(
+        (sub for sub in broadcasts
+         if any(re.search(r"Scan ExistingRDD\[query_id#\d+,query#", line)
+                for line in sub)),
+        key=len,
+    )
+    assert any("Generate explode" in line for line in query_side), query_side
+    assert not any("Exchange" in line for line in query_side[1:]), query_side
+
+    sc = spark.sparkContext
+    group = f"single-query-{layout}"
+    sc.setJobGroup(group, group)
+    try:
+        rows = res.collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert rows
+    want = 4 if layout == "wand_topk" else 5
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == want
+
+
+def test_prepare_query_terms_distinct_per_query(spark):
+    """Two input rows with one query_id give that query's distinct terms
+    once each, whichever row they came from."""
+    queries = spark.createDataFrame(
+        [("q1", "alpha beta alpha"), ("q1", "beta gamma"), ("q2", "gamma")],
+        "query_id string, query string",
+    )
+    rows = prepare_query_terms(queries, REFERENCE_PROFILE, BM25Config()).collect()
+    got = sorted((r["query_id"], r["term"]) for r in rows)
+    assert got == [("q1", "alpha"), ("q1", "beta"), ("q1", "gamma"),
+                   ("q2", "gamma")]

@@ -45,6 +45,7 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructField, StructType
 
 from ..config import EngineConfig
 from ..sources.fs import fs_for, read_json, write_json_atomic
@@ -182,7 +183,11 @@ class IndexBuilder:
         m = read_json(self.fs, os.path.join(self._path(stage), MANIFEST))
         return m is not None and m.get("fingerprint") == self._fingerprint()
 
-    def _write_manifest(self, stage: str, t0: float, extra: dict, inputs: list[str]):
+    def _write_manifest(self, stage: str, t0: float, extra: dict,
+                        inputs: list[str], schemas: dict | None = None):
+        """Write a stage's manifest. ``schemas`` maps each parquet table of
+        the stage (its path under the stage dir, "" for the stage dir
+        itself) to the schema `_read` reads it with."""
         path = self._path(stage)
         man = {
             "stage": stage,
@@ -192,11 +197,25 @@ class IndexBuilder:
             "bytes": self.fs.dir_bytes(path),
             **extra,
         }
+        if schemas:
+            man["schemas"] = schemas
         write_json_atomic(self.fs, os.path.join(path, MANIFEST), man)
         return man
 
     def manifest(self, stage: str) -> dict | None:
         return read_json(self.fs, os.path.join(self._path(stage), MANIFEST))
+
+    def _read(self, stage: str, table: str = "") -> DataFrame:
+        """A stage's parquet table, read with the schema its manifest
+        records, so Spark runs no job to infer it from a file footer. A
+        manifest without one (written before schemas were recorded) falls
+        back to inference."""
+        path = self._path(stage) + (f"/{table}" if table else "")
+        schema = ((self.manifest(stage) or {}).get("schemas") or {}).get(table)
+        reader = self.spark.read
+        if schema is not None:
+            reader = reader.schema(StructType.fromJson(schema))
+        return reader.parquet(path)
 
     # ---------- stages ----------
 
@@ -281,38 +300,47 @@ class IndexBuilder:
         def path(stage: str) -> str:
             return self._path(prefix + stage)
 
-        def run(stage: str, make, inputs: list[str], part: str | None = None):
+        def run(stage: str, make, inputs: list[str],
+                part: str | None = None) -> dict:
+            """Write the stage unless it is complete; its manifest."""
             name = prefix + stage
             if self._complete(name):
                 report["skipped"].append(name)
-                return
+                return self.manifest(name)
             t0 = time.time()
             obs = Observation()
-            w = make().observe(
+            df = make()
+            w = df.observe(
                 obs, F.count(F.lit(1)).alias("rows")
             ).write.mode("overwrite")
             if part:
                 w = w.partitionBy(part)
             w.parquet(path(stage))
             report["stages"][name] = self._write_manifest(
-                name, t0, {"rows": obs.get["rows"]}, inputs
+                name, t0, {"rows": obs.get["rows"]}, inputs,
+                {"": _file_schema(df, part)},
             )
+            return report["stages"][name]
 
         shared.persist()  # feeds both the docs and the tf stage
         try:
-            run("docs", lambda: docs_src.select(*doc_cols),
-                ["<input transcripts>"])
+            n_docs = run("docs", lambda: docs_src.select(*doc_cols),
+                         ["<input transcripts>"])["rows"]
             run(
                 "doc_map",
+                # the doc count lets a corpus below ~500k docs per core
+                # rank in one window, with no range-sampling job and no
+                # checkpoint
                 lambda: assign_doc_ordinals(
-                    self.spark.read.parquet(path("docs")).select("docid", "dl")
+                    self._read(prefix + "docs").select("docid", "dl"),
+                    approx_rows=n_docs,
                 ).withColumn("doc_ord", F.col("doc_ord") + F.lit(ord_base)),
                 [path("docs")],
             )
             run(
                 "tf",
                 lambda: tf_src.join(
-                    self.spark.read.parquet(path("doc_map")).select(
+                    self._read(prefix + "doc_map").select(
                         "docid", "doc_ord", "dl"
                     ),
                     "docid",
@@ -339,8 +367,8 @@ class IndexBuilder:
 
         if not self._complete("stats"):
             t0 = time.time()
-            docs = self.spark.read.parquet(self._path("docs"))
-            tf = self.spark.read.parquet(self._path("tf"))
+            docs = self._read("docs")
+            tf = self._read("tf")
             coll = collection_stats(docs, lang_col=lang)
             stats = build_term_stats(
                 tf.select("term", "docid", *([lang] if lang else [])),
@@ -361,16 +389,17 @@ class IndexBuilder:
             report["stages"]["stats"] = self._write_manifest(
                 "stats", t0, {"terms": obs.get["terms"]},
                 [self._path("docs"), self._path("tf")],
+                {"coll": _file_schema(coll), "terms": _file_schema(stats)},
             )
         else:
             report["skipped"].append("stats")
 
         fault_after = int(os.environ.get("FAULT_AFTER_SHARD", "-1"))
-        stats_b = self.spark.read.parquet(self._path("stats/terms"))
+        stats_b = self._read("stats", "terms")
         # avgdl collected ONCE from the tiny coll table (one row per
         # language) instead of letting each shard group's build_postings
         # re-derive it from stats/terms
-        coll_rows = self.spark.read.parquet(self._path("stats/coll")).collect()
+        coll_rows = self._read("stats", "coll").collect()
         avgdl_by = (
             {r[lang]: float(r["avgdl"]) for r in coll_rows}
             if lang
@@ -385,9 +414,7 @@ class IndexBuilder:
                 report["skipped"].append(stage)
                 continue
             t0 = time.time()
-            tf_g = self.spark.read.parquet(self._path("tf")).filter(
-                F.col("shard_group") == g
-            )
+            tf_g = self._read("tf").filter(F.col("shard_group") == g)
             postings = build_postings(
                 tf_g.select(*tf_cols),
                 stats_b,
@@ -505,11 +532,9 @@ class IndexBuilder:
                     "is missing/stale); run build() first"
                 )
 
-        indexed = self.spark.read.parquet(self._path("docs")).select(
-            F.col("docid").alias("conv_id")
-        )
+        indexed = self._read("docs").select(F.col("docid").alias("conv_id"))
         new_turns = staged_turns.join(indexed, "conv_id", "left_anti")
-        base = self.spark.read.parquet(self._path("doc_map")).agg(
+        base = self._read("doc_map").agg(
             F.coalesce(F.max("doc_ord") + 1, F.lit(0)).alias("b")
         ).collect()[0]["b"]
 
@@ -550,25 +575,26 @@ class IndexBuilder:
                 moves.append(
                     [os.path.join(PENDING, stage, rel), os.path.join(stage, rel)]
                 )
-        olds = {s: (self.manifest(s) or {}) for s in append_stages}
+        added = {"docs": n_new, "doc_map": n_new, "tf": n_tf}
+        inputs = {
+            "docs": ["<staged transcripts>"],
+            "doc_map": [self._path("docs")],
+            "tf": ["<staged transcripts>", self._path("doc_map")],
+        }
         commit = {
             "moves": moves,
             "manifests": {
-                "docs": {
-                    "extra": {"rows": olds["docs"].get("rows", 0) + n_new,
-                              "appended": n_new},
-                    "inputs": ["<staged transcripts>"],
-                },
-                "doc_map": {
-                    "extra": {"rows": olds["doc_map"].get("rows", 0) + n_new,
-                              "appended": n_new},
-                    "inputs": [self._path("docs")],
-                },
-                "tf": {
-                    "extra": {"rows": olds["tf"].get("rows", 0) + n_tf,
-                              "appended": n_tf},
-                    "inputs": ["<staged transcripts>", self._path("doc_map")],
-                },
+                s: {
+                    "extra": {
+                        "rows": (self.manifest(s) or {}).get("rows", 0)
+                        + added[s],
+                        "appended": added[s],
+                    },
+                    "inputs": inputs[s],
+                    # appended rows keep the table's schema
+                    "schemas": staged["stages"][f"{PENDING}/{s}"]["schemas"],
+                }
+                for s in append_stages
             },
             "invalidate": ["stats"]
             + [f"postings/group={i}" for i in range(g)],
@@ -604,7 +630,8 @@ class IndexBuilder:
             self._mark_stale()
         t0 = time.time()
         for stage, m in commit["manifests"].items():
-            self._write_manifest(stage, t0, m["extra"], m["inputs"])
+            self._write_manifest(stage, t0, m["extra"], m["inputs"],
+                                 m.get("schemas"))
             # the listing of an appended path changed; drop the session's
             # cached file index
             self.spark.catalog.refreshByPath(self._path(stage))
@@ -641,6 +668,15 @@ class IndexBuilder:
         self._publish(self._ver)
         report["total"] = total
         return report
+
+
+def _file_schema(df: DataFrame, part: str | None = None) -> dict:
+    """The schema Spark infers for ``df`` read back from parquet written
+    with ``partitionBy(part)``: every field nullable, ``part`` last."""
+    fields = sorted(df.schema.fields, key=lambda f: f.name == part)
+    return StructType(
+        [StructField(f.name, f.dataType) for f in fields]
+    ).jsonValue()
 
 
 def _current_postings_dir(out_dir: str) -> str:

@@ -16,6 +16,18 @@ only a local JVM that ``get_spark`` itself launches is known to inherit
 the PYTHONPATH it exports. Other masters, and drivers run by
 ``spark-submit`` (whose JVM starts before the driver), keep the stock
 daemon; ``extra_conf`` overrides either choice.
+
+The same local JVMs also get a JIT policy (``C2_THRESHOLDS``, set as
+``spark.driver.defaultJavaOptions``): a method reaches the C2 compiler
+only after 4x JDK 17's tier-4 invocation and loop counts, so C2 compiles
+the code a session keeps running and not the Spark code it runs a few
+times per query plan (C1 still compiles that). A short session spent
+most of its CPU in the JIT compilers; with the policy the perfbench
+lookup CPU per query fell 18% over 20 pairs (BENCH.md "Round 7 / C2
+thresholds"). A caller's ``spark.driver.extraJavaOptions`` still
+applies on top, and ``extra_conf`` overrides the policy.
+``spark-submit`` drivers get neither the policy nor the daemon: their
+JVM is started before ``get_spark`` runs.
 """
 
 from __future__ import annotations
@@ -171,6 +183,15 @@ def _warmup_session(spark: SparkSession) -> None:
             shutil.rmtree(wdir, ignore_errors=True)
 
 
+# JDK 17's tier-4 (C2) compile thresholds times four; C1 is unchanged.
+# Spark starts the JVM with -XX:+IgnoreUnrecognizedVMOptions, so a
+# misspelled flag would be dropped silently (tests/test_session.py reads
+# the live values back)
+C2_THRESHOLDS = (
+    "-XX:Tier4InvocationThreshold=20000 -XX:Tier4MinInvocationThreshold=2400 "
+    "-XX:Tier4CompileThreshold=60000 -XX:Tier4BackEdgeThreshold=160000"
+)
+
 # cgroup v2 memory limit of this process's cgroup: a number of bytes, or
 # "max" when unlimited (a container sees the host's RAM in sysconf)
 _CGROUP_MEMORY_MAX = "/sys/fs/cgroup/memory.max"
@@ -225,12 +246,18 @@ def get_spark(
     )
     # the PYTHONPATH export above reaches the workers only through a local
     # JVM that this process starts; spark-submit starts the JVM first and
-    # hands the driver its port in PYSPARK_GATEWAY_PORT
+    # hands the driver its port in PYSPARK_GATEWAY_PORT. The C2 policy
+    # goes to the same JVMs: a local one runs the tasks too, and it is
+    # the only kind the policy was measured on. It is set as the default
+    # options, which a caller's extraJavaOptions adds to
     if (master == "local" or master.startswith("local[")) and (
         "PYSPARK_GATEWAY_PORT" not in os.environ
     ):
-        b = b.config("spark.python.daemon.module",
+        b = (
+            b.config("spark.python.daemon.module",
                      "document_retrieval_spark._worker_daemon")
+            .config("spark.driver.defaultJavaOptions", C2_THRESHOLDS)
+        )
     for k, v in (extra_conf or {}).items():
         b = b.config(k, v)
     spark = b.getOrCreate()

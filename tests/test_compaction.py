@@ -447,3 +447,67 @@ def test_postings_groups_written_as_one_file(spark, tmp_path_factory):
         all_tr[all_tr["conv_id"].isin(convs[30:])], schema=transcripts_schema()
     ))
     check()
+
+
+# (stage, table under the stage dir) of every table build() and compact()
+# read back
+STAGE_TABLES = [("docs", ""), ("doc_map", ""), ("tf", ""),
+                ("stats", "coll"), ("stats", "terms")]
+
+
+@pytest.mark.parametrize("lang", [None, "lang"])
+def test_stage_schemas_equal_inferred(spark, tmp_path_factory, lang):
+    """The schema each doc and stats manifest records, which build() and
+    compact() read their own stages with, is the one Spark infers from
+    the files (partition columns last): after a build, and in the
+    manifests a compaction rewrites."""
+    cfg = replace(CFG, index=replace(CFG.index, lang_col=lang))
+    all_tr = gen_transcripts(40, seed=211, multilang=lang is not None)
+    convs = sorted(all_tr["conv_id"].unique())
+    out = str(tmp_path_factory.mktemp("idx_schema"))
+    b = IndexBuilder(spark, cfg, out)
+
+    def check():
+        for stage, table in STAGE_TABLES:
+            path = b._path(stage) + (f"/{table}" if table else "")
+            inferred = spark.read.parquet(path).schema.jsonValue()
+            assert b.manifest(stage)["schemas"][table] == inferred, (
+                stage, table)
+
+    b.build(spark.createDataFrame(all_tr[all_tr["conv_id"].isin(convs[:30])]))
+    check()
+    b.compact(spark.createDataFrame(all_tr[all_tr["conv_id"].isin(convs[30:])]))
+    check()
+
+
+def test_build_and_compact_job_counts(spark, tmp_path_factory):
+    """build() and compact() read their own stages with the recorded
+    schemas (no footer-inference job) and rank a small corpus's doc
+    ordinals in one window (no range-sampling job): on the fixture they
+    run at most these many Spark jobs (47 and 53 when every read inferred
+    its schema and the ordinals took the range-sampled path); more is a
+    regression."""
+    all_tr = gen_transcripts(40, seed=223)
+    convs = sorted(all_tr["conv_id"].unique())
+    base, delta = (
+        spark.createDataFrame(all_tr[all_tr["conv_id"].isin(part)],
+                              schema=transcripts_schema())
+        for part in (convs[:30], convs[30:])
+    )
+    out = str(tmp_path_factory.mktemp("idx_jobs"))
+    sc = spark.sparkContext
+
+    def jobs(name, run):
+        group = f"{os.path.basename(out)}-{name}"
+        sc.setJobGroup(group, group)
+        try:
+            run()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    n_build = jobs("build", lambda: IndexBuilder(spark, CFG, out).build(base))
+    n_compact = jobs("compact",
+                     lambda: IndexBuilder(spark, CFG, out).compact(delta))
+    assert n_build <= 31 and n_compact <= 35, (n_build, n_compact)

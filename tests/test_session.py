@@ -167,6 +167,35 @@ def test_daemon_module_on_local_masters_only(monkeypatch):
     assert key not in _conf_of(monkeypatch, master="local[4]")
 
 
+def test_c2_thresholds_on_local_masters_only(monkeypatch):
+    """The C2 threshold policy goes to the same JVMs as the package
+    daemon: a local JVM that get_spark starts itself."""
+    key = "spark.driver.defaultJavaOptions"
+    monkeypatch.delenv("PYSPARK_GATEWAY_PORT", raising=False)
+    assert _conf_of(monkeypatch, master="local[4]")[key] == (
+        session.C2_THRESHOLDS)
+    assert _conf_of(monkeypatch, master="local")[key] == session.C2_THRESHOLDS
+    assert key not in _conf_of(monkeypatch, master="spark://head:7077")
+    assert key not in _conf_of(monkeypatch, master="yarn")
+    assert _conf_of(monkeypatch, master="local[4]",
+                    extra_conf={key: "-Xss4m"})[key] == "-Xss4m"
+    monkeypatch.setenv("PYSPARK_GATEWAY_PORT", "40000")
+    assert key not in _conf_of(monkeypatch, master="local[4]")
+
+
+def test_session_jvm_runs_the_c2_thresholds(spark):
+    """The conftest JVM runs with the policy's values. Spark starts the
+    JVM with -XX:+IgnoreUnrecognizedVMOptions, so only reading the live
+    flags back shows that each one was recognized."""
+    jvm = spark.sparkContext._jvm
+    bean = jvm.java.lang.management.ManagementFactory.getPlatformMXBean(
+        jvm.java.lang.Class.forName("com.sun.management.HotSpotDiagnosticMXBean"))
+    flags = dict(opt[len("-XX:"):].split("=")
+                 for opt in session.C2_THRESHOLDS.split())
+    assert flags["Tier4InvocationThreshold"] == "20000"
+    assert {name: bean.getVMOption(name).getValue() for name in flags} == flags
+
+
 def test_driver_memory_default_fits_the_machine(monkeypatch, tmp_path):
     """Without SPARK_DRIVER_MEMORY the driver heap is 24g or half the
     memory the process may use (physical memory, or a lower cgroup v2

@@ -6,8 +6,9 @@ build over 95% of them, then ``compact()`` with every 20th conversation)
 on ``get_spark(master="local[<cores>]")`` with a 2g driver heap, runs
 ``--warm`` untimed three-term queries through ``wand_topk`` and
 ``wand_topk_docpart``, then ``--queries`` measured ones through each, as
-a serving client calls them: one query, its term list, avgdl and n_docs
-passed. Each call is collected.
+a serving client calls them: one query (a one-row pandas frame, as
+perfbench builds it), its term list, avgdl and n_docs passed. Each call
+is collected.
 
 For every measured call it reads, from /proc and for this process tree
 only, the CPU seconds of
@@ -21,13 +22,21 @@ only, the CPU seconds of
   the call);
 - the driver Python process and the Python workers (every process under
   the JVM, with the children they reaped);
-and the Spark jobs and tasks the call ran (its job group in the status
-tracker).
+the Spark jobs and tasks the call ran (its job group in the status
+tracker); and its JIT layer, read from the JVM: the milliseconds its JIT
+compilers spent (``CompilationMXBean``), the whole-stage-codegen
+classes Janino compiled (``CodegenMetrics``) and the classes loaded.
+The same JIT totals, with wall and CPU seconds, are reported for the
+set-up (session start, corpus generation, build, compact, load).
 
     python tools/lookup_cpu_split.py [--seed 60] [--queries 10] [--warm 2]
+        [--driver-java-options "-XX:..."]
 
-Prints one JSON object: per layout, the median of every field over the
-measured calls, each family's share of the call's CPU, and the calls.
+``--driver-java-options`` replaces the JVM options get_spark sets as
+``spark.driver.defaultJavaOptions`` (its C2 thresholds); pass "" to run
+the JVM's defaults. Prints one JSON object: the set-up totals and the
+live Tier4InvocationThreshold, per layout the median of every field over
+the measured calls, each family's share of the call's CPU, and the calls.
 """
 
 from __future__ import annotations
@@ -129,11 +138,32 @@ def job_counts(sc, group: str) -> tuple[int, int]:
     return len(jobs), tasks
 
 
+def jit_counts(spark) -> dict[str, float]:
+    """JIT compile ms, Janino compiles and classes loaded so far."""
+    jvm = spark.sparkContext._jvm
+    mf = jvm.java.lang.management.ManagementFactory
+    codegen = jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return {
+        "compile_ms": mf.getCompilationMXBean().getTotalCompilationTime(),
+        "janino_compiles": codegen.METRIC_COMPILATION_TIME().getCount(),
+        "classes_loaded": mf.getClassLoadingMXBean().getTotalLoadedClassCount(),
+    }
+
+
+def vm_option(spark, name: str) -> str:
+    """A live HotSpot flag of the session JVM."""
+    jvm = spark.sparkContext._jvm
+    bean = jvm.java.lang.management.ManagementFactory.getPlatformMXBean(
+        jvm.java.lang.Class.forName("com.sun.management.HotSpotDiagnosticMXBean"))
+    return bean.getVMOption(name).getValue()
+
+
 def main(argv=None) -> int:
     ap = argparse.ArgumentParser(description=__doc__.split("\n")[0])
     ap.add_argument("--seed", type=int, default=60)
     ap.add_argument("--queries", type=int, default=10)
     ap.add_argument("--warm", type=int, default=2)
+    ap.add_argument("--driver-java-options", default=None)
     args = ap.parse_args(argv)
 
     from document_retrieval_spark.config import EngineConfig, IndexConfig
@@ -149,12 +179,15 @@ def main(argv=None) -> int:
 
     cores = len(os.sched_getaffinity(0))
     work = tempfile.mkdtemp(prefix="lookup_cpu_split_")
+    conf = {"spark.driver.memory": "2g",
+            "spark.local.dir": os.path.join(work, "local"),
+            "spark.ui.showConsoleProgress": "false"}
+    if args.driver_java_options is not None:
+        conf["spark.driver.defaultJavaOptions"] = args.driver_java_options
+    t_start, c_start = time.perf_counter(), cpu_split()
     spark = get_spark(
         "lookup_cpu_split", master=f"local[{cores}]",
-        shuffle_partitions=cores, warmup=False,
-        extra_conf={"spark.driver.memory": "2g",
-                    "spark.local.dir": os.path.join(work, "local"),
-                    "spark.ui.showConsoleProgress": "false"},
+        shuffle_partitions=cores, warmup=False, extra_conf=conf,
     )
     spark.sparkContext.setLogLevel("ERROR")
     sc = spark.sparkContext
@@ -176,29 +209,41 @@ def main(argv=None) -> int:
         coll = idx.coll.first()
         avgdl, n_docs = float(coll["avgdl"]), int(coll["n_docs"])
 
+        c_setup, jit_setup = cpu_split(), jit_counts(spark)
+        setup = {
+            "wall_s": round(time.perf_counter() - t_start, 1),
+            "cpu_s": round(sum(c_setup.values()) - sum(c_start.values()), 1),
+            **jit_setup,
+        }
+
         terms_of = {
             r.query_id: sorted(set(oracle_tokenize(r.query, cfg.tokenizer)))
             for r in queries.itertuples()
         }
-        shaped = [r for r in queries.itertuples()
-                  if len(terms_of[r.query_id]) == SHAPE_TERMS]
+        shaped = queries[[len(terms_of[q]) == SHAPE_TERMS
+                          for q in queries["query_id"]]]
         need = args.warm + args.queries
         if len(shaped) < need:
             raise SystemExit(f"{len(shaped)} three-term queries, {need} needed")
         pid = jvm_pid()
 
-        def call(layout: str, q, n: int) -> dict:
-            qdf = spark.createDataFrame([(q.query_id, q.query)],
+        def call(layout: str, i: int) -> dict:
+            # a pandas frame, as perfbench passes: a LocalRelation (a
+            # Python list would plan a LogicalRDD scan instead)
+            q = shaped.iloc[[i]]
+            qdf = spark.createDataFrame(q[["query_id", "query"]],
                                         "query_id string, query string")
             qt = prepare_query_terms(qdf, cfg.tokenizer, cfg.bm25)
-            kw = {"k": 10, "terms": terms_of[q.query_id], "avgdl": avgdl}
+            kw = {"k": 10, "terms": terms_of[q["query_id"].iloc[0]],
+                  "avgdl": avgdl}
             if layout == "docpart":
                 res = wand_topk_docpart(qt, idx.postings, idx.doc_map, idx.coll,
                                         cfg.bm25, n_docs=n_docs, **kw)
             else:
                 res = wand_topk(qt, idx.postings, idx.doc_map, idx.coll,
                                 cfg.bm25, **kw)
-            group = f"lookup-{layout}-{n}"
+            group = f"lookup-{layout}-{i}"
+            k0 = jit_counts(spark)
             t0, p0, j0 = time.perf_counter(), cpu_split(), thread_split(pid)
             sc.setJobGroup(group, group)
             try:
@@ -208,6 +253,7 @@ def main(argv=None) -> int:
                 sc.setLocalProperty("spark.job.description", None)
             wall = time.perf_counter() - t0
             p1, j1 = cpu_split(), thread_split(pid)
+            k1 = jit_counts(spark)
             jvm = {k: j1[k] - j0[k] for k in j0}
             jvm["exited"] = jvm["process"] - sum(
                 v for k, v in jvm.items() if k != "process")
@@ -221,6 +267,7 @@ def main(argv=None) -> int:
                 "wall_ms": 1000 * wall,
                 "jobs": jobs, "tasks": tasks,
             })
+            row.update({k: k1[k] - k0[k] for k in k0})
             row["cpu_ms"] = (row["jvm_ms"] + row["driver_python_ms"]
                              + row["python_workers_ms"])
             return {k: round(v, 1) for k, v in row.items()}
@@ -228,16 +275,18 @@ def main(argv=None) -> int:
         layouts = ("wand", "docpart")
         for i in range(args.warm):
             for layout in layouts:
-                call(layout, shaped[-1 - i], -1 - i)
+                call(layout, -1 - i)
         calls: dict[str, list[dict]] = {layout: [] for layout in layouts}
         for i in range(args.queries):
             for layout in layouts:
-                calls[layout].append(call(layout, shaped[i], i))
+                calls[layout].append(call(layout, i))
+        tier4 = vm_option(spark, "Tier4InvocationThreshold")
     finally:
         spark.stop()
         shutil.rmtree(work, ignore_errors=True)
 
-    report = {"seed": args.seed, "cores": cores, "warm": args.warm}
+    report = {"seed": args.seed, "cores": cores, "warm": args.warm,
+              "tier4_invocation_threshold": tier4, "setup": setup}
     for layout, rows in calls.items():
         med = {k: statistics.median(r[k] for r in rows) for k in rows[0]}
         share = {

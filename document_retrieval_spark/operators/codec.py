@@ -5,7 +5,7 @@ The reference experimented with gzip-vs-raw pickle loads
 (`cosine_similarity_bm25_reranking.py:113-118`); our engine replaces those
 with a real IR codec: docid gaps + varbyte (7 data bits per byte, MSB =
 continuation), the classic postings compression. Pure numpy — no per-element
-Python — so it runs inside Arrow pandas UDFs at full batch speed.
+Python — so it runs inside Arrow UDFs at full batch speed.
 
 Layout per encoded block (see postings.py):
 - ``docs``: varbyte of [first_ord, gap_1, ..., gap_{n-1}] (strictly positive
@@ -52,21 +52,24 @@ def vb_encode(vals: np.ndarray) -> bytes:
     return out.tobytes()
 
 
-def vb_decode(buf: bytes) -> np.ndarray:
-    """Inverse of vb_encode -> uint64 array."""
-    b = np.frombuffer(buf, dtype=np.uint8)
-    if b.size == 0:
-        return np.empty(0, dtype=np.uint64)
-    term = (b & 0x80) == 0
-    ends = np.flatnonzero(term)
-    n = ends.size
-    starts = np.empty(n, dtype=np.int64)
-    starts[0] = 0
-    starts[1:] = ends[:-1] + 1
-    lengths = ends - starts + 1
-    within = np.arange(b.size, dtype=np.int64) - np.repeat(starts, lengths)
-    contrib = (b & 0x7F).astype(np.uint64) << (7 * within).astype(np.uint64)
-    return np.add.reduceat(contrib, starts)
+def vb_decode(buf) -> np.ndarray:
+    """Inverse of vb_encode -> uint64 array. `buf` is bytes, any buffer,
+    or a uint8 ndarray (a view into an Arrow data buffer decodes with no
+    copy). Each value ends at a byte without the high bit, its most
+    significant 7-bit group; the earlier groups are folded in walking back
+    from those ends, one vectorized step per byte of the longest value."""
+    b = buf if isinstance(buf, np.ndarray) else np.frombuffer(buf, dtype=np.uint8)
+    ends = np.flatnonzero(b < 0x80)
+    vals = b[ends].astype(np.uint64)
+    if ends.size == b.size:  # every value is one byte
+        return vals
+    lengths = np.empty_like(ends)
+    lengths[0] = ends[0] + 1
+    lengths[1:] = ends[1:] - ends[:-1]
+    for k in range(1, int(lengths.max())):
+        m = np.flatnonzero(lengths > k)
+        vals[m] = (vals[m] << np.uint64(7)) | (b[ends[m] - k] & 0x7F)
+    return vals
 
 
 def delta_encode(ordinals: np.ndarray) -> bytes:

@@ -39,12 +39,12 @@ Scale notes:
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..config import BM25Config, IndexConfig
+from .codec import vb_decode
 
 BLOCK_SCHEMA = T.StructType(
     [
@@ -92,7 +92,7 @@ def _segment_schema(lang_col: str | None, key_col: str = "term") -> str:
 def _quotient_np(tfs: np.ndarray, dls: np.ndarray, bm25: BM25Config,
                  avgdl) -> np.ndarray:
     """Per-posting BM25 quotient — the one expression both the encoder
-    (block maxima) and the WAND cursor (`query/wand.py _Cursor.take_upto`)
+    (block maxima) and the WAND cursor (`query/wand.py _Cursor._enter`)
     evaluate, so a block's stored max quotient is an exact upper bound of
     every cursor-computed score in that block (multiplying by a positive idf
     is monotone). `avgdl` may be a scalar or a per-row array."""
@@ -429,38 +429,93 @@ def build_postings(
     )
 
 
+class _Blocks:
+    """A `blocks` list column as numpy views over its Arrow buffers, with
+    no per-block Python objects: per-block `last`, `n` and `max_q`
+    arrays, and each varbyte stream (`docs`, `tfs`, `dls`) as one uint8
+    data buffer plus per-block offsets. Row r's blocks are
+    `row_start[r]:row_start[r + 1]`. Both readers of the postings format
+    (the WAND cursor and `decode_postings_df`) decode through `decode`."""
+
+    __slots__ = ("row_start", "last", "n", "max_q", "docs", "tfs", "dls")
+
+    def __init__(self, blocks):
+        offs = blocks.offsets.to_numpy().astype(np.int64)
+        self.row_start = offs - offs[0]
+        flat = blocks.flatten()
+        self.last = flat.field("last").to_numpy()
+        self.n = flat.field("n").to_numpy()
+        self.max_q = flat.field("max_q").to_numpy()
+        self.docs = _binary_views(flat.field("docs"))
+        self.tfs = _binary_views(flat.field("tfs"))
+        self.dls = _binary_views(flat.field("dls"))
+
+    def decode(self, b0: int, b1: int):
+        """Blocks [b0, b1) -> (doc_ord int64, tf uint64, dl uint64) with
+        ONE varbyte decode per stream: the blocks' bytes are contiguous in
+        each data buffer. Each block stores its first ordinal absolute, so
+        before the one cumsum that entry becomes the step from the previous
+        block's stored `last` (exact int64 arithmetic, bit-identical to a
+        per-block delta_decode)."""
+
+        def stream(views):
+            data, off = views
+            return vb_decode(data[off[b0]:off[b1]])
+
+        gaps = stream(self.docs).astype(np.int64)
+        if b1 - b0 > 1:
+            gaps[np.cumsum(self.n[b0:b1 - 1])] -= self.last[b0:b1 - 1]
+        return np.cumsum(gaps, out=gaps), stream(self.tfs), stream(self.dls)
+
+
+def _binary_views(arr) -> tuple[np.ndarray, np.ndarray]:
+    """A binary Arrow array -> (uint8 data buffer, element offsets of
+    length len(arr) + 1), both zero-copy numpy views."""
+    import pyarrow as pa
+
+    _, off_buf, data_buf = arr.buffers()
+    odt = np.int64 if pa.types.is_large_binary(arr.type) else np.int32
+    off = np.frombuffer(off_buf, dtype=odt)[arr.offset:arr.offset + len(arr) + 1]
+    return np.frombuffer(data_buf, dtype=np.uint8), off
+
+
+# postings decoded per output batch: bounds decode_postings_df's memory
+# whatever the Arrow batch's row count
+_DECODE_CHUNK = 1 << 20
+
+
 def decode_postings_df(postings: DataFrame) -> DataFrame:
     """Decode an encoded postings table back to long form
-    (term, doc_ord, tf, dl) — used by round-trip tests and as a recovery path.
-    """
-    from .codec import delta_decode, vb_decode
+    (term, doc_ord, tf, dl) — used by round-trip tests and as a recovery
+    path. Each Arrow batch decodes through `_Blocks.decode`, one varbyte
+    pass per stream over runs of whole segments of about `_DECODE_CHUNK`
+    postings, and the term column is one Arrow `take`."""
+    import pyarrow as pa
 
-    out_schema = T.ArrayType(
-        T.StructType(
-            [
-                T.StructField("doc_ord", T.LongType()),
-                T.StructField("tf", T.IntegerType()),
-                T.StructField("dl", T.IntegerType()),
-            ]
-        )
-    )
-
-    @F.pandas_udf(out_schema)
-    def decode(blocks: pd.Series) -> pd.Series:
-        def one(blist):
-            rows = []
-            for b in blist:
-                ords = delta_decode(bytes(b["docs"]))
-                tfs = vb_decode(bytes(b["tfs"]))
-                dls = vb_decode(bytes(b["dls"]))
-                rows.extend(
-                    {"doc_ord": int(o), "tf": int(t), "dl": int(d)}
-                    for o, t, d in zip(ords, tfs, dls)
+    def decode(batches):
+        for batch in batches:
+            if not batch.num_rows:
+                continue
+            blocks = _Blocks(batch.column("blocks"))
+            row_start = blocks.row_start
+            # each row's first posting
+            blk_post = np.zeros(row_start[-1] + 1, dtype=np.int64)
+            np.cumsum(blocks.n, out=blk_post[1:])
+            prow = blk_post[row_start]
+            terms = batch.column("term")
+            i, rows = 0, batch.num_rows
+            while i < rows:
+                j = int(np.searchsorted(prow, prow[i] + _DECODE_CHUNK, "right")) - 1
+                j = min(max(j, i + 1), rows)
+                ords, tfs, dls = blocks.decode(row_start[i], row_start[j])
+                row_of = np.repeat(np.arange(i, j), np.diff(prow[i:j + 1]))
+                yield pa.RecordBatch.from_arrays(
+                    [terms.take(pa.array(row_of)), pa.array(ords),
+                     pa.array(tfs.astype(np.int32)), pa.array(dls.astype(np.int32))],
+                    ["term", "doc_ord", "tf", "dl"],
                 )
-            return rows
+                i = j
 
-        return blocks.map(one)
-
-    return postings.select(
-        "term", F.explode(decode(F.col("blocks"))).alias("p")
-    ).select("term", "p.doc_ord", "p.tf", "p.dl")
+    return postings.select("term", "blocks").mapInArrow(
+        decode, schema="term string, doc_ord long, tf int, dl int"
+    )

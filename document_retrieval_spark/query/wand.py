@@ -4,18 +4,27 @@ pruning and a bounded min-heap").
 
 Distribution model: queries are the parallel unit. Query terms join to their
 posting segments (inner join == the inverted-index probe J1, pruning to
-touched terms only), then ``groupBy(query_id).applyInPandas`` runs one
-strip-at-a-time WAND pass per query (`_wand_one_query_blocked`):
+touched terms only), then ``groupBy(query_id).applyInArrow`` runs one
+strip-at-a-time WAND pass per query (`_wand_one_query_blocked`) straight
+from the group's Arrow table — no pandas frame, no per-block Python object:
 
+- `_cursors_from_arrow` sorts the rows by (term, first_ord) and reads the
+  `blocks` column as numpy views over its Arrow buffers (per-block last,
+  max_q; each varbyte stream one data buffer plus offsets);
+- a cursor decodes a segment whole when it first enters it — one varbyte
+  decode per stream over the segment's contiguous bytes, then one cumsum —
+  and segments a seek skips are never decoded; memory is one segment
+  (<= seg_postings postings) per live cursor;
 - the doc-ordinal axis is cut into STRIPS ending at the nearest
   w-blocks-ahead block end across the query's term cursors (w adapts:
   doubles after a scored strip up to 8, resets to 1 after a skip);
 - a strip whose summed block-max upper bounds (idf * max_q, safe because
   variant-1 idf >= 0, SURVEY §2.9) cannot beat the current top-k threshold
-  is skipped on metadata alone — nothing in it is decoded;
-- a surviving strip is decoded lazily (runs of whole blocks in one varbyte
-  pass) and scored as NumPy arrays, summing each doc's term scores in
-  ascending term order so scores are bit-reproducible;
+  is skipped on metadata alone — a segment the skip passes whole is never
+  decoded;
+- a surviving strip is cut from the decoded segments by searchsorted and
+  scored as NumPy arrays, summing each doc's term scores in ascending term
+  order so scores are bit-reproducible;
 - top-k candidates buffer and compress by one lexsort on (score desc,
   doc_ord asc) — equal scores keep the smaller ordinal == smaller docid,
   the engine tie rule.
@@ -26,8 +35,9 @@ the per-query groups are small and uniform — the WAND shuffle moves only the
 COMPRESSED segments each query touches.
 
 Scale note: a single query with a very hot term still gathers that term's
-segments to one task; block-max lets it skip most decode work, and the
-segment rows cap memory per row. For single-query latency at extreme df the
+segments to one task; block-max lets it skip most scoring work and the
+decode of every segment a skip passes whole, and the segment rows cap
+memory per row. For single-query latency at extreme df the
 doc-partitioned variant (score per doc-range, merge top-k) is the documented
 alternative (README); the reference workload (2k queries, Kaggle batch) maps
 to this per-query layout.
@@ -35,31 +45,40 @@ to this per-query layout.
 
 from __future__ import annotations
 
+from bisect import bisect_left
+from itertools import groupby
+
 import numpy as np
-import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..config import BM25Config
-from ..operators.codec import delta_decode, vb_decode
-from ..operators.postings import _quotient_np
+from ..operators.postings import _Blocks, _quotient_np
 
 _EMPTY_I64 = np.empty(0, dtype=np.int64)
 _EMPTY_F64 = np.empty(0, dtype=np.float64)
 
 
 class _Cursor:
-    """Iterates one term's posting segments block-by-block with lazy decode."""
+    """Iterates one term's posting segments, decoding a segment whole when
+    it first enters it; segments a seek skips are never decoded."""
 
     __slots__ = (
-        "idf", "bm25", "avgdl", "segs", "seg_i",
-        "blk_i", "ords", "tfs", "dls", "pos", "done", "ub", "order_key", "hi",
+        "idf", "bm25", "avgdl", "order_key", "hi", "blocks", "last", "max_q",
+        "segs", "seg_last", "seg_i", "b_end", "blk_i", "ords", "scores", "pos",
+        "done", "ub",
     )
 
     def __init__(
         self,
         idf: float,
-        segs: list[dict],
+        segs: list[tuple[int, int]],
+        ub: float,
+        blocks: _Blocks,
+        last: list[int],
+        max_q: list[float],
         bm25: BM25Config,
         avgdl: float,
         order_key: int = 0,
@@ -70,132 +89,83 @@ class _Cursor:
         # order) so scores are bit-reproducible run to run — last-ulp sum
         # differences would otherwise swap equal-score ties (SURVEY §7 risks).
         self.order_key = order_key
-        # segs: [{first_ord, last_ord, max_q, blocks:[{base,last,n,max_q,docs,tfs,dls}]}]
+        # segs: each segment's [b0, b1) block range in `blocks`, ascending
+        # by doc ordinal; `last` and `max_q` are blocks.last and
+        # blocks.max_q as lists (scalar reads in the strip loop); ub: the
+        # max quotient over all the segments
         self.idf = idf
         self.bm25 = bm25
         self.avgdl = avgdl
-        self.segs = sorted(segs, key=lambda s: s["first_ord"])
-        self.seg_i = 0
-        self.blk_i = 0
-        self.pos = 0
-        self.done = not self.segs
-        self.ub = idf * max((s["max_q"] for s in self.segs), default=0.0)
+        self.blocks = blocks
+        self.last = last
+        self.max_q = max_q
+        self.segs = segs
+        self.seg_last = [last[b1 - 1] for _, b1 in segs]
+        self.ub = idf * ub
         # [lo, hi) doc-ordinal clamp for the doc-partitioned layout: the
         # cursor scores only its bucket's range even when a (non-hot)
-        # segment spans several buckets
+        # segment spans several buckets. A decoded segment is cut at hi
         self.hi = hi
-        if not self.done:
-            self._load_block()
-            if lo is not None:
-                self.seek(lo)
-            else:
-                self._clamp()
+        self.done = False
+        self._enter(0)
+        if lo is not None:
+            self.seek(lo)
 
-    def _cur_blocks(self):
-        return self.segs[self.seg_i]["blocks"]
-
-    def _load_block(self):
-        b = self._cur_blocks()[self.blk_i]
-        self.ords = delta_decode(bytes(b["docs"]))
-        self.tfs = vb_decode(bytes(b["tfs"])).astype(np.float64)
-        self.dls = vb_decode(bytes(b["dls"])).astype(np.float64)
+    def _enter(self, i: int):
+        """Decode segment i — one varbyte decode per stream over its
+        contiguous bytes (`_Blocks.decode`) — and score its postings.
+        Each score is the quotient FIRST, then * idf: the quotient is the
+        encoder's own `_quotient_np`, whose per-block maxima the segments
+        store, and multiplying by a positive idf is monotone — so
+        block/segment upper bounds can never be a final-ulp below an
+        actual score."""
+        self.seg_i = i
+        b0, self.b_end = self.segs[i]
+        ords, tfs, dls = self.blocks.decode(b0, self.b_end)
+        if self.hi is not None:
+            stop = int(np.searchsorted(ords, self.hi, "left"))
+            ords, tfs, dls = ords[:stop], tfs[:stop], dls[:stop]
+            self.done = not stop
+        self.ords = ords
+        self.scores = self.idf * _quotient_np(
+            tfs.astype(np.float64), dls.astype(np.float64), self.bm25,
+            self.avgdl,
+        )
         self.pos = 0
+        self.blk_i = b0
+
+    def _next_segment(self):
+        if self.seg_i + 1 >= len(self.segs):
+            self.done = True
+        else:
+            self._enter(self.seg_i + 1)
+
+    def _move(self, pos: int):
+        """Advance to posting `pos` of the decoded segment and to the block
+        that holds it (the first whose `last` reaches its ordinal)."""
+        self.pos = pos
+        self.blk_i = bisect_left(
+            self.last, int(self.ords[pos]), self.blk_i, self.b_end
+        )
 
     def cur_doc(self) -> int:
         return int(self.ords[self.pos])
 
-    def _clamp(self):
-        if not self.done and self.hi is not None and self.cur_doc() >= self.hi:
-            self.done = True
-
-    def _bulk_decode(self, i: int, j: int):
-        """Decode blocks [i, j) of the current segment with ONE varbyte
-        decode per stream (vs three numpy-heavy decodes per 128-posting
-        block — the kernel's measured hot spot). Varbyte streams
-        concatenate cleanly; each block's first doc value is stored
-        ABSOLUTE, so the chained cumsum is fixed with one segmented
-        correction (exact int64 arithmetic — decoded ordinals are
-        bit-identical to per-block delta_decode)."""
-        bl = self._cur_blocks()[i:j]
-        gaps = vb_decode(b"".join(bytes(b["docs"]) for b in bl)).astype(
-            np.int64
-        )
-        ords = np.cumsum(gaps)
-        if len(bl) > 1:
-            ns = np.array([b["n"] for b in bl], dtype=np.int64)
-            starts = np.zeros(len(bl), dtype=np.int64)
-            np.cumsum(ns[:-1], out=starts[1:])
-            # carry accumulated INTO each block's first element; the first
-            # block's carry is 0 by construction
-            corr = ords[starts] - gaps[starts]
-            ords -= np.repeat(corr, ns)
-        tfs = vb_decode(b"".join(bytes(b["tfs"]) for b in bl)).astype(
-            np.float64
-        )
-        dls = vb_decode(b"".join(bytes(b["dls"]) for b in bl)).astype(
-            np.float64
-        )
-        return ords, tfs, dls
-
     def take_upto(self, end: int) -> tuple[np.ndarray, np.ndarray]:
         """Gather (doc_ords, scores) for every posting with
-        cur_doc <= doc_ord <= end and advance past them. Each score is the
-        quotient FIRST, then * idf: the quotient is the encoder's own
-        `_quotient_np`, whose per-block maxima the segments store, and
-        multiplying by a positive idf is monotone — so block/segment upper
-        bounds can never be a final-ulp below an actual score.
-
-        Runs of WHOLE blocks within the consumed range are decoded in one
-        segmented shot (_bulk_decode); partially consumed blocks keep the
-        per-block path, and blocks a seek skips are never decoded."""
+        cur_doc <= doc_ord <= end and advance past them. Inside a decoded
+        segment the range is one searchsorted; a range that runs past the
+        segment's end enters the next segment."""
         out_o: list[np.ndarray] = []
         out_s: list[np.ndarray] = []
-        while not self.done and self.cur_doc() <= end:
+        while not self.done and self.ords[self.pos] <= end:
             j = int(np.searchsorted(self.ords, end, "right"))
-            clamped = False
-            if self.hi is not None:
-                jh = int(np.searchsorted(self.ords, self.hi, "left"))
-                # jh < size means the clamp cuts INSIDE this block; jh ==
-                # size just means every element here is < hi
-                if jh < self.ords.size and jh <= j:
-                    j, clamped = jh, True
-            if j > self.pos:
-                out_o.append(self.ords[self.pos : j])
-                out_s.append(self.idf * _quotient_np(
-                    self.tfs[self.pos : j], self.dls[self.pos : j],
-                    self.bm25, self.avgdl,
-                ))
-            if clamped:
-                self.done = True
-                break
+            out_o.append(self.ords[self.pos:j])
+            out_s.append(self.scores[self.pos:j])
             if j < self.ords.size:
-                self.pos = j
-                self._clamp()
+                self._move(j)
                 break
-            # consumed the whole loaded block — bulk-consume the following
-            # run of blocks that fit entirely inside [.., end] and below
-            # the hi clamp, then enter the first block past the run
-            blocks = self._cur_blocks()
-            nb = len(blocks)
-            k = self.blk_i + 1
-            lim = end if self.hi is None else min(end, self.hi - 1)
-            while k < nb and blocks[k]["last"] <= lim:
-                k += 1
-            if k > self.blk_i + 1:
-                ords, tf, dl = self._bulk_decode(self.blk_i + 1, k)
-                out_o.append(ords)
-                out_s.append(
-                    self.idf * _quotient_np(tf, dl, self.bm25, self.avgdl)
-                )
-            self.blk_i = k
-            if self.blk_i >= nb:
-                self.seg_i += 1
-                self.blk_i = 0
-                if self.seg_i >= len(self.segs):
-                    self.done = True
-                    break
-            self._load_block()
-            self._clamp()
+            self._next_segment()
         if not out_o:
             return _EMPTY_I64, _EMPTY_F64
         if len(out_o) == 1:
@@ -206,50 +176,37 @@ class _Cursor:
         """last doc ordinal of the block (w-1) ahead of the current one in
         this segment (clamped to the segment's final block) — the strip
         boundary for a w-block-wide strip."""
-        blocks = self._cur_blocks()
-        return int(blocks[min(self.blk_i + w - 1, len(blocks) - 1)]["last"])
+        return self.last[min(self.blk_i + w, self.b_end) - 1]
 
     def block_ub_ahead(self, w: int) -> float:
         """idf * max block quotient over the current and next (w-1) blocks
         — a valid upper bound for any posting this cursor contributes to a
         strip that ends at or before block_last_ahead(w). Metadata only;
         decodes nothing."""
-        m = 0.0
-        for b in self._cur_blocks()[self.blk_i : self.blk_i + w]:
-            q = b["max_q"]
-            if q > m:
-                m = q
-        return self.idf * m
+        return self.idf * max(
+            self.max_q[self.blk_i:min(self.blk_i + w, self.b_end)]
+        )
 
     def seek(self, target: int):
         """Advance to the first posting with doc_ord >= target."""
         if self.done:
             return
-        # skip whole segments via metadata only — decode nothing until the
-        # landing block is known (a hot term may span thousands of segments)
-        moved = False
-        while self.seg_i < len(self.segs) and self.segs[self.seg_i]["last_ord"] < target:
-            self.seg_i += 1
-            self.blk_i = 0
-            moved = True
-        if self.seg_i >= len(self.segs):
+        # skip whole segments on their last ordinal — decode nothing until
+        # the landing segment is known (a hot term may span thousands)
+        i = bisect_left(self.seg_last, target, self.seg_i)
+        if i >= len(self.segs):
             self.done = True
             return
-        # skip blocks via metadata (no decode)
-        blocks = self._cur_blocks()
-        while self.blk_i < len(blocks) and blocks[self.blk_i]["last"] < target:
-            self.blk_i += 1
-            moved = True
-        if self.blk_i >= len(blocks):  # can't happen: seg last_ord >= target
+        if i > self.seg_i:
+            self._enter(i)
+            if self.done:
+                return
+        p = int(np.searchsorted(self.ords, target, "left"))
+        if p >= self.ords.size:
+            # every posting >= target lies at or past hi
             self.done = True
-            return
-        if moved:
-            self._load_block()
-        # the metadata skips above guarantee the loaded block's last >= target,
-        # so the landing position exists in this block (any target, including
-        # an arbitrary bucket lower bound)
-        self.pos = int(np.searchsorted(self.ords[self.pos :], target, "left")) + self.pos
-        self._clamp()
+        elif p > self.pos:
+            self._move(p)
 
 
 def _wand_one_query_blocked(
@@ -260,12 +217,12 @@ def _wand_one_query_blocked(
 
     The doc-ordinal axis is processed in STRIPS bounded by the nearest
     w-blocks-ahead end across alive cursors (w adapts: doubling after
-    scored strips up to 8, reset to 1 on a skip — dense regions
-    bulk-decode, prunable regions keep single-block skip granularity): a
-    strip whose summed w-block-max upper bound can't beat theta is skipped
-    whole (at w=1 exactly BMW's shallow skip boundary), and a surviving
-    strip is gathered and scored as NumPy arrays (`_Cursor.take_upto`,
-    with runs of whole blocks decoded in one segmented varbyte pass),
+    scored strips up to 8, reset to 1 on a skip — dense regions are
+    consumed in wide strips, prunable regions keep single-block skip
+    granularity): a strip whose summed w-block-max upper bound can't beat
+    theta is skipped whole (at w=1 exactly BMW's shallow skip boundary),
+    and a surviving strip is gathered and scored as NumPy arrays
+    (`_Cursor.take_upto`, slices of the cursors' decoded segments),
     hundreds to thousands of postings per interpreter iteration.
 
     Exactness: every doc in strip [d, strip_end] can only carry terms whose
@@ -307,10 +264,9 @@ def _wand_one_query_blocked(
     # ADAPTIVE strip width: a strip is bounded by the nearest w-blocks-ahead
     # end across alive cursors. Width doubles (cap 8) after every SCORED
     # strip and resets to 1 on a skip: dense regions where pruning isn't
-    # firing anyway get consumed in multi-block strips (one segmented
-    # varbyte decode per stream instead of three numpy decodes per
-    # 128-posting block — the kernel's measured hot spot), while prunable
-    # regions keep single-block skip granularity. Exactness is unchanged:
+    # firing anyway get consumed in multi-block strips (fewer interpreter
+    # iterations per posting), while prunable regions keep single-block
+    # skip granularity. Exactness is unchanged:
     # scored strips only ever widen the candidate superset (the final
     # compress applies the exact tie rule), and a skipped strip uses the
     # valid w-block max bound.
@@ -401,18 +357,11 @@ def wand_topk(
         max_pushdown_terms, avgdl
     )
 
-    def score_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        qid = pdf["query_id"].iloc[0]
-        avgdl = float(pdf["_avgdl"].iloc[0])  # one lang (hence avgdl) per query
-        ranked = _wand_one_query_blocked(_cursors_from_pdf(pdf, bm25, avgdl), k)
-        return pd.DataFrame(
-            {
-                "query_id": qid,
-                "rank": np.arange(1, len(ranked) + 1, dtype=np.int32),
-                "doc_ord": [d for d, _ in ranked],
-                "score": [s for _, s in ranked],
-            }
-        )
+    def score_group(table: pa.Table) -> pa.Table:
+        avgdl = table.column("_avgdl")[0].as_py()  # one lang (hence avgdl) per query
+        ranked = _wand_one_query_blocked(_cursors_from_arrow(table, bm25, avgdl), k)
+        return _ranked_table(table.column("query_id")[0].as_py(), ranked,
+                             rank=True)
 
     # One scoring task per core by default. Each Python task costs about
     # 0.13 s of CPU (JVM plus worker) whatever its size with the package
@@ -431,7 +380,7 @@ def wand_topk(
     if n_query_parts is None:
         n_query_parts = touched.sparkSession.sparkContext.defaultParallelism
     parted = touched.repartition(n_query_parts, "query_id")
-    res = parted.groupBy("query_id").applyInPandas(
+    res = parted.groupBy("query_id").applyInArrow(
         score_group, schema="query_id string, rank int, doc_ord long, score double"
     )
     # map doc_ord -> docid by BROADCASTING THE CANDIDATES (<= k rows per
@@ -443,15 +392,41 @@ def wand_topk(
     ).select("query_id", "rank", "docid", "score")
 
 
-def _cursors_from_pdf(pdf: pd.DataFrame, bm25: BM25Config, avgdl: float,
-                      lo: int | None = None, hi: int | None = None) -> list:
-    """One _Cursor per term of a single query's touched-segment rows.
+def _ranked_table(qid: str, ranked: list[tuple[int, float]],
+                  rank: bool) -> pa.Table:
+    """One query's [(doc_ord, score)] -> (query_id[, rank], doc_ord, score)."""
+    n = len(ranked)
+    cols = {"query_id": pa.array([qid] * n, pa.string())}
+    if rank:
+        cols["rank"] = pa.array(np.arange(1, n + 1, dtype=np.int32))
+    cols["doc_ord"] = pa.array([d for d, _ in ranked], pa.int64())
+    cols["score"] = pa.array([s for _, s in ranked], pa.float64())
+    return pa.table(cols)
 
-    sort=True: ascending term order == the oracle's sorted(set(query))
-    summation order — bit-identical per-doc scores."""
+
+def _cursors_from_arrow(table: pa.Table, bm25: BM25Config, avgdl: float,
+                        lo: int | None = None, hi: int | None = None) -> list:
+    """One _Cursor per term of a single query's touched-segment rows
+    (term, idf, first_ord, max_q, blocks), in ascending term order == the
+    oracle's sorted(set(query)) summation order — bit-identical per-doc
+    scores. The rows arrive in any order; one sort on (term, first_ord)
+    orders each term's segments by doc ordinal. Nothing is copied or
+    decoded here: `blocks` becomes numpy views over its Arrow buffers
+    (`_Blocks`) and each cursor holds its segments' block ranges."""
+    table = table.combine_chunks()
+    order = pc.sort_indices(
+        table, sort_keys=[("term", "ascending"), ("first_ord", "ascending")]
+    ).to_numpy()
+    blocks = _Blocks(table.column("blocks").chunk(0))
+    last, max_q = blocks.last.tolist(), blocks.max_q.tolist()
+    start = blocks.row_start.tolist()
+    terms = table.column("term").to_pylist()
+    idfs = table.column("idf").to_numpy()
+    seg_max_q = table.column("max_q").to_numpy()
     cursors = []
-    for ti, (term, grp) in enumerate(pdf.groupby("term", sort=True)):
-        idf = float(grp["idf"].iloc[0])
+    for ti, (term, rows) in enumerate(groupby(order.tolist(), terms.__getitem__)):
+        rows = list(rows)
+        idf = float(idfs[rows[0]])
         if idf < 0.0:
             # data-driven guard: an index persisted with idf_plus_one=False
             # (BM25 variants 3/5) carries negative idf for df > N/2 terms;
@@ -462,18 +437,11 @@ def _cursors_from_pdf(pdf: pd.DataFrame, bm25: BM25Config, avgdl: float,
                 "upper bounds require idf >= 0 — variant-3/5 indexes must "
                 "be scored with the exhaustive join scorer"
             )
-        # zip the column arrays: itertuples() builds a namedtuple class
-        # (an eval) per term group
-        segs = [
-            {"first_ord": int(f), "last_ord": int(l), "max_q": float(m),
-             "blocks": list(b)}
-            for f, l, m, b in zip(
-                grp["first_ord"].to_numpy(), grp["last_ord"].to_numpy(),
-                grp["max_q"].to_numpy(), grp["blocks"].to_numpy(),
-            )
-        ]
-        cursors.append(_Cursor(idf, segs, bm25, avgdl, order_key=ti,
-                               lo=lo, hi=hi))
+        cursors.append(_Cursor(
+            idf, [(start[r], start[r + 1]) for r in rows],
+            float(seg_max_q[rows].max()), blocks, last, max_q, bm25, avgdl,
+            order_key=ti, lo=lo, hi=hi,
+        ))
     return cursors
 
 
@@ -655,23 +623,17 @@ def wand_topk_docpart(
         ),
     ).filter(F.size("blocks") > 0)
 
-    def score_bucket(pdf: pd.DataFrame) -> pd.DataFrame:
-        qid = pdf["query_id"].iloc[0]
-        b = int(pdf["bucket"].iloc[0])
-        avgdl = float(pdf["_avgdl"].iloc[0])
-        lo, hi = b * width, (b + 1) * width
+    def score_bucket(table: pa.Table) -> pa.Table:
+        b = table.column("bucket")[0].as_py()
+        avgdl = table.column("_avgdl")[0].as_py()
         ranked = _wand_one_query_blocked(
-            _cursors_from_pdf(pdf, bm25, avgdl, lo=lo, hi=hi), k
+            _cursors_from_arrow(table, bm25, avgdl, lo=b * width,
+                                hi=(b + 1) * width), k
         )
-        return pd.DataFrame(
-            {
-                "query_id": qid,
-                "doc_ord": [d for d, _ in ranked],
-                "score": [s for _, s in ranked],
-            }
-        )
+        return _ranked_table(table.column("query_id")[0].as_py(), ranked,
+                             rank=False)
 
-    cand = buckets.groupBy("query_id", "bucket").applyInPandas(
+    cand = buckets.groupBy("query_id", "bucket").applyInArrow(
         score_bucket, schema="query_id string, doc_ord long, score double"
     )
     # global merge: k winners among <= k*n_buckets candidates, engine tie

@@ -171,28 +171,43 @@ def test_docpart_equals_per_query_wand(built, queries_df, queries_pdf):
 
 
 def test_wand_refuses_negative_idf(spark, built, queries_df):
-    """A variant-3/5 stats table (idf without the +1 goes negative for
-    df > N/2) must make WAND raise, not silently mis-prune: negative idf
-    turns the block-max upper bounds into lower bounds."""
-    from pyspark.sql import functions as F
+    """An index built from idf_plus_one=False term stats (BM25 variants
+    3/5: idf goes negative for df > N/2) must make both WAND layouts raise
+    the kernel's ValueError, not silently mis-prune: negative idf turns
+    the block-max upper bounds into lower bounds."""
     from pyspark.sql.utils import PythonException
 
-    from document_retrieval_spark.operators.postings import build_postings
-    from document_retrieval_spark.query.wand import wand_topk
+    from document_retrieval_spark.query import wand
 
     docs, docs_ord, tf, coll, stats, _ = built
-    neg_stats = stats.withColumn(
-        "idf",
-        F.log((F.col("n_docs") - F.col("df") + 0.5) / (F.col("df") + 0.5)),
-    )
+    neg_stats = build_term_stats(tf, coll, idf_plus_one=False)
+    assert neg_stats.filter("idf < 0").count() > 0
     cfg = IndexConfig(n_shards=8, salt_df_threshold=10, n_salts=4, block_size=8)
     neg_postings = build_postings(
         tf.join(docs_ord, "docid"), neg_stats, cfg, BM25Config(), seg_postings=32
     )
     bm25 = BM25Config()
     qt = prepare_query_terms(queries_df, REFERENCE_PROFILE, bm25)
-    with pytest.raises(PythonException, match="negative idf"):
-        wand_topk(qt, neg_postings, docs_ord, coll, bm25, k=K).collect()
+    for layout in ("wand_topk", "wand_topk_docpart"):
+        with pytest.raises(PythonException, match="ValueError: negative idf"):
+            getattr(wand, layout)(qt, neg_postings, docs_ord, coll, bm25,
+                                  k=K).collect()
+
+
+@pytest.mark.parametrize("layout", ["wand_topk", "wand_topk_docpart"])
+def test_wand_scores_through_arrow(built, queries_df, capsys, layout):
+    """Both layouts hand each group to the kernel as an Arrow table: the
+    formatted plan runs FlatMapGroupsInArrow and no pandas UDF."""
+    from document_retrieval_spark.query import wand
+
+    docs, docs_ord, tf, coll, stats, postings = built
+    bm25 = BM25Config()
+    qt = prepare_query_terms(queries_df, REFERENCE_PROFILE, bm25)
+    getattr(wand, layout)(qt, postings, docs_ord, coll, bm25,
+                          k=K).explain("formatted")
+    plan = capsys.readouterr().out
+    assert "FlatMapGroupsInArrow" in plan, plan
+    assert "FlatMapGroupsInPandas" not in plan, plan
 
 
 def test_docpart_refuses_lang_partitioned_coll(built, queries_df):

@@ -1,20 +1,58 @@
 """Pure-Python randomized differential test of the WAND kernel vs brute force
 (no Spark) — exercises multi-block/multi-segment cursors, strip skips, the
 buffered top-k and [lo, hi)-clamped cursors across 200 seeded random posting
-configurations."""
+configurations. Cursors come from the Arrow cursor builder, fed a touched-
+segment table as the scoring UDF receives it: rows in shuffled order,
+several segments per term."""
 
 from __future__ import annotations
 
 import math
 
 import numpy as np
+import pyarrow as pa
 
 from document_retrieval_spark.config import BM25Config
-from document_retrieval_spark.query.wand import _Cursor, _wand_one_query_blocked
+from document_retrieval_spark.query.wand import (
+    _cursors_from_arrow,
+    _wand_one_query_blocked,
+)
 from postings_reference import encode_segments
 
 BM25 = BM25Config()
 AVGDL = 30.0
+TOUCHED = pa.schema([
+    ("term", pa.string()), ("idf", pa.float64()), ("first_ord", pa.int64()),
+    ("last_ord", pa.int64()), ("max_q", pa.float64()),
+    ("blocks", pa.list_(pa.struct([
+        ("base", pa.int64()), ("last", pa.int64()), ("n", pa.int32()),
+        ("max_q", pa.float64()), ("docs", pa.binary()), ("tfs", pa.binary()),
+        ("dls", pa.binary()),
+    ]))),
+])
+
+
+def touched_table(terms, bs, sp, shuffle, bucket=None) -> pa.Table:
+    """One query's touched-segment rows for `terms` [(idf, postings)],
+    encoded by the reference encoder into blocks of bs and segments of sp
+    postings, rows permuted by `shuffle`. With bucket=(lo, hi) each
+    segment keeps only the blocks that overlap [lo, hi) and a segment left
+    with none is dropped, as wand_topk_docpart prunes a bucket's replica.
+    Term names sort in list order, the brute-force summation order."""
+    rows = []
+    for i, (idf, plist) in enumerate(terms):
+        for seg in encode_segments(*zip(*plist), BM25, AVGDL, bs, sp):
+            blocks = seg["blocks"]
+            if bucket is not None:
+                lo, hi = bucket
+                blocks = [b for b in blocks if b["last"] >= lo and b["base"] < hi]
+            if blocks:
+                rows.append({"term": f"t{i}", "idf": idf,
+                             "first_ord": seg["first_ord"],
+                             "last_ord": seg["last_ord"],
+                             "max_q": seg["max_q"], "blocks": blocks})
+    return pa.Table.from_pylist([rows[j] for j in shuffle.permutation(len(rows))],
+                                schema=TOUCHED)
 
 
 def brute(terms, k, lo=0, hi=None):
@@ -33,7 +71,9 @@ def brute(terms, k, lo=0, hi=None):
 
 def _configs(seed):
     """200 seeded random queries: (terms, k, cursor factory, rng). The
-    factory builds fresh cursors, optionally clamped to [lo, hi)."""
+    factory builds fresh cursors from a shuffled touched-segment table,
+    optionally clamped to [lo, hi), and with docpart=True from only the
+    blocks that overlap [lo, hi)."""
     rng = np.random.default_rng(seed)
     N = 200
     dls = rng.integers(10, 60, size=N)
@@ -49,12 +89,13 @@ def _configs(seed):
         k = int(rng.choice([1, 3, 10, 25]))
         bs, sp = int(rng.choice([2, 8, 16])), int(rng.choice([8, 32, 64]))
 
-        def mk(lo=None, hi=None, terms=terms, bs=bs, sp=sp):
-            return [
-                _Cursor(idf, encode_segments(*zip(*pl), BM25, AVGDL, bs, sp),
-                        BM25, AVGDL, order_key=i, lo=lo, hi=hi)
-                for i, (idf, pl) in enumerate(terms)
-            ]
+        shuffle = np.random.default_rng((seed, trial))
+
+        def mk(lo=None, hi=None, docpart=False, terms=terms, bs=bs, sp=sp,
+               shuffle=shuffle):
+            table = touched_table(terms, bs, sp, shuffle,
+                                  (lo, hi) if docpart else None)
+            return _cursors_from_arrow(table, BM25, AVGDL, lo=lo, hi=hi)
 
         yield trial, terms, k, mk, rng
 
@@ -69,11 +110,17 @@ def test_wand_kernel_randomized():
 def test_blocked_kernel_bit_identical_to_perdoc():
     """The strip kernel matches the per-doc exhaustive scorer bit for bit,
     both unclamped and with [lo, hi)-clamped cursors (the docpart layout's
-    bucket ranges), on a second seed."""
+    bucket ranges), on a second seed — clamped over whole segments, and
+    over only the blocks that overlap [lo, hi), as a bucket's replica
+    holds them (segments then start and end inside the range, and some
+    drop out whole)."""
     N = 200
     for trial, terms, k, mk, rng in _configs(13):
         assert _wand_one_query_blocked(mk(), k) == brute(terms, k), trial
         lo = int(rng.integers(0, N // 2))
         hi = int(rng.integers(lo + 1, N + 1))
+        want = brute(terms, k, lo, hi)
         got_c = _wand_one_query_blocked(mk(lo=lo, hi=hi), k)
-        assert got_c == brute(terms, k, lo, hi), (trial, lo, hi)
+        assert got_c == want, (trial, lo, hi)
+        got_d = _wand_one_query_blocked(mk(lo=lo, hi=hi, docpart=True), k)
+        assert got_d == want, ("docpart", trial, lo, hi)

@@ -1,5 +1,6 @@
 #!/usr/bin/env python3
-"""Where a single-query lookup call spends its CPU, by thread family.
+"""Where a single-query lookup call, or one batch call, spends its CPU,
+by thread family.
 
 Builds the perfbench lookup index (2,000 generated conversations: a cold
 build over 95% of them, then ``compact()`` with every 20th conversation)
@@ -9,6 +10,12 @@ on ``get_spark(master="local[<cores>]")`` with a 2g driver heap, runs
 a serving client calls them: one query (a one-row pandas frame, as
 perfbench builds it), its term list, avgdl and n_docs passed. Each call
 is collected.
+
+With ``--batch N`` it builds the perfbench batch index instead (one cold
+build over all 2,000 conversations) and measures ``wand_topk`` calls of N
+queries each, as perfbench's batch workload makes them: consecutive
+N-query slices of the query set (wrapping round), avgdl passed, no term
+list. The ``--warm`` untimed calls take the last N queries.
 
 For every measured call it reads, from /proc and for this process tree
 only, the CPU seconds of
@@ -30,7 +37,7 @@ The same JIT totals, with wall and CPU seconds, are reported for the
 set-up (session start, corpus generation, build, compact, load).
 
     python tools/lookup_cpu_split.py [--seed 60] [--queries 10] [--warm 2]
-        [--driver-java-options "-XX:..."]
+        [--batch N] [--driver-java-options "-XX:..."]
 
 ``--driver-java-options`` replaces the JVM options get_spark sets as
 ``spark.driver.defaultJavaOptions`` (its C2 thresholds); pass "" to run
@@ -163,6 +170,8 @@ def main(argv=None) -> int:
     ap.add_argument("--seed", type=int, default=60)
     ap.add_argument("--queries", type=int, default=10)
     ap.add_argument("--warm", type=int, default=2)
+    ap.add_argument("--batch", type=int, default=0,
+                    help="measure N-query wand_topk calls on the batch index")
     ap.add_argument("--driver-java-options", default=None)
     args = ap.parse_args(argv)
 
@@ -197,14 +206,18 @@ def main(argv=None) -> int:
         queries = gen_queries(tr, 1_000, seed=args.seed + 1)
         convs = np.sort(tr["conv_id"].unique())
         in_delta = tr["conv_id"].isin(set(convs[DELTA_EVERY - 1::DELTA_EVERY]))
+        parts = ((("base", tr),) if args.batch else
+                 (("base", tr[~in_delta]), ("delta", tr[in_delta])))
         paths = {}
-        for name, pdf in (("base", tr[~in_delta]), ("delta", tr[in_delta])):
+        for name, pdf in parts:
             paths[name] = os.path.join(work, f"{name}.parquet")
             pdf.to_parquet(paths[name], index=False, coerce_timestamps="us",
                            allow_truncated_timestamps=True)
         out = os.path.join(work, "index")
         IndexBuilder(spark, cfg, out).build(spark.read.parquet(paths["base"]))
-        IndexBuilder(spark, cfg, out).compact(spark.read.parquet(paths["delta"]))
+        if "delta" in paths:
+            IndexBuilder(spark, cfg, out).compact(
+                spark.read.parquet(paths["delta"]))
         idx = load_index(spark, out)
         coll = idx.coll.first()
         avgdl, n_docs = float(coll["avgdl"]), int(coll["n_docs"])
@@ -223,19 +236,29 @@ def main(argv=None) -> int:
         shaped = queries[[len(terms_of[q]) == SHAPE_TERMS
                           for q in queries["query_id"]]]
         need = args.warm + args.queries
-        if len(shaped) < need:
+        if not args.batch and len(shaped) < need:
             raise SystemExit(f"{len(shaped)} three-term queries, {need} needed")
         pid = jvm_pid()
+
+        def request(i: int):
+            """Call i's queries: a negative i is a warm call."""
+            if not args.batch:
+                return shaped.iloc[[i]]
+            if i < 0:
+                return queries.iloc[-args.batch:]
+            lo = i * args.batch % len(queries)
+            return queries.iloc[lo:lo + args.batch]
 
         def call(layout: str, i: int) -> dict:
             # a pandas frame, as perfbench passes: a LocalRelation (a
             # Python list would plan a LogicalRDD scan instead)
-            q = shaped.iloc[[i]]
+            q = request(i)
             qdf = spark.createDataFrame(q[["query_id", "query"]],
                                         "query_id string, query string")
             qt = prepare_query_terms(qdf, cfg.tokenizer, cfg.bm25)
-            kw = {"k": 10, "terms": terms_of[q["query_id"].iloc[0]],
-                  "avgdl": avgdl}
+            kw = {"k": 10, "avgdl": avgdl}
+            if not args.batch:
+                kw["terms"] = terms_of[q["query_id"].iloc[0]]
             if layout == "docpart":
                 res = wand_topk_docpart(qt, idx.postings, idx.doc_map, idx.coll,
                                         cfg.bm25, n_docs=n_docs, **kw)
@@ -272,7 +295,7 @@ def main(argv=None) -> int:
                              + row["python_workers_ms"])
             return {k: round(v, 1) for k, v in row.items()}
 
-        layouts = ("wand", "docpart")
+        layouts = ("wand",) if args.batch else ("wand", "docpart")
         for i in range(args.warm):
             for layout in layouts:
                 call(layout, -1 - i)
@@ -286,6 +309,7 @@ def main(argv=None) -> int:
         shutil.rmtree(work, ignore_errors=True)
 
     report = {"seed": args.seed, "cores": cores, "warm": args.warm,
+              "batch": args.batch,
               "tier4_invocation_threshold": tier4, "setup": setup}
     for layout, rows in calls.items():
         med = {k: statistics.median(r[k] for r in rows) for k in rows[0]}

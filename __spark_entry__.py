@@ -5,14 +5,34 @@
 engine's operator surface over the driver's pre-registered tables (documents,
 embeddings); `oracle_sql()` gives the DuckDB-executable ANSI-SQL twin of each.
 
+The Spark side of every gate runs the engine's own operators, so a gate
+checks the engine against DuckDB, not a second implementation:
+- index tables (`_gate_tables`): tokenize_documents -> term_frequencies ->
+  collection_stats -> build_term_stats, globally or per `lang`, with the
+  +1 or the no-+1 idf; the statistics gates (doc_lengths, collection_stats,
+  term_stats, vocab_stats), candidate_union, unigram_lm_topk and the
+  simhash/fingerprint gates read these tables directly;
+- BM25 (plain, standard, conjunctive, variants 3/5, per-language, the
+  staged stemmed/lemma tf, submission, metrics): bm25_scored_candidates,
+  with `recall_mrr` for the metrics;
+- phrase, BM25F, cosine: phrase_topk, bm25f_tf_tilde + bm25f_score,
+  cosine_topk (its doc_norms), each asked for every candidate;
+- rerank: cosine_topk cut to 50 on the rounded score, then
+  bm25_scored_candidates semi-joined to those candidates;
+- docpart: build_postings + wand_topk_docpart over the gate tables;
+- dedup, similarity and text-analysis gates: their operators/functions.
+
 Exact-parity conventions shared by both sides (see tools/check_parity.py):
 - tokenizer = SQL_SAFE_PROFILE: lower, non-alphanumerics -> space, whitespace
   split, drop empties (reference F1c path, `bm25_text_preprocessing.py:43`);
 - every float column is rounded to 6 dp; BM25/cosine ranks are computed on
   the ROUNDED score with the engine tie rule (score desc, id asc) so ranking
-  is stable across engines' float summation orders;
-- avgdl is computed as sum(dl)/count (exact integer sum, one division) —
-  NOT an incremental mean — so both engines produce the identical double;
+  is stable across engines' float summation orders (`_rank_rounded`: the
+  engine scores every candidate, the harness rounds, then topk_per_group
+  ranks);
+- avgdl is sum(dl)/count (Spark's avg over an integer column sums exactly in
+  a double, one division) — NOT an incremental mean — so both engines
+  produce the identical double;
 - dedup hashes are deterministic integer arithmetic over a sorted shingle
   dictionary (operators/dedup.py), bit-equal across engines.
 """
@@ -334,8 +354,9 @@ _ANN_BASE = f"""
 
 
 def _stemmed_bm25_sql() -> str:
-    """Oracle twin of bm25_topk_stemmed: scores from the SAME engine-staged
-    stemmed tf parquet the Spark query scores from (.staged/stemmed_tf/).
+    """Oracle twin of bm25_topk_stemmed: scores from the engine-staged
+    stemmed tf parquet (.staged/stemmed_tf/), the tf the Spark query
+    scores.
     Pinned to sf0.01 — the driver's correctness scale; the Spark side
     (re)writes this table deterministically whenever the gate runs."""
     return _staged_tf_bm25_sql(
@@ -739,313 +760,183 @@ def _embeddings(spark: SparkSession, sf_dir: str):
     return spark.read.parquet(f"{sf_dir}/embeddings.parquet")
 
 
-def _tok_docs(spark, sf_dir, with_lang=False):
-    from pyspark.sql import functions as F
-
-    from document_retrieval_spark.config import SQL_SAFE_PROFILE
-    from document_retrieval_spark.functions.text import tokenize_expr
-
-    d = _docs(spark, sf_dir)
-    cols = ["doc_id"] + (["lang"] if with_lang else [])
-    return d.select(
-        *cols, tokenize_expr(F.col("text"), SQL_SAFE_PROFILE).alias("toks")
-    )
+# every candidate: engine top-k calls that feed _rank_rounded keep all rows,
+# so the cut happens once, on the rounded score
+_ALL = 10**9
 
 
 def _query_df(spark):
     return spark.createDataFrame(QUERIES, ["query_id", "query"])
 
 
-def _q_doc_lengths(spark, sf_dir):
-    from pyspark.sql import functions as F
-
-    return _tok_docs(spark, sf_dir).select(
-        "doc_id", F.size("toks").cast("int").alias("dl")
-    )
-
-
-def _q_collection_stats(spark, sf_dir):
-    from pyspark.sql import functions as F
-
-    return (
-        _tok_docs(spark, sf_dir, with_lang=True)
-        .groupBy("lang")
-        .agg(
-            F.count("*").alias("n_docs"),
-            F.round(
-                F.sum(F.size("toks")).cast("double") / F.count("*"), 6
-            ).alias("avgdl"),
-        )
-    )
-
-
-def _tf_table(spark, sf_dir, with_lang=False):
-    from pyspark.sql import functions as F
-
-    td = _tok_docs(spark, sf_dir, with_lang=with_lang).withColumn(
-        "dl", F.size("toks")
-    )
-    keys = ["doc_id"] + (["lang"] if with_lang else [])
-    return (
-        td.select(*keys, "dl", F.explode("toks").alias("term"))
-        .groupBy(*keys, "term")
-        .agg(F.first("dl").alias("dl"), F.count("*").alias("tf"))
-    )
-
-
-def _term_stats(spark, sf_dir, rounded=True):
-    from pyspark.sql import functions as F
-
-    tf = _tf_table(spark, sf_dir)
-    n_docs = _tok_docs(spark, sf_dir).count()
-    df = tf.groupBy("term").agg(F.count("*").alias("df"))
-    idf = F.log1p((F.lit(float(n_docs)) - F.col("df") + 0.5) / (F.col("df") + 0.5))
-    return df.withColumn("idf", F.round(idf, 6) if rounded else idf)
-
-
-def _q_term_stats(spark, sf_dir):
-    return _term_stats(spark, sf_dir, rounded=True)
-
-
-def _bm25_ranked(spark, sf_dir, standard=False):
-    """Full ranking (all rows, rounded scores + rank) — reused by topk,
-    submission and metrics queries."""
-    from pyspark.sql import functions as F
-
+def _query_terms(spark, bm25=None, profile=None):
+    """QUERIES through the engine's prepare_query_terms (SQL_SAFE_PROFILE
+    and BM25Config() unless given)."""
     from document_retrieval_spark.config import SQL_SAFE_PROFILE, BM25Config
-    from document_retrieval_spark.operators.topk import topk_per_group
     from document_retrieval_spark.query.bm25 import prepare_query_terms
 
-    bm25 = BM25Config(length_norm="standard" if standard else "reference")
-    tf = _tf_table(spark, sf_dir)
-    docs = _tok_docs(spark, sf_dir)
-    agg = docs.agg(
-        F.count("*").alias("n"), F.sum(F.size("toks")).alias("s")
-    ).collect()[0]
-    n_docs, avgdl = agg["n"], float(agg["s"]) / agg["n"]
-    stats = _term_stats(spark, sf_dir, rounded=False)
-    qt = prepare_query_terms(_query_df(spark), SQL_SAFE_PROFILE, bm25)
-    rel = F.col("dl").cast("double") / F.lit(avgdl)
-    if standard:
-        rel = F.lit(bm25.b) * rel
-    term_score = (
-        F.col("idf")
-        * F.col("tf").cast("double")
-        * F.lit(bm25.k1 + 1.0)
-        / (F.col("tf").cast("double") + F.lit(bm25.k1) * (F.lit(1.0 - bm25.b) + rel))
+    return prepare_query_terms(
+        _query_df(spark), profile or SQL_SAFE_PROFILE, bm25 or BM25Config()
     )
-    scored = (
-        tf.join(F.broadcast(qt), "term")
-        .join(F.broadcast(stats.select("term", "idf")), "term")
-        .withColumn("term_score", term_score)
-        .groupBy("query_id", "doc_id")
-        .agg(F.round(F.sum("term_score"), 6).alias("score"))
-    )
-    return topk_per_group(scored, ["query_id"], "score", "doc_id", k=10**9)
 
 
-def _q_bm25_topk(spark, sf_dir):
+def _gate_tables(spark, sf_dir, lang=False, idf_plus_one=True, profile=None):
+    """The gates' index tables, built by the engine's own operators
+    (tokenize_documents -> term_frequencies -> collection_stats ->
+    build_term_stats) under SQL_SAFE_PROFILE unless a profile is given:
+    -> (docs(docid[, lang], text, tokens, dl), tf(docid[, lang], term, tf),
+    coll([lang,] n_docs, avgdl), stats(term[, lang], df, idf, n_docs, avgdl)).
+    `docid` is the documents' integer doc_id renamed, so the tie rule still
+    orders ids by number."""
+    from document_retrieval_spark.config import SQL_SAFE_PROFILE
+    from document_retrieval_spark.operators.stats import (
+        build_term_stats,
+        collection_stats,
+        term_frequencies,
+        tokenize_documents,
+    )
+
+    lang_col = "lang" if lang else None
+    cols = ["doc_id AS docid", "text"] + (["lang"] if lang else [])
+    docs = tokenize_documents(
+        _docs(spark, sf_dir).selectExpr(*cols), profile or SQL_SAFE_PROFILE
+    )
+    tf = term_frequencies(docs, lang_col)
+    coll = collection_stats(docs, lang_col)
+    stats = build_term_stats(tf, coll, lang_col, idf_plus_one=idf_plus_one)
+    return docs, tf, coll, stats
+
+
+def _rank_rounded(scored: DataFrame, k: int) -> DataFrame:
+    """(query_id, docid, score) -> (query_id, rank, doc_id, score): round
+    the score to 6 dp, THEN rank with the engine's topk_per_group (score
+    desc, id asc) — the harness rule that keeps ranks stable across the
+    two engines' float summation orders."""
     from pyspark.sql import functions as F
 
-    return _bm25_ranked(spark, sf_dir).filter(F.col("rank") <= 10).select(
+    from document_retrieval_spark.operators.topk import topk_per_group
+
+    rounded = scored.select(
+        "query_id", F.col("docid").alias("doc_id"),
+        F.round("score", 6).alias("score"),
+    )
+    return topk_per_group(rounded, ["query_id"], "score", "doc_id", k).select(
         "query_id", "rank", "doc_id", "score"
     )
 
 
-def _q_bm25_topk_standard(spark, sf_dir):
-    from pyspark.sql import functions as F
+def _q_doc_lengths(spark, sf_dir):
+    docs = _gate_tables(spark, sf_dir)[0]
+    return docs.selectExpr("docid AS doc_id", "dl")
 
-    return _bm25_ranked(spark, sf_dir, standard=True).filter(
-        F.col("rank") <= 10
-    ).select("query_id", "rank", "doc_id", "score")
+
+def _q_collection_stats(spark, sf_dir):
+    coll = _gate_tables(spark, sf_dir, lang=True)[2]
+    return coll.selectExpr("lang", "n_docs", "round(avgdl, 6) AS avgdl")
+
+
+def _q_term_stats(spark, sf_dir):
+    stats = _gate_tables(spark, sf_dir)[3]
+    return stats.selectExpr("term", "df", "round(idf, 6) AS idf")
+
+
+def _bm25_topk(spark, sf_dir, bm25=None, conjunctive=False):
+    """Top-10 from the engine's exhaustive scorer (bm25_scored_candidates)
+    under `bm25` (default BM25Config()) — shared by the plain, standard,
+    conjunctive and variant-3/5 gates and by the submission and metrics
+    gates."""
+    from document_retrieval_spark.config import BM25Config
+    from document_retrieval_spark.query.bm25 import bm25_scored_candidates
+
+    bm25 = bm25 or BM25Config()
+    docs, tf, _, stats = _gate_tables(
+        spark, sf_dir, idf_plus_one=bm25.idf_plus_one
+    )
+    return _rank_rounded(
+        bm25_scored_candidates(_query_terms(spark, bm25), tf, stats, docs,
+                               bm25, conjunctive=conjunctive),
+        10,
+    )
+
+
+def _q_bm25_topk(spark, sf_dir):
+    return _bm25_topk(spark, sf_dir)
+
+
+def _q_bm25_topk_standard(spark, sf_dir):
+    from document_retrieval_spark.config import BM25Config
+
+    return _bm25_topk(spark, sf_dir, BM25Config(length_norm="standard"))
 
 
 def _q_bm25_topk_conj(spark, sf_dir):
     """Conjunctive (boolean-AND) BM25 top-k: every distinct query term must
     occur in the doc (Lucene BooleanQuery MUST; the reference scorer is
-    disjunctive-only, `bm25_ranking.ipynb cell 3:31-39`). The matched-term
-    count rides the SAME (query_id, doc_id) aggregation as the score sum;
-    the per-query required count joins via broadcast — no extra shuffle."""
-    from pyspark.sql import functions as F
-
-    from document_retrieval_spark.config import SQL_SAFE_PROFILE, BM25Config
-    from document_retrieval_spark.operators.topk import topk_per_group
-    from document_retrieval_spark.query.bm25 import prepare_query_terms
-
-    bm25 = BM25Config()
-    tf = _tf_table(spark, sf_dir)
-    docs = _tok_docs(spark, sf_dir)
-    agg = docs.agg(
-        F.count("*").alias("n"), F.sum(F.size("toks")).alias("s")
-    ).collect()[0]
-    avgdl = float(agg["s"]) / agg["n"]
-    stats = _term_stats(spark, sf_dir, rounded=False)
-    qt = prepare_query_terms(_query_df(spark), SQL_SAFE_PROFILE, bm25)
-    n_terms = qt.groupBy("query_id").agg(F.count("*").alias("n_terms"))
-    term_score = (
-        F.col("idf")
-        * F.col("tf").cast("double")
-        * F.lit(bm25.k1 + 1.0)
-        / (
-            F.col("tf").cast("double")
-            + F.lit(bm25.k1)
-            * (F.lit(1.0 - bm25.b) + F.col("dl").cast("double") / F.lit(avgdl))
-        )
-    )
-    scored = (
-        tf.join(F.broadcast(qt), "term")
-        .join(F.broadcast(stats.select("term", "idf")), "term")
-        .withColumn("term_score", term_score)
-        .groupBy("query_id", "doc_id")
-        .agg(
-            F.round(F.sum("term_score"), 6).alias("score"),
-            F.count("*").alias("matched"),
-        )
-        .join(F.broadcast(n_terms), "query_id")
-        .filter(F.col("matched") == F.col("n_terms"))
-        .drop("matched", "n_terms")
-    )
-    return (
-        topk_per_group(scored, ["query_id"], "score", "doc_id", k=10**9)
-        .filter(F.col("rank") <= 10)
-        .select("query_id", "rank", "doc_id", "score")
-    )
+    disjunctive-only, `bm25_ranking.ipynb cell 3:31-39`)."""
+    return _bm25_topk(spark, sf_dir, conjunctive=True)
 
 
 def _q_phrase_topk(spark, sf_dir):
-    """Exact-phrase BM25 top-k (`query/phrase.py`): conjunctive candidates
-    from the inverted tf table — no token array is touched for a doc
-    missing any phrase term — then consecutive-slice adjacency verified
-    with JVM higher-order functions on the candidate set only. Scores are
-    the plain BM25 scores of the phrase's distinct terms (phrase = filter,
-    Lucene PhraseQuery-with-BM25 semantics)."""
-    from pyspark.sql import functions as F
-
+    """Exact-phrase BM25 top-k (`query/phrase.py::phrase_topk`):
+    conjunctive candidates from the inverted tf table, then
+    consecutive-slice adjacency verified on the candidate set only. Scores
+    are the plain BM25 scores of the phrase's distinct terms (phrase =
+    filter, Lucene PhraseQuery-with-BM25 semantics)."""
     from document_retrieval_spark.config import SQL_SAFE_PROFILE, BM25Config
-    from document_retrieval_spark.operators.topk import topk_per_group
     from document_retrieval_spark.query.phrase import (
-        phrase_match_expr,
+        phrase_topk,
         prepare_query_phrases,
     )
 
-    bm25 = BM25Config()
-    tf = _tf_table(spark, sf_dir)
-    docs = _tok_docs(spark, sf_dir)
-    agg = docs.agg(
-        F.count("*").alias("n"), F.sum(F.size("toks")).alias("s")
-    ).collect()[0]
-    avgdl = float(agg["s"]) / agg["n"]
-    stats = _term_stats(spark, sf_dir, rounded=False)
+    docs, tf, _, stats = _gate_tables(spark, sf_dir)
     qp = prepare_query_phrases(
         spark.createDataFrame(PHRASES, ["query_id", "query"]),
         SQL_SAFE_PROFILE,
     )
-    qt = qp.select(
-        "query_id", F.explode(F.array_distinct("ptoks")).alias("term")
-    )
-    n_terms = qt.groupBy("query_id").agg(F.count("*").alias("n_terms"))
-    term_score = (
-        F.col("idf")
-        * F.col("tf").cast("double")
-        * F.lit(bm25.k1 + 1.0)
-        / (
-            F.col("tf").cast("double")
-            + F.lit(bm25.k1)
-            * (F.lit(1.0 - bm25.b) + F.col("dl").cast("double") / F.lit(avgdl))
-        )
-    )
-    conj = (
-        tf.join(F.broadcast(qt), "term")
-        .join(F.broadcast(stats.select("term", "idf")), "term")
-        .withColumn("term_score", term_score)
-        .groupBy("query_id", "doc_id")
-        .agg(
-            F.round(F.sum("term_score"), 6).alias("score"),
-            F.count("*").alias("matched"),
-        )
-        .join(F.broadcast(n_terms), "query_id")
-        .filter(F.col("matched") == F.col("n_terms"))
-        .drop("matched", "n_terms")
-    )
-    verified = (
-        conj.join(docs.select("doc_id", "toks"), "doc_id")
-        .join(F.broadcast(qp), "query_id")
-        .filter(phrase_match_expr("toks", "ptoks"))
-        .select("query_id", "doc_id", "score")
-    )
-    return (
-        topk_per_group(verified, ["query_id"], "score", "doc_id", k=10**9)
-        .filter(F.col("rank") <= 10)
-        .select("query_id", "rank", "doc_id", "score")
+    return _rank_rounded(
+        phrase_topk(qp, tf, stats, docs, BM25Config(), k=_ALL), 10
     )
 
 
 def _q_bm25f_topk(spark, sf_dir):
     """Simple BM25F (Robertson/Zaragoza/Taylor CIKM'04) with a title/body
-    split (title = first 8 tokens): per-field weighted, length-normalized tf
-    summed into tf~ — a query-INDEPENDENT index-time artifact
-    (`bm25f_tf_tilde`) — then saturated once per term. The query path is
-    shape-identical to plain BM25: broadcast joins + one aggregation
-    shuffle. idf stays doc-level (shared with the plain stats table)."""
+    split (title = first 8 tokens): the engine's term_frequencies and
+    collection_stats keyed on the field give per-field tf and avgdl,
+    `bm25f_tf_tilde` folds them into the query-independent tf~, and
+    `bm25f_score` saturates it once per term with the doc-level idf."""
     from pyspark.sql import functions as F
 
-    from document_retrieval_spark.config import SQL_SAFE_PROFILE, BM25Config
-    from document_retrieval_spark.operators.topk import topk_per_group
-    from document_retrieval_spark.query.bm25 import (
-        bm25f_tf_tilde,
-        prepare_query_terms,
+    from document_retrieval_spark.config import BM25Config
+    from document_retrieval_spark.operators.stats import (
+        collection_stats,
+        term_frequencies,
     )
+    from document_retrieval_spark.query.bm25 import bm25f_score, bm25f_tf_tilde
 
     bm25 = BM25Config()
     tl = BM25F_TITLE_LEN
-    docs = _tok_docs(spark, sf_dir)
-    fields_df = docs.select(
-        "doc_id", F.lit("title").alias("field"),
-        F.slice("toks", 1, tl).alias("ftoks"),
+    docs, _, _, stats = _gate_tables(spark, sf_dir)
+    fields = docs.select(
+        "docid", F.lit("title").alias("field"),
+        F.slice("tokens", 1, tl).alias("tokens"),
     ).unionByName(
         docs.select(
-            "doc_id", F.lit("body").alias("field"),
+            "docid", F.lit("body").alias("field"),
             F.expr(
-                f"slice(toks, {tl + 1}, greatest(size(toks) - {tl}, 0))"
-            ).alias("ftoks"),
+                f"slice(tokens, {tl + 1}, greatest(size(tokens) - {tl}, 0))"
+            ).alias("tokens"),
         )
-    )
-    n_docs = docs.count()
-    sums = {
-        r["field"]: r["s"]
-        for r in fields_df.groupBy("field")
-        .agg(F.sum(F.size("ftoks")).alias("s"))
-        .collect()
+    ).withColumn("dl", F.size("tokens"))
+    favg = {
+        r["field"]: r["avgdl"]
+        for r in collection_stats(fields, "field").collect()
     }
-    favg = {f: sums[f] / n_docs for f in BM25F_FIELDS}
-    field_tf = (
-        fields_df.select(
-            "doc_id", "field", F.size("ftoks").alias("fdl"),
-            F.explode("ftoks").alias("term"),
-        )
-        .groupBy("doc_id", "field", "term")
-        .agg(F.any_value("fdl").alias("fdl"), F.count("*").alias("tf"))
+    field_tf = term_frequencies(fields, "field").join(
+        fields.selectExpr("docid", "field", "dl AS fdl"), ["docid", "field"]
     )
-    tft = bm25f_tf_tilde(field_tf, BM25F_FIELDS, favg, docid_col="doc_id")
-    stats = _term_stats(spark, sf_dir, rounded=False)
-    qt = prepare_query_terms(_query_df(spark), SQL_SAFE_PROFILE, bm25)
-    term_score = (
-        F.col("idf")
-        * F.col("tf_tilde")
-        * F.lit(bm25.k1 + 1.0)
-        / (F.lit(bm25.k1) + F.col("tf_tilde"))
-    )
-    scored = (
-        tft.join(F.broadcast(qt), "term")
-        .join(F.broadcast(stats.select("term", "idf")), "term")
-        .withColumn("term_score", term_score)
-        .groupBy("query_id", "doc_id")
-        .agg(F.round(F.sum("term_score"), 6).alias("score"))
-    )
-    return (
-        topk_per_group(scored, ["query_id"], "score", "doc_id", k=10**9)
-        .filter(F.col("rank") <= 10)
-        .select("query_id", "rank", "doc_id", "score")
+    tft = bm25f_tf_tilde(field_tf, BM25F_FIELDS, favg)
+    return _rank_rounded(
+        bm25f_score(_query_terms(spark), tft, stats, bm25, k=_ALL), 10
     )
 
 
@@ -1053,28 +944,13 @@ def _q_bm25_per_lang_topk(spark, sf_dir):
     from pyspark.sql import functions as F
 
     from document_retrieval_spark.config import SQL_SAFE_PROFILE, BM25Config
-    from document_retrieval_spark.operators.topk import topk_per_group
-    from document_retrieval_spark.query.bm25 import prepare_query_terms
+    from document_retrieval_spark.query.bm25 import (
+        bm25_scored_candidates,
+        prepare_query_terms,
+    )
 
     bm25 = BM25Config()
-    tf = _tf_table(spark, sf_dir, with_lang=True)
-    docs = _tok_docs(spark, sf_dir, with_lang=True)
-    coll = docs.groupBy("lang").agg(
-        F.count("*").alias("n_docs"),
-        (F.sum(F.size("toks")).cast("double") / F.count("*")).alias("avgdl"),
-    )
-    stats = (
-        tf.groupBy("lang", "term")
-        .agg(F.count("*").alias("df"))
-        .join(coll, "lang")
-        .withColumn(
-            "idf",
-            F.log1p(
-                (F.col("n_docs").cast("double") - F.col("df") + 0.5)
-                / (F.col("df") + 0.5)
-            ),
-        )
-    )
+    docs, tf, _, stats = _gate_tables(spark, sf_dir, lang=True)
     langs = spark.createDataFrame([(lg,) for lg in LANGS], ["lang"])
     q = (
         _query_df(spark)
@@ -1084,67 +960,24 @@ def _q_bm25_per_lang_topk(spark, sf_dir):
         )
     )
     qt = prepare_query_terms(q, SQL_SAFE_PROFILE, bm25, lang_col="lang")
-    term_score = (
-        F.col("idf")
-        * F.col("tf").cast("double")
-        * F.lit(bm25.k1 + 1.0)
-        / (
-            F.col("tf").cast("double")
-            + F.lit(bm25.k1)
-            * (F.lit(1.0 - bm25.b) + F.col("dl").cast("double") / F.col("avgdl"))
-        )
-    )
-    scored = (
-        tf.join(F.broadcast(qt), ["lang", "term"])
-        .join(stats.select("lang", "term", "idf", "avgdl"), ["lang", "term"])
-        .withColumn("term_score", term_score)
-        .groupBy("query_id", "doc_id")
-        .agg(F.round(F.sum("term_score"), 6).alias("score"))
-    )
-    return topk_per_group(scored, ["query_id"], "score", "doc_id", k=5).select(
-        "query_id", "rank", "doc_id", "score"
+    return _rank_rounded(
+        bm25_scored_candidates(qt, tf, stats, docs, bm25, lang_col="lang"), 5
     )
 
 
 def _q_cosine_topk(spark, sf_dir):
-    from pyspark.sql import functions as F
+    from document_retrieval_spark.query.cosine import cosine_topk
 
-    from document_retrieval_spark.config import SQL_SAFE_PROFILE, BM25Config
-    from document_retrieval_spark.operators.topk import topk_per_group
-    from document_retrieval_spark.query.bm25 import prepare_query_terms
-
-    tf = _tf_table(spark, sf_dir)
-    stats = _term_stats(spark, sf_dir, rounded=False)
-    qt = prepare_query_terms(_query_df(spark), SQL_SAFE_PROFILE, BM25Config())
-    dw = tf.join(stats.select("term", "idf"), "term").withColumn(
-        "w", F.col("tf").cast("double") * F.col("idf")
-    )
-    dn = dw.groupBy("doc_id").agg(F.sqrt(F.sum(F.col("w") * F.col("w"))).alias("dnorm"))
-    qw = qt.join(F.broadcast(stats.select("term", "idf")), "term").withColumn(
-        "qw", F.col("idf")
-    )
-    qn = qw.groupBy("query_id").agg(
-        F.sqrt(F.sum(F.col("qw") * F.col("qw"))).alias("qnorm")
-    )
-    dots = (
-        dw.join(F.broadcast(qw.select("query_id", "term", "qw")), "term")
-        .groupBy("query_id", "doc_id")
-        .agg(F.sum(F.col("w") * F.col("qw")).alias("dot"))
-    )
-    sims = (
-        dots.join(dn, "doc_id")
-        .join(F.broadcast(qn), "query_id")
-        .withColumn("score", F.round(F.col("dot") / (F.col("dnorm") * F.col("qnorm")), 6))
-    )
-    return topk_per_group(sims, ["query_id"], "score", "doc_id", 10).select(
-        "query_id", "rank", "doc_id", "score"
+    _, tf, _, stats = _gate_tables(spark, sf_dir)
+    return _rank_rounded(
+        cosine_topk(_query_terms(spark), tf, stats, k=_ALL), 10
     )
 
 
 def _q_bm25_submission(spark, sf_dir):
     from pyspark.sql import functions as F
 
-    ranked = _bm25_ranked(spark, sf_dir).filter(F.col("rank") <= 10)
+    ranked = _bm25_topk(spark, sf_dir)
     return (
         ranked.groupBy("query_id")
         .agg(
@@ -1165,143 +998,82 @@ def _q_bm25_submission(spark, sf_dir):
 
 
 def _q_retrieval_metrics(spark, sf_dir):
-    from pyspark.sql import functions as F
+    """Recall@1/5/10 and MRR@10 of the bm25_topk ranking, through the
+    engine's `recall_mrr`."""
+    from document_retrieval_spark.query.metrics import recall_mrr
 
-    ranked = _bm25_ranked(spark, sf_dir).filter(F.col("rank") <= 10)
-    truth = spark.createDataFrame(POSITIVES, ["query_id", "positive_doc"])
-    j = truth.join(ranked, "query_id", "left")
-    perq = j.groupBy("query_id").agg(
-        F.max(
-            F.when((F.col("rank") <= 1) & (F.col("doc_id") == F.col("positive_doc")), 1).otherwise(0)
-        ).alias("hit1"),
-        F.max(
-            F.when((F.col("rank") <= 5) & (F.col("doc_id") == F.col("positive_doc")), 1).otherwise(0)
-        ).alias("hit5"),
-        F.max(
-            F.when((F.col("rank") <= 10) & (F.col("doc_id") == F.col("positive_doc")), 1).otherwise(0)
-        ).alias("hit10"),
-        F.coalesce(
-            F.max(
-                F.when(
-                    (F.col("doc_id") == F.col("positive_doc")) & (F.col("rank") <= 10),
-                    1.0 / F.col("rank"),
-                )
-            ),
-            F.lit(0.0),
-        ).alias("rr"),
-    )
-    return perq.agg(
-        F.round(F.avg("hit1"), 6).alias("recall_1"),
-        F.round(F.avg("hit5"), 6).alias("recall_5"),
-        F.round(F.avg("hit10"), 6).alias("recall_10"),
-        F.round(F.avg("rr"), 6).alias("mrr_10"),
+    ranked = _bm25_topk(spark, sf_dir).withColumnRenamed("doc_id", "docid")
+    truth = spark.createDataFrame(POSITIVES, ["query_id", "positive_docs"])
+    return recall_mrr(ranked, truth).selectExpr(
+        "round(`recall@1`, 6) AS recall_1", "round(`recall@5`, 6) AS recall_5",
+        "round(`recall@10`, 6) AS recall_10", "round(`mrr@10`, 6) AS mrr_10",
     )
 
 
 def _q_rerank(spark, sf_dir):
+    """Cosine top-50 candidates cut on the ROUNDED cosine score (the
+    oracle's rule; `query/rerank.py::cosine_then_bm25` cuts on the
+    unrounded one), then the engine's BM25 over those candidates only
+    (semi-join prune — SURVEY J8)."""
     from pyspark.sql import functions as F
 
-    from document_retrieval_spark.config import SQL_SAFE_PROFILE, BM25Config
-    from document_retrieval_spark.operators.topk import topk_per_group
-    from document_retrieval_spark.query.bm25 import prepare_query_terms
+    from document_retrieval_spark.config import BM25Config
+    from document_retrieval_spark.query.bm25 import bm25_scored_candidates
     from document_retrieval_spark.query.cosine import cosine_topk
 
     bm25 = BM25Config()
-    tf = _tf_table(spark, sf_dir)
-    docs = _tok_docs(spark, sf_dir)
-    agg = docs.agg(F.count("*").alias("n"), F.sum(F.size("toks")).alias("s")).collect()[0]
-    avgdl = float(agg["s"]) / agg["n"]
-    stats = _term_stats(spark, sf_dir, rounded=False)
-    qt = prepare_query_terms(_query_df(spark), SQL_SAFE_PROFILE, bm25)
-    # stage 1: cosine candidates on ROUNDED scores (same rule as the oracle)
-    dw = tf.join(stats.select("term", "idf"), "term").withColumn(
-        "w", F.col("tf").cast("double") * F.col("idf")
+    docs, tf, _, stats = _gate_tables(spark, sf_dir)
+    qt = _query_terms(spark, bm25)
+    cand = _rank_rounded(cosine_topk(qt, tf, stats, k=_ALL), 50).select(
+        "query_id", F.col("doc_id").alias("docid")
     )
-    dn = dw.groupBy("doc_id").agg(F.sqrt(F.sum(F.col("w") * F.col("w"))).alias("dnorm"))
-    qw = qt.join(F.broadcast(stats.select("term", "idf")), "term").withColumn("qw", F.col("idf"))
-    qn = qw.groupBy("query_id").agg(F.sqrt(F.sum(F.col("qw") * F.col("qw"))).alias("qnorm"))
-    csims = (
-        dw.join(F.broadcast(qw.select("query_id", "term", "qw")), "term")
-        .groupBy("query_id", "doc_id")
-        .agg(F.sum(F.col("w") * F.col("qw")).alias("dot"))
-        .join(dn, "doc_id")
-        .join(F.broadcast(qn), "query_id")
-        .withColumn("cscore", F.round(F.col("dot") / (F.col("dnorm") * F.col("qnorm")), 6))
+    scored = bm25_scored_candidates(qt, tf, stats, docs, bm25).join(
+        cand, ["query_id", "docid"], "leftsemi"
     )
-    cand = topk_per_group(csims, ["query_id"], "cscore", "doc_id", 50).select(
-        "query_id", "doc_id"
-    )
-    # stage 2: BM25 over candidates only (semi-join prune — SURVEY J8)
-    term_score = (
-        F.col("idf") * F.col("tf").cast("double") * F.lit(bm25.k1 + 1.0)
-        / (F.col("tf").cast("double")
-           + F.lit(bm25.k1) * (F.lit(1.0 - bm25.b) + F.col("dl").cast("double") / F.lit(avgdl)))
-    )
-    scored = (
-        tf.join(F.broadcast(qt), "term")
-        .join(F.broadcast(stats.select("term", "idf")), "term")
-        .join(cand, ["query_id", "doc_id"], "leftsemi")
-        .withColumn("term_score", term_score)
-        .groupBy("query_id", "doc_id")
-        .agg(F.round(F.sum("term_score"), 6).alias("score"))
-    )
-    return topk_per_group(scored, ["query_id"], "score", "doc_id", 10).select(
-        "query_id", "rank", "doc_id", "score"
-    )
+    return _rank_rounded(scored, 10)
 
 
 def _q_candidate_union(spark, sf_dir):
     from pyspark.sql import functions as F
 
-    from document_retrieval_spark.config import SQL_SAFE_PROFILE, BM25Config
-    from document_retrieval_spark.query.bm25 import prepare_query_terms
-
-    qt = prepare_query_terms(_query_df(spark), SQL_SAFE_PROFILE, BM25Config())
-    tf = _tf_table(spark, sf_dir)
+    tf = _gate_tables(spark, sf_dir)[1]
     return (
-        tf.join(F.broadcast(qt), "term")
+        tf.join(F.broadcast(_query_terms(spark)), "term")
         .groupBy("query_id")
-        .agg(F.countDistinct("doc_id").alias("n_candidates"))
+        .agg(F.countDistinct("docid").alias("n_candidates"))
     )
 
 
 def _q_unigram_lm(spark, sf_dir):
     from pyspark.sql import functions as F
 
-    from document_retrieval_spark.config import SQL_SAFE_PROFILE, BM25Config
-    from document_retrieval_spark.operators.topk import topk_per_group
-    from document_retrieval_spark.query.bm25 import prepare_query_terms
-
-    qt = prepare_query_terms(_query_df(spark), SQL_SAFE_PROFILE, BM25Config())
-    tf = _tf_table(spark, sf_dir)
-    vocab = tf.select("term").distinct()
+    qt = _query_terms(spark)
+    docs, tf, _, stats = _gate_tables(spark, sf_dir)
+    # stats holds one row per vocabulary term
     qn = (
-        qt.join(vocab, "term")
+        qt.join(stats.select("term"), "term")
         .groupBy("query_id")
         .agg(F.count("*").alias("n_terms"))
     )
     m = (
         tf.join(F.broadcast(qt), "term")
-        .groupBy("query_id", "doc_id")
+        .join(docs.select("docid", "dl"), "docid")
+        .groupBy("query_id", "docid")
         .agg(
             F.count("*").alias("n_matched"),
-            F.round(
-                F.sum(F.log(F.col("tf").cast("double") / F.col("dl"))), 6
-            ).alias("score"),
+            F.sum(F.log(F.col("tf").cast("double") / F.col("dl"))).alias("score"),
         )
     )
     full = m.join(F.broadcast(qn), "query_id").filter(
         F.col("n_matched") == F.col("n_terms")
     )
-    return topk_per_group(full, ["query_id"], "score", "doc_id", 10).select(
-        "query_id", "rank", "doc_id", "score"
-    )
+    return _rank_rounded(full, 10)
 
 
 def _q_vocab_stats(spark, sf_dir):
     from pyspark.sql import functions as F
 
-    tf = _tf_table(spark, sf_dir, with_lang=True)
+    tf = _gate_tables(spark, sf_dir, lang=True)[1]
     return tf.groupBy("lang").agg(
         F.countDistinct("term").alias("n_terms"),
         F.sum("tf").alias("total_tokens"),
@@ -1352,18 +1124,14 @@ def _q_minhash_signatures(spark, sf_dir):
 
 
 def _q_simhash(spark, sf_dir):
-    from pyspark.sql import functions as F
-
     from document_retrieval_spark.operators.dedup import (
         shingle_dictionary,
         simhash_signatures,
     )
 
-    toks = _tok_docs(spark, sf_dir)
-    sh_tf = (
-        toks.select("doc_id", F.explode("toks").alias("shingle"))
-        .groupBy("doc_id", "shingle")
-        .agg(F.count("*").alias("tf"))
+    # unigram shingles: the engine's term frequencies are the shingle counts
+    sh_tf = _gate_tables(spark, sf_dir)[1].selectExpr(
+        "docid AS doc_id", "term AS shingle", "tf"
     )
     d = shingle_dictionary(sh_tf.select("shingle").distinct())
     return simhash_signatures(sh_tf, d, bits=64)
@@ -1482,66 +1250,21 @@ def _q_lang_id(spark, sf_dir):
 
 
 def _q_doc_fingerprint(spark, sf_dir):
-    from pyspark.sql import functions as F
-
-    return _tok_docs(spark, sf_dir).select(
-        "doc_id", F.md5(F.array_join("toks", " ")).alias("fp")
-    )
+    docs = _gate_tables(spark, sf_dir)[0]
+    return docs.selectExpr("docid AS doc_id", "md5(array_join(tokens, ' ')) AS fp")
 
 
-def _bm25_variant_ranked(spark, sf_dir, dl_mode: str):
+def _bm25_variant(dl_mode: str):
     """BM25 variants 3 ('query_terms' dl) and 5 ('full' dl) — SURVEY §2.9:
     idf WITHOUT the +1 (negative for df > N/2 — exhaustive scorer only, WAND
     bounds don't hold), standard b*dl/avgdl, duplicate query terms each
     scored (the reference's literal `for term in query` loops,
     `cosine_similarity_bm25_reranking.py:185-195`,
     `text_preprocessing_and_stopwords_setup.py:178-188`)."""
-    from pyspark.sql import Window
-    from pyspark.sql import functions as F
+    from document_retrieval_spark.config import BM25Config
 
-    from document_retrieval_spark.config import SQL_SAFE_PROFILE, BM25Config
-    from document_retrieval_spark.operators.topk import topk_per_group
-    from document_retrieval_spark.query.bm25 import prepare_query_terms
-
-    bm25 = BM25Config(length_norm="standard", idf_plus_one=False,
+    return BM25Config(length_norm="standard", idf_plus_one=False,
                       unique_query_terms=False, dl_mode=dl_mode)
-    tf = _tf_table(spark, sf_dir)
-    docs = _tok_docs(spark, sf_dir)
-    agg = docs.agg(
-        F.count("*").alias("n"), F.sum(F.size("toks")).alias("s")
-    ).collect()[0]
-    n_docs, avgdl = agg["n"], float(agg["s"]) / agg["n"]
-    stats = tf.groupBy("term").agg(F.count("*").alias("df")).withColumn(
-        "idf",
-        F.log((F.lit(float(n_docs)) - F.col("df") + 0.5) / (F.col("df") + 0.5)),
-    )
-    qt = prepare_query_terms(_query_df(spark), SQL_SAFE_PROFILE, bm25)
-    joined = tf.join(F.broadcast(qt), "term").join(
-        F.broadcast(stats.select("term", "idf")), "term"
-    )
-    dl_eff = F.col("dl").cast("double")
-    if dl_mode == "query_terms":
-        w = Window.partitionBy("query_id", "doc_id")
-        dl_eff = F.sum("tf").over(w).cast("double")
-    joined = joined.withColumn("dl_eff", dl_eff)
-    term_score = (
-        F.col("idf")
-        * F.col("tf").cast("double")
-        * F.lit(bm25.k1 + 1.0)
-        / (
-            F.col("tf").cast("double")
-            + F.lit(bm25.k1)
-            * (F.lit(1.0 - bm25.b) + F.lit(bm25.b) * F.col("dl_eff") / F.lit(avgdl))
-        )
-    )
-    scored = (
-        joined.withColumn("term_score", term_score)
-        .groupBy("query_id", "doc_id")
-        .agg(F.round(F.sum("term_score"), 6).alias("score"))
-    )
-    return topk_per_group(scored, ["query_id"], "score", "doc_id", k=10).select(
-        "query_id", "rank", "doc_id", "score"
-    )
 
 
 def _q_bm25_topk_docpart(spark, sf_dir):
@@ -1551,58 +1274,35 @@ def _q_bm25_topk_docpart(spark, sf_dir):
     then re-ranked on the rounded score (gate convention: rank on round6,
     tie doc_id asc). Shares bm25_topk's oracle SQL: the index round-trip and
     both WAND layouts must reproduce the plain-join scorer exactly."""
-    from pyspark.sql import functions as F
-
-    from document_retrieval_spark.config import (
-        SQL_SAFE_PROFILE,
-        BM25Config,
-        IndexConfig,
-    )
+    from document_retrieval_spark.config import BM25Config, IndexConfig
     from document_retrieval_spark.operators.postings import (
         assign_doc_ordinals,
         build_postings,
     )
-    from document_retrieval_spark.operators.topk import topk_per_group
-    from document_retrieval_spark.query.bm25 import prepare_query_terms
     from document_retrieval_spark.query.wand import wand_topk_docpart
 
     bm25 = BM25Config()
-    tf = _tf_table(spark, sf_dir)
-    docs = _tok_docs(spark, sf_dir)
-    agg = docs.agg(
-        F.count("*").alias("n"), F.sum(F.size("toks")).alias("s")
-    ).collect()[0]
-    n_docs, avgdl = int(agg["n"]), float(agg["s"]) / int(agg["n"])
-    coll = spark.createDataFrame([(n_docs, avgdl)], "n_docs long, avgdl double")
-    stats = _term_stats(spark, sf_dir, rounded=False)
-    doc_map = assign_doc_ordinals(docs.select(F.col("doc_id").alias("docid")))
-    tf_ord = tf.select(
-        F.col("doc_id").alias("docid"), "term", "tf", "dl"
-    ).join(doc_map, "docid")
+    docs, tf, coll, stats = _gate_tables(spark, sf_dir)
+    doc_map = assign_doc_ordinals(docs.select("docid", "dl"))
     # small blocks/segments so the gate exercises multi-block and
     # multi-segment (salted hot term) paths on the 500-doc table
     postings = build_postings(
-        tf_ord, stats, IndexConfig(n_shards=8, salt_df_threshold=50,
-                                   n_salts=4, block_size=32),
-        bm25, seg_postings=256, avgdl_by_lang=avgdl,
+        tf.join(doc_map, "docid"), stats,
+        IndexConfig(n_shards=8, salt_df_threshold=50, n_salts=4,
+                    block_size=32),
+        bm25, seg_postings=256,
     )
-    qt = prepare_query_terms(_query_df(spark), SQL_SAFE_PROFILE, bm25)
-    res = wand_topk_docpart(qt, postings, doc_map, coll, bm25, k=30,
-                            n_buckets=8)
-    rr = res.select(
-        "query_id", F.col("docid").alias("doc_id"), F.round("score", 6).alias("score")
-    )
-    return topk_per_group(rr, ["query_id"], "score", "doc_id", k=10).select(
-        "query_id", "rank", "doc_id", "score"
-    )
+    res = wand_topk_docpart(_query_terms(spark, bm25), postings, doc_map,
+                            coll, bm25, k=30, n_buckets=8)
+    return _rank_rounded(res, 10)
 
 
 def _q_bm25_topk_v3(spark, sf_dir):
-    return _bm25_variant_ranked(spark, sf_dir, dl_mode="query_terms")
+    return _bm25_topk(spark, sf_dir, _bm25_variant("query_terms"))
 
 
 def _q_bm25_topk_v5(spark, sf_dir):
-    return _bm25_variant_ranked(spark, sf_dir, dl_mode="full")
+    return _bm25_topk(spark, sf_dir, _bm25_variant("full"))
 
 
 def _stemmed_tf_path(sf_dir: str) -> str:
@@ -1676,7 +1376,7 @@ def _q_bm25_topk_stemmed(spark, sf_dir):
     `text_preprocessing_and_tfidf.py:29`), hermetic pure-Python stemmer
     (functions/stem.py). DuckDB cannot stem offline (no fts extension), so
     the DETERMINISTIC stemmed tf table is materialized engine-side under
-    .staged/stemmed_tf/<sf>/ and BOTH sides score from that same parquet:
+    .staged/stemmed_tf/<sf>/ from the same tf table the engine scores:
     the oracle twin (read_parquet) hash-checks the whole scoring pipeline,
     while stemmer correctness itself is covered by the differential tests
     in tests/test_stem.py (engine vs independent NumPy/pure-Python oracle).
@@ -1719,65 +1419,24 @@ def _write_staged(df: DataFrame, path: str) -> None:
 
 
 def _staged_tf_topk(spark, sf_dir, profile, path):
-    """Shared engine side of the staged-analyzed-tf gates: tokenize with
-    the analyzer profile, stage (doc_id, term, tf, dl) byte-stably
-    (`_write_staged`), then score BM25 from the staged parquet."""
+    """Shared engine side of the staged-analyzed-tf gates: build the gate
+    tables under the analyzer profile, stage (doc_id, term, tf, dl)
+    byte-stably (`_write_staged`) for the oracle, then score BM25 through
+    the engine's exhaustive scorer."""
     from pyspark.sql import functions as F
 
     from document_retrieval_spark.config import BM25Config
-    from document_retrieval_spark.operators.stats import (
-        term_frequencies,
-        tokenize_documents,
-    )
-    from document_retrieval_spark.operators.topk import topk_per_group
-    from document_retrieval_spark.query.bm25 import (
-        bm25_term_score,
-        prepare_query_terms,
-    )
+    from document_retrieval_spark.query.bm25 import bm25_scored_candidates
 
     bm25 = BM25Config()
-    docs = tokenize_documents(
-        _docs(spark, sf_dir).selectExpr("doc_id as docid", "text"), profile
-    )
-    staged = (
-        term_frequencies(docs)
-        .join(docs.select("docid", "dl"), "docid")
-        .select(
-            F.col("docid").alias("doc_id"), "term", "tf",
-            F.col("dl").cast("int").alias("dl"),
-        )
+    docs, tf, _, stats = _gate_tables(spark, sf_dir, profile=profile)
+    staged = tf.join(docs.select("docid", "dl"), "docid").select(
+        F.col("docid").alias("doc_id"), "term", "tf",
+        F.col("dl").cast("int").alias("dl"),
     )
     _write_staged(staged, path)  # eager stage
-
-    tf = spark.read.parquet(path)
-    per_doc = tf.select("doc_id", "dl").distinct()
-    agg = per_doc.agg(
-        F.count("*").alias("n"), F.sum("dl").alias("s")
-    ).collect()[0]
-    n_docs, avgdl = int(agg["n"]), float(agg["s"]) / int(agg["n"])
-    stats = (
-        tf.groupBy("term")
-        .agg(F.count("*").alias("df"))
-        .withColumn(
-            "idf",
-            F.log1p(
-                (F.lit(float(n_docs)) - F.col("df") + 0.5)
-                / (F.col("df") + 0.5)
-            ),
-        )
-    )
-    qt = prepare_query_terms(_query_df(spark), profile, bm25)
-    scored = (
-        tf.join(F.broadcast(qt.select("query_id", "term")), "term")
-        .join(F.broadcast(stats.select("term", "idf")), "term")
-        .withColumn("avgdl", F.lit(avgdl))
-        .withColumn("term_score", bm25_term_score(bm25))
-        .groupBy("query_id", "doc_id")
-        .agg(F.round(F.sum("term_score"), 6).alias("score"))
-    )
-    return topk_per_group(scored, ["query_id"], "score", "doc_id", k=10).select(
-        "query_id", "rank", "doc_id", "score"
-    )
+    qt = _query_terms(spark, bm25, profile)
+    return _rank_rounded(bm25_scored_candidates(qt, tf, stats, docs, bm25), 10)
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:

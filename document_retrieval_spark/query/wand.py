@@ -280,6 +280,14 @@ def _wand_one_query_blocked(
             break  # no remaining doc anywhere can beat theta
         strip_end = min(c.block_last_ahead(w) for c in alive)
         overlapping = [c for c in alive if c.cur_doc() <= strip_end]
+        if not overlapping:
+            # the cursor that set strip_end overlaps it whenever a block's
+            # stored `last` covers its decoded ordinals; with none
+            # overlapping, no cursor would advance and the loop would spin
+            raise ValueError(
+                "inconsistent postings blocks: a block's stored `last` "
+                f"({strip_end}) is below its decoded doc ordinals"
+            )
         strip_ub = 0.0
         for c in overlapping:
             strip_ub += c.block_ub_ahead(w)
@@ -497,15 +505,11 @@ def _touched_segments(
             .limit(max_pushdown_terms + 1)
             .collect()
         ]
+    # Above the cap there is no IN-list: the broadcast join below already
+    # drops every segment of an untouched term, only without the scan
+    # pushdown.
     if len(terms) <= max_pushdown_terms:
         postings = postings.filter(F.col("term").isin(list(terms)))
-    else:
-        # huge batch: broadcast semi-join prune instead of a 50k-literal IN
-        # (no parquet pushdown, but still reads/joins only touched terms)
-        postings = postings.join(
-            F.broadcast(query_terms.select("term").distinct()), "term",
-            "leftsemi",
-        )
     touched = postings.join(F.broadcast(query_terms), join_keys)
     if lang_col:
         touched = touched.join(

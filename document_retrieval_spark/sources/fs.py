@@ -35,9 +35,15 @@ def is_remote(path: str) -> bool:
 
 
 def fs_for(spark, path: str):
-    """Pick the FS implementation for a path: URI schemes go through
-    Hadoop, plain paths through os/shutil."""
-    return HadoopFS(spark) if is_remote(path) else LocalFS()
+    """Pick the FS implementation for a path the way Spark resolves it: a
+    plain path lives on `fs.defaultFS`, so it goes through os/shutil only
+    when that is the local filesystem; URI schemes and plain paths on any
+    other default filesystem (HDFS on a cluster) go through Hadoop."""
+    if is_remote(path):
+        return HadoopFS(spark)
+    conf = spark.sparkContext._jsc.hadoopConfiguration()
+    local = conf.get("fs.defaultFS", "file:///").startswith("file:")
+    return LocalFS() if local else HadoopFS(spark)
 
 
 class LocalFS:

@@ -1,8 +1,11 @@
-"""Differential tests for the corpus-curation analysis ops added in round 5:
-Gopher/MassiveText repetition stats and deterministic hash sampling — the
-Spark gate vs its DuckDB oracle SQL on the sf0.001 documents table (the same
-comparison the driver runs at sf0.01), plus row-local unit checks, and the
-byte-stability of the staged-tf table the stemmed/lemma gates score from.
+"""Differential tests of the driver gates: each gate that scores through
+the engine's operators (statistics, BM25 and its variants, BM25F, phrase,
+cosine, rerank, metrics) and the corpus-curation ops (Gopher/MassiveText
+repetition stats, deterministic hash sampling), Spark vs its DuckDB oracle
+SQL on the sf0.001 documents table (the same comparison the driver runs at
+sf0.01); plus row-local unit checks, and the byte-stability of the
+staged-tf table the stemmed/lemma gates score from. The stemmed and lemma
+gates are not compared here: their oracles read the sf0.01 stage.
 """
 
 from __future__ import annotations
@@ -36,7 +39,19 @@ def _canon(df: pd.DataFrame) -> pd.DataFrame:
     )
 
 
-@pytest.mark.parametrize("gate", ["repetition_stats", "sample_deterministic"])
+ENGINE_GATES = [
+    "doc_lengths", "collection_stats", "term_stats", "bm25_topk",
+    "bm25_topk_docpart", "bm25_topk_standard", "bm25_topk_conj", "bm25f_topk",
+    "phrase_topk", "bm25_topk_v3", "bm25_topk_v5", "bm25_per_lang_topk",
+    "cosine_topk", "bm25_submission", "retrieval_metrics",
+    "rerank_cosine_bm25", "candidate_union", "unigram_lm_topk", "vocab_stats",
+    "simhash_signatures", "doc_fingerprint",
+]
+
+
+@pytest.mark.parametrize(
+    "gate", ENGINE_GATES + ["repetition_stats", "sample_deterministic"]
+)
 def test_curation_gate_matches_duckdb_oracle(spark, gate):
     got = _canon(entry_mod.queries()[gate](spark, SF).toPandas())
     want = _canon(_oracle(entry_mod.oracle_sql()[gate]))

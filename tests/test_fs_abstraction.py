@@ -5,6 +5,8 @@ path hdfs:// and s3a:// take) instead of POSIX os/shutil calls."""
 
 from __future__ import annotations
 
+from types import SimpleNamespace
+
 import pytest
 
 from document_retrieval_spark.config import EngineConfig, IndexConfig
@@ -18,6 +20,21 @@ def test_fs_selection(spark):
     assert isinstance(fs_for(spark, "file:///tmp/x"), HadoopFS)
     assert isinstance(fs_for(spark, "hdfs://nn/x"), HadoopFS)
     assert isinstance(fs_for(spark, "s3a://bucket/x"), HadoopFS)
+
+
+def test_fs_selection_follows_default_fs():
+    """A plain path lives on fs.defaultFS, as Spark's writers resolve it:
+    on an HDFS-default cluster it must go through Hadoop, not os/shutil."""
+
+    def session(default_fs):
+        conf = SimpleNamespace(get=lambda key, dflt=None: (
+            default_fs if key == "fs.defaultFS" else dflt))
+        jsc = SimpleNamespace(hadoopConfiguration=lambda: conf)
+        return SimpleNamespace(sparkContext=SimpleNamespace(
+            _jsc=jsc, _jvm=None, _gateway=None))
+
+    assert isinstance(fs_for(session("hdfs://nn:8020"), "/idx"), HadoopFS)
+    assert isinstance(fs_for(session("file:///"), "/idx"), LocalFS)
 
 
 def test_hadoopfs_ops_roundtrip(spark, tmp_path):

@@ -67,8 +67,9 @@ def test_builder_persists_term_keyed_tables(spark, built):
 
 def test_id_pushdown_matches_string_path(spark, index, tdict, queries_df):
     """wand_topk answers the same with and without term_dict=, through the
-    IN-list probe and the semi-join probe (max_pushdown_terms=2), and on a
-    postings frame that still carries a legacy `term_id` column."""
+    IN-list probe and, above max_pushdown_terms=2, the bare broadcast-join
+    probe (no semi-join), and on a postings frame that still carries a
+    legacy `term_id` column."""
     from pyspark.sql import functions as F
 
     qt = prepare_query_terms(queries_df, REFERENCE_PROFILE, BM25)
@@ -80,10 +81,11 @@ def test_id_pushdown_matches_string_path(spark, index, tdict, queries_df):
         got = wand_topk(qt, index.postings, index.doc_map, index.coll, BM25,
                         k=10, **kw)
         assert _rows(got) == want
-        semi = wand_topk(qt, index.postings, index.doc_map, index.coll, BM25,
-                         k=10, max_pushdown_terms=2, **kw)
-        assert "LeftSemi" in semi._jdf.queryExecution().executedPlan().toString()
-        assert _rows(semi) == want
+        capped = wand_topk(qt, index.postings, index.doc_map, index.coll,
+                           BM25, k=10, max_pushdown_terms=2, **kw)
+        plan = capped._jdf.queryExecution().executedPlan().toString()
+        assert "LeftSemi" not in plan
+        assert _rows(capped) == want
     # an index written by an older build still carries term_id, shard,
     # seg_id and n_segs columns; the probe selects by name and ignores them
     legacy = index.postings.select(

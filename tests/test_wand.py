@@ -127,8 +127,8 @@ def test_wand_explicit_term_list_short_circuits_collect(built, queries_df):
 
 
 def test_wand_semijoin_prune_above_pushdown_cap(built, queries_df):
-    """Above max_pushdown_terms the IN-literal pushdown is replaced by a
-    broadcast semi-join prune (NOT no pruning at all); results identical."""
+    """Above max_pushdown_terms the probe drops the IN-literal pushdown and
+    leaves pruning to the broadcast query-term join; results identical."""
     docs, docs_ord, tf, coll, stats, postings = built
     bm25 = BM25Config()
     qt = prepare_query_terms(queries_df, REFERENCE_PROFILE, bm25)

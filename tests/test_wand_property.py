@@ -8,9 +8,11 @@ several segments per term."""
 from __future__ import annotations
 
 import math
+import signal
 
 import numpy as np
 import pyarrow as pa
+import pytest
 
 from document_retrieval_spark.config import BM25Config
 from document_retrieval_spark.query.wand import (
@@ -124,3 +126,30 @@ def test_blocked_kernel_bit_identical_to_perdoc():
         assert got_c == want, (trial, lo, hi)
         got_d = _wand_one_query_blocked(mk(lo=lo, hi=hi, docpart=True), k)
         assert got_d == want, ("docpart", trial, lo, hi)
+
+
+def test_inconsistent_block_last_raises():
+    """A block whose stored `last` sits below its decoded doc ordinals
+    leaves no cursor overlapping the strip: the kernel raises instead of
+    looping with no work. SIGALRM turns a spin into a failure."""
+    rng = np.random.default_rng(0)
+    terms = [
+        (1.0 + i, [(o, int(rng.integers(1, 5)), int(rng.integers(5, 60)))
+                   for o in sorted(rng.choice(200, 60, replace=False).tolist())])
+        for i in range(2)
+    ]
+    rows = touched_table(terms, 8, 32, np.random.default_rng(1)).to_pylist()
+    rows[0]["blocks"][1]["last"] -= 5
+    bad = pa.Table.from_pylist(rows, schema=TOUCHED)
+
+    def spin(*_):
+        raise TimeoutError("WAND kernel did not return")
+
+    old = signal.signal(signal.SIGALRM, spin)
+    signal.alarm(20)
+    try:
+        with pytest.raises(ValueError, match="inconsistent postings blocks"):
+            _wand_one_query_blocked(_cursors_from_arrow(bad, BM25, AVGDL), 3)
+    finally:
+        signal.alarm(0)
+        signal.signal(signal.SIGALRM, old)

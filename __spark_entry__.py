@@ -361,7 +361,7 @@ def _stemmed_bm25_sql() -> str:
     (re)writes this table deterministically whenever the gate runs."""
     return _staged_tf_bm25_sql(
         os.path.join(_stemmed_tf_path("sf0.01"), "*.parquet"),
-        _stemmed_query_values(),
+        _analyzed_query_values(_stemmed_profile()),
     )
 
 
@@ -373,7 +373,7 @@ def _lemma_bm25_sql() -> str:
     tests/test_lemma.py pinned vectors + nltk differential."""
     return _staged_tf_bm25_sql(
         os.path.join(_lemma_tf_path("sf0.01"), "*.parquet"),
-        _lemma_query_values(),
+        _analyzed_query_values(_lemma_profile()),
     )
 
 
@@ -1337,38 +1337,18 @@ def _lemma_profile():
     )
 
 
-def _analyzed_query_values(token_fn) -> str:
-    """The inline QUERIES run through a per-token analyzer, rendered as SQL
-    VALUES — the oracle twin's query side for staged-tf gates."""
-    import re
+def _analyzed_query_values(profile) -> str:
+    """The inline QUERIES run through the analyzer (`oracle_tokenize`, the
+    function the engine's tokenizer UDF maps) under `profile`, distinct
+    terms in first-seen order, rendered as SQL VALUES — the oracle twin's
+    query side for staged-tf gates."""
+    from document_retrieval_spark.oracle import oracle_tokenize
 
     rows = []
     for qid, qtext in QUERIES:
-        toks = [
-            t
-            for t in re.sub(r"[^a-zA-Z0-9\s]", " ", qtext.lower()).split()
-            if t
-        ]
-        for out in dict.fromkeys(token_fn(t) for t in toks):
+        for out in dict.fromkeys(oracle_tokenize(qtext, profile)):
             rows.append(f"('{qid}', '{out}')")
     return ", ".join(rows)
-
-
-def _stemmed_query_values() -> str:
-    """QUERIES stemmed with the SAME hermetic Porter pipeline the engine
-    uses."""
-    from document_retrieval_spark.functions.stem import porter_stem
-
-    return _analyzed_query_values(porter_stem)
-
-
-def _lemma_query_values() -> str:
-    """QUERIES lemmatized with the SAME hermetic WordNet-morphy the engine
-    uses (nltk is absent in this container, so the engine's fallback IS
-    morphy — deterministic on both sides)."""
-    from document_retrieval_spark.functions.morphy import morphy_noun
-
-    return _analyzed_query_values(morphy_noun)
 
 
 def _q_bm25_topk_stemmed(spark, sf_dir):

@@ -64,7 +64,11 @@ class TokenizerConfig:
     # Append '_'-joined word bigrams to the unigram stream
     # (`bm25_ranking.ipynb cell 1:23-25`, fr/de/es/it path).
     bigrams: bool = False
-    # Lemmatize/stem hooks (pandas-UDF path only; require nltk — gated).
+    # Lemmatize/stem steps, applied after stopwords in both split modes
+    # (pandas-UDF path only; hermetic, no nltk): lemmatize = WordNet-morphy
+    # nouns; stem_lang = "porter", "korean"/"ko", or a Snowball language
+    # ("fr"/"french", "de"/"german", "es"/"spanish", "it"/"italian").
+    # Any other stem_lang raises ValueError.
     lemmatize: bool = False
     stem_lang: str | None = None
 

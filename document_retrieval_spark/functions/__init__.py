@@ -2,6 +2,5 @@ from .text import tokenize_expr, tokenize_pandas_udf, squeeze_ws  # noqa: F401
 from .analysis import (  # noqa: F401
     add_quality_columns,
     lang_id_expr,
-    simhash64,
     token_count_expr,
 )

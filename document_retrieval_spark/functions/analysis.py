@@ -198,9 +198,3 @@ def deterministic_sample(
         ).cast("bigint") % 10_000
     )
     return df.filter(bucket < int(round(fraction * 10_000)))
-
-
-def simhash64(tokens: Column, term_hash: Column) -> Column:  # pragma: no cover
-    """Placeholder marker — real SimHash lives in operators/dedup.py where the
-    term-dictionary id assignment makes it oracle-comparable."""
-    raise NotImplementedError("use operators.dedup.simhash_signatures")

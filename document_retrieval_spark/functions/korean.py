@@ -17,8 +17,8 @@ word stems) built from public knowledge of Hangul:
 This is explicitly NOT a morphological analyzer — verbs stay inflected,
 ambiguous particle-lookalike syllables may be stripped. It exists so the
 per-language pipeline (tokenize -> stats -> postings -> BM25) is real and
-testable end-to-end for Korean text; konlpy slots in as an optional
-upgrade in functions/text.py when importable.
+testable end-to-end for Korean text; it is the analyzer's only Korean
+path (`stem_lang="korean"`/`"ko"`), on the engine and oracle sides alike.
 """
 
 from __future__ import annotations

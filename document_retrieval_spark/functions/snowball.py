@@ -4,8 +4,8 @@ SnowballStemmer). Implemented from M.F. Porter's published Snowball
 algorithm descriptions (snowballstem.org, public domain) so no nltk
 download is ever needed — the Porter playbook of functions/stem.py
 repeated for the four languages the reference's multilingual run uses.
-nltk remains an optional upgrade path in functions/text.py; it is off
-every default path.
+The analyzer (`oracle.bm25.stemmer`) uses these for every Snowball
+`stem_lang`; nltk is never imported.
 
 Each stemmer follows the originally-published algorithm revision (later
 site amendments — e.g. the French He/Hi vowel-marking addendum — are not

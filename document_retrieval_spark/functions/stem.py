@@ -8,12 +8,13 @@ algorithm itself: M.F. Porter, "An algorithm for suffix stripping", Program
 original 1980 variant (no later official-website revisions such as
 logi->log, which nltk's NLTK_EXTENSIONS mode also applies). `stem_lang=
 "porter"` ALWAYS uses this implementation — deterministic across
-environments, which the oracle-parity harness requires; nltk Snowball is
-used only for the other stem languages (fr/de/es/it), where no hermetic
-implementation exists and absence degrades to identity.
+environments, which the oracle-parity harness requires; the other stem
+languages are the hermetic Snowball stemmers (functions/snowball.py) and
+the Korean stand-in (functions/korean.py), and nltk is never imported.
 
-Applied token-at-a-time inside the Arrow-batched tokenizer UDF — the
-per-token semantics, NOT the reference's buggy whole-string
+Applied token-at-a-time by the analyzer (`oracle.bm25.oracle_tokenize`,
+which the Arrow-batched tokenizer UDF maps) — the per-token semantics,
+NOT the reference's buggy whole-string
 `text.replace(word, stem)` variant (`cosine_similarity_bm25_reranking.py:58-60`,
 SURVEY §2.3 F4c note).
 """

@@ -5,10 +5,11 @@ SURVEY.md §2.3, in two flavors:
    whole-stage-codegen'd; zero Python in the hot path). This is the default
    engine tokenizer for every config expressible natively (all of them except
    lemmatize/stem).
-2. ``tokenize_pandas_udf`` — Arrow-batched pandas UDF that calls the SAME
-   oracle tokenizer per batch (no row-at-a-time F.udf — input_hint forbids
-   per-row Python). Needed only for the nltk lemma/stem hooks
-   (`bm25_ranking.ipynb cell 1:16-21`), and used in tests to prove the native
+2. ``tokenize_pandas_udf`` — Arrow-batched pandas UDF that maps the oracle
+   analyzer (``oracle.bm25.oracle_tokenize``) over each batch (no
+   row-at-a-time F.udf). Needed only for the hermetic lemma/stem steps
+   (`bm25_ranking.ipynb cell 1:16-21`: WordNet-morphy, Porter, Snowball
+   fr/de/es/it, the Korean stand-in), and used in tests to prove the native
    path is token-identical.
 
 Reference parity notes:
@@ -103,97 +104,16 @@ def tokenize_expr(col: Column, cfg: TokenizerConfig) -> Column:
 
 
 def tokenize_pandas_udf(cfg: TokenizerConfig):
-    """Arrow-batched tokenizer UDF sharing the oracle implementation.
+    """Arrow-batched tokenizer UDF: `oracle_tokenize(text, cfg)` over each
+    batch, so engine and oracle share one Python analyzer. An unknown
+    `stem_lang` raises ValueError here, on the driver."""
+    from ..oracle.bm25 import oracle_tokenize, stemmer
 
-    Lemmatize/stem (reference `bm25_ranking.ipynb cell 1:16-21`) are applied
-    here when enabled; they degrade gracefully to identity if nltk data is
-    unavailable (tests marked @pytest.mark.nltk cover the real thing).
-    """
-    from ..oracle.bm25 import oracle_tokenize
-
-    lemmatizer = None
-    stem_fn = None
-    stem_splits = False
-    if cfg.stem_lang == "porter":
-        # hermetic pure-Python Porter (functions/stem.py) — the reference's
-        # F4c PorterStemmer path (`text_preprocessing_and_tfidf.py:29`),
-        # always available, no nltk needed
-        from .stem import porter_stem
-
-        stem_fn = porter_stem
-    elif cfg.stem_lang in ("korean", "ko"):
-        # the reference morph-analyzes ko with konlpy's Okt
-        # (`bm25_ranking.ipynb cell 1:9-10`) — use it when importable,
-        # else the hermetic Hangul particle-stripping stand-in
-        # (functions/korean.py); either way the per-token fn may split a
-        # run, so it returns a LIST and is flattened below
-        from .korean import korean_tokenize
-
-        try:
-            from konlpy.tag import Okt  # pragma: no cover (not in container)
-
-            _okt = Okt()
-            stem_fn = _okt.morphs
-        except Exception:
-            stem_fn = korean_tokenize
-        stem_splits = True
-    elif cfg.stem_lang:
-        # hermetic Snowball fr/de/es/it (functions/snowball.py) — F4b, the
-        # reference's SnowballStemmer path (`bm25_ranking.ipynb cell
-        # 1:18-21`) without the nltk dependency; nltk below stays an
-        # optional upgrade for languages this table doesn't cover
-        from .snowball import SNOWBALL_STEMMERS
-
-        stem_fn = SNOWBALL_STEMMERS.get(cfg.stem_lang)
-    # independent gated imports: a missing nltk lemmatizer must not discard
-    # the hermetic Porter stemmer (and vice versa)
-    if cfg.lemmatize:
-        try:
-            from nltk.stem import WordNetLemmatizer
-
-            _wnl = WordNetLemmatizer()
-            _wnl.lemmatize("tests")  # force the wordnet data load NOW —
-            # a missing corpus must fall back here, not per-row on executors
-            lemmatizer = _wnl.lemmatize
-        except Exception:
-            # hermetic WordNet-morphy (functions/morphy.py): the F4 path no
-            # longer degrades to identity when nltk/wordnet-data is absent
-            from .morphy import morphy_noun
-
-            lemmatizer = morphy_noun
-    if cfg.stem_lang and stem_fn is None:
-        try:
-            from nltk.stem.snowball import SnowballStemmer
-
-            stem_fn = SnowballStemmer(cfg.stem_lang).stem
-        except Exception:
-            stem_fn = None
-
-    base_cfg = TokenizerConfig(
-        lowercase=cfg.lowercase,
-        punct_mode=cfg.punct_mode,
-        split_mode=cfg.split_mode,
-        stopwords=cfg.stopwords,
-        bigrams=False,  # bigrams come AFTER lemma/stem, as in the reference
-    )
-    want_bigrams = cfg.bigrams
+    stemmer(cfg.stem_lang)
 
     @F.pandas_udf(T.ArrayType(T.StringType()))
     def _tok(s: pd.Series) -> pd.Series:
-        def one(text):
-            toks = oracle_tokenize(text, base_cfg)
-            if lemmatizer is not None:
-                toks = [lemmatizer(t) for t in toks]
-            if stem_fn is not None:
-                if stem_splits:
-                    toks = [t2 for t in toks for t2 in stem_fn(t)]
-                else:
-                    toks = [stem_fn(t) for t in toks]
-            if want_bigrams and len(toks) >= 2:
-                toks = toks + ["_".join(p) for p in zip(toks, toks[1:])]
-            return toks
-
-        return s.map(one)
+        return s.map(lambda text: oracle_tokenize(text, cfg))
 
     return _tok
 

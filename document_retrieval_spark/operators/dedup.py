@@ -31,6 +31,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..functions.analysis import ws_tokens
+
 # 2^61 - 1 (Mersenne prime) — universal-hash modulus; all arithmetic stays
 # within int64 as long as a_r * max_id + b_r < 2^63.
 MERSENNE61 = (1 << 61) - 1
@@ -59,9 +61,7 @@ def shingles(
 ) -> DataFrame:
     """-> (doc_id, shingle) DISTINCT word k-grams (lowercased whitespace
     tokens, '_'-joined — the F5 bigram mechanism generalized to k)."""
-    toks = F.filter(
-        F.split(F.trim(F.lower(F.col(text_col))), r"\s+"), lambda t: t != F.lit("")
-    )
+    toks = ws_tokens(F.col(text_col))
     n = F.size(toks)
     sh = F.transform(
         F.sequence(F.lit(0), n - k),

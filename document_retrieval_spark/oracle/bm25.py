@@ -26,84 +26,94 @@ every engine component is differential-tested against.
 
 from __future__ import annotations
 
+import functools
 import math
+import re
 from collections import defaultdict
+from collections.abc import Callable
 from dataclasses import dataclass
 
 from ..config import PUNCT, BM25Config, TokenizerConfig
 
 _DELETE_TBL = str.maketrans("", "", PUNCT)
 _SPACE_TBL = str.maketrans({c: " " for c in PUNCT})
+# nltk's wordpunct_tokenize pattern
+_WORDPUNCT = re.compile(r"\w+|[^\w\s]+")
 
 
 def oracle_tokenize(text: str, cfg: TokenizerConfig) -> list[str]:
+    """The analyzer: split per `cfg.split_mode`, then one tail for both
+    modes — stopwords -> lemma -> stem -> bigrams, the reference's order
+    (`bm25_ranking.ipynb cell 1:14-25`). The engine's tokenizer UDF runs
+    this function, and its native expression is tested token-identical."""
     if not isinstance(text, str):  # null guard, `bm25_ranking.ipynb cell 1:3-4`
         text = ""
     if cfg.split_mode == "wordpunct":
         # F2c (`team_run1.py:72-75`): wordpunct split, then drop tokens
         # that are substrings of string.punctuation (Python `in` on a
         # string — faithfully including the "#$"-style substring quirk)
-        import re as _re
-        import string as _string
-
         t = text.lower() if cfg.lowercase else text
-        toks = [
-            tk
-            for tk in _re.findall(r"\w+|[^\w\s]+", t)
-            if tk not in _string.punctuation
-        ]
-        if cfg.stopwords:
-            sw = cfg.stopword_set()
-            toks = [tk for tk in toks if tk.lower() not in sw]
-        if cfg.bigrams and len(toks) >= 2:
-            toks = toks + ["_".join(p2) for p2 in zip(toks, toks[1:])]
-        return toks
-    if cfg.punct_mode == "delete":
-        text = text.translate(_DELETE_TBL)
-    elif cfg.punct_mode == "space":
-        text = text.translate(_SPACE_TBL)
-    elif cfg.punct_mode == "alnum_space":
-        text = "".join(c if (c.isascii() and c.isalnum()) else " " for c in text)
-    else:  # pragma: no cover
-        raise ValueError(cfg.punct_mode)
-    if cfg.lowercase:
-        text = text.lower()
-    toks = text.split()
+        toks = [tk for tk in _WORDPUNCT.findall(t) if tk not in PUNCT]
+    else:
+        if cfg.punct_mode == "delete":
+            text = text.translate(_DELETE_TBL)
+        elif cfg.punct_mode == "space":
+            text = text.translate(_SPACE_TBL)
+        elif cfg.punct_mode == "alnum_space":
+            text = "".join(c if (c.isascii() and c.isalnum()) else " " for c in text)
+        else:  # pragma: no cover
+            raise ValueError(cfg.punct_mode)
+        if cfg.lowercase:
+            text = text.lower()
+        toks = text.split()
     if cfg.stopwords:
         sw = cfg.stopword_set()
         # token kept in ORIGINAL case; compare lowered (`cell 1:14`)
         toks = [t for t in toks if t.lower() not in sw]
     if cfg.lemmatize:
-        # hermetic WordNet-morphy noun lemmatization (functions/morphy.py)
-        # — the reference lemmatizes en BEFORE stemming
-        # (`bm25_ranking.ipynb cell 1:16-21`); the oracle is always the
-        # deterministic hermetic twin (the engine upgrades to nltk's
-        # WordNetLemmatizer when importable)
+        # hermetic WordNet-morphy noun lemmatization (functions/morphy.py),
+        # BEFORE stemming as in the reference (`cell 1:16-21`)
         from ..functions.morphy import morphy_noun
 
         toks = [morphy_noun(t) for t in toks]
-    if cfg.stem_lang == "porter":
-        # hermetic Porter (functions/stem.py) — stem BEFORE bigrams, as the
-        # reference does (`bm25_ranking.ipynb cell 1:16-25`)
-        from ..functions.stem import porter_stem
-
-        toks = [porter_stem(t) for t in toks]
-    elif cfg.stem_lang in ("korean", "ko"):
-        # deterministic Hangul stand-in (functions/korean.py) — the
-        # reference's konlpy path (`bm25_ranking.ipynb cell 1:9-10`)
-        from ..functions.korean import korean_tokenize
-
-        toks = [t2 for t in toks for t2 in korean_tokenize(t)]
-    elif cfg.stem_lang:
-        # hermetic Snowball fr/de/es/it (functions/snowball.py) — F4b
-        from ..functions.snowball import SNOWBALL_STEMMERS
-
-        fn = SNOWBALL_STEMMERS.get(cfg.stem_lang)
-        if fn is not None:
-            toks = [fn(t) for t in toks]
+    stem = stemmer(cfg.stem_lang)
+    if stem is not None:
+        toks = [s for t in toks for s in stem(t)]
     if cfg.bigrams and len(toks) >= 2:
         toks = toks + ["_".join(p) for p in zip(toks, toks[1:])]
     return toks
+
+
+@functools.cache
+def stemmer(stem_lang: str | None) -> Callable[[str], list[str]] | None:
+    """The per-token stemmer `stem_lang` names, token -> list of tokens (the
+    Korean stand-in may split a run), or None when `stem_lang` is unset.
+    A name with no stemmer raises ValueError rather than leaving tokens
+    unstemmed."""
+    if not stem_lang:
+        return None
+    if stem_lang == "porter":
+        # hermetic Porter (functions/stem.py), the reference's F4c
+        # PorterStemmer (`text_preprocessing_and_tfidf.py:29`)
+        from ..functions.stem import porter_stem
+
+        return lambda t: [porter_stem(t)]
+    if stem_lang in ("korean", "ko"):
+        # deterministic Hangul stand-in (functions/korean.py) for the
+        # reference's konlpy Okt (`bm25_ranking.ipynb cell 1:9-10`)
+        from ..functions.korean import korean_tokenize
+
+        return korean_tokenize
+    # hermetic Snowball fr/de/es/it (functions/snowball.py) — F4b
+    from ..functions.snowball import SNOWBALL_STEMMERS
+
+    fn = SNOWBALL_STEMMERS.get(stem_lang)
+    if fn is None:
+        supported = ", ".join(["porter", "korean", "ko", *SNOWBALL_STEMMERS])
+        raise ValueError(
+            f"no stemmer for stem_lang={stem_lang!r}; supported: {supported}"
+        )
+    return lambda t: [fn(t)]
 
 
 @dataclass

@@ -30,7 +30,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..config import BM25Config, TokenizerConfig
-from ..functions.text import tokenize_expr
+from ..functions.text import tokenize
 from ..operators.topk import topk_per_group
 from .bm25 import bm25_scored_candidates
 
@@ -44,7 +44,7 @@ def prepare_query_phrases(
     phrase is the tokenizer's output IN ORDER (duplicates kept — 'big big
     data' only matches a doubled token)."""
     return queries.select(
-        "query_id", tokenize_expr(F.col(query_col), cfg).alias("ptoks")
+        "query_id", tokenize(F.col(query_col), cfg).alias("ptoks")
     )
 
 

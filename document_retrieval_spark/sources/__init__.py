@@ -1,2 +1,2 @@
 from .snapshots import SnapshotTable, is_snapshot_table  # noqa: F401
-from .tables import read_transcripts, write_table  # noqa: F401
+from .tables import read_transcripts  # noqa: F401

@@ -57,16 +57,6 @@ def read_transcripts(spark: SparkSession, location: str) -> DataFrame:
     return df
 
 
-def write_table(
-    df: DataFrame, location: str, partition_by: list[str] | None = None,
-    mode: str = "overwrite",
-) -> None:
-    w = df.write.mode(mode)
-    if partition_by:
-        w = w.partitionBy(*partition_by)
-    w.parquet(location)
-
-
 def write_submission_csv(topk: DataFrame, path: str) -> None:
     """Reference submission sink (S3): (id, docids) rows, docids = stringified
     ranked list (`bm25_ranking.ipynb cell 7:1-5`). Quotes inside a field are

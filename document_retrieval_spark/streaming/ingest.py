@@ -21,7 +21,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..config import TokenizerConfig
-from ..functions.text import tokenize_expr
+from ..functions.analysis import token_count_expr
+from ..functions.text import tokenize
 
 
 def streaming_turn_counts(
@@ -33,7 +34,7 @@ def streaming_turn_counts(
         .groupBy(F.window("ts", window), "role")
         .agg(
             F.count("*").alias("n_turns"),
-            F.sum(F.size(F.split(F.trim("text"), r"\s+"))).alias("n_tokens"),
+            F.sum(token_count_expr(F.col("text"))).alias("n_tokens"),
         )
     )
 
@@ -89,7 +90,7 @@ def incremental_term_stats(
     def upsert(batch_df: DataFrame, batch_id: int) -> None:
         toks = batch_df.select(
             F.concat_ws("_", "conv_id", "turn_idx").alias("turn_key"),
-            F.explode(tokenize_expr(F.col("text"), cfg)).alias("term"),
+            F.explode(tokenize(F.col("text"), cfg)).alias("term"),
         )
         delta = (
             toks.groupBy("term")

@@ -102,8 +102,8 @@ def test_differential_vs_nltk_if_available():
 
 def test_engine_equals_oracle_tokenizer(spark):
     """The Spark pandas-UDF path with lemmatize=True must produce exactly
-    the oracle_tokenize token stream (the hermetic morphy fallback engaged
-    — nltk is absent in this container)."""
+    the oracle_tokenize token stream (hermetic WordNet-morphy on both
+    sides)."""
     from document_retrieval_spark.functions.text import tokenize_pandas_udf
     from document_retrieval_spark.oracle.bm25 import oracle_tokenize
     from pyspark.sql import functions as F
@@ -127,6 +127,32 @@ def test_engine_equals_oracle_tokenizer(spark):
     assert got == want
     # sanity: lemmatization actually happened
     assert "child" in want[0] and "wolf" in want[0] and "movie" in want[0]
+
+
+def test_wordpunct_lemma_engine_equals_oracle_tokenizer(spark):
+    """wordpunct splitting shares the analyzer tail: the UDF and the oracle
+    both lemmatize the wordpunct tokens."""
+    from document_retrieval_spark.functions.text import tokenize_pandas_udf
+    from document_retrieval_spark.oracle.bm25 import oracle_tokenize
+    from pyspark.sql import functions as F
+
+    cfg = TokenizerConfig(
+        lowercase=True, split_mode="wordpunct", stopwords=(), lemmatize=True
+    )
+    texts = [
+        "The children saw wolves, movies; and cities!",
+        "Data-analyses of matrices (vertices) with knives.",
+    ]
+    df = spark.createDataFrame([(t,) for t in texts], ["text"])
+    got = [
+        r["toks"]
+        for r in df.select(
+            tokenize_pandas_udf(cfg)(F.col("text")).alias("toks")
+        ).collect()
+    ]
+    want = [oracle_tokenize(t, cfg) for t in texts]
+    assert got == want
+    assert "child" in want[0] and "wolf" in want[0] and "city" in want[0]
 
 
 def test_lemmatized_bm25_rank_identity(spark):

@@ -121,3 +121,17 @@ def test_phrase_scores_equal_disjunctive_scores(spark, transcripts_pdf):
     }
     for key, score in res.items():
         assert score == base[key], key
+
+
+def test_prepare_query_phrases_stemmed(spark):
+    """A stem profile tokenizes the phrase through the analyzer UDF, in
+    order with duplicates kept, exactly as the oracle does."""
+    from document_retrieval_spark.config import TokenizerConfig
+
+    profile = TokenizerConfig(lowercase=True, stopwords=(), stem_lang="porter")
+    phrase = "Running dogs running"
+    qp = prepare_query_phrases(
+        spark.createDataFrame([("p1", phrase)], ["query_id", "query"]), profile
+    )
+    got = qp.collect()[0]["ptoks"]
+    assert got == oracle_tokenize(phrase, profile) == ["run", "dog", "run"]

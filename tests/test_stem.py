@@ -129,6 +129,36 @@ def test_stemmed_tokens_spark_equals_oracle(spark, transcripts_pdf):
     assert len(changed) >= len(ENGLISH)
 
 
+def test_wordpunct_stemmed_tokens_spark_equals_oracle(spark):
+    """wordpunct splitting shares the analyzer tail: the UDF and the oracle
+    both stem the wordpunct tokens."""
+    cfg = TokenizerConfig(
+        lowercase=True, split_mode="wordpunct", stopwords=(), stem_lang="porter"
+    )
+    texts = ["The running dogs, jumped; quickly!"] + ENGLISH
+    df = spark.createDataFrame([(t,) for t in texts], ["text"])
+    got = [
+        r["toks"]
+        for r in df.select(
+            tokenize_pandas_udf(cfg)(F.col("text")).alias("toks")
+        ).collect()
+    ]
+    want = [oracle_tokenize(t, cfg) for t in texts]
+    assert got == want
+    assert want[0] == ["the", "run", "dog", "jump", "quickli"]
+
+
+@pytest.mark.parametrize("stem_lang", ["en", "english", "porter2"])
+def test_unknown_stem_lang_raises(stem_lang):
+    """A stem_lang with no stemmer fails loudly on both sides — the UDF
+    when it is built on the driver — instead of leaving tokens unstemmed."""
+    cfg = TokenizerConfig(stem_lang=stem_lang)
+    with pytest.raises(ValueError, match="supported: porter"):
+        oracle_tokenize("running dogs", cfg)
+    with pytest.raises(ValueError, match="supported: porter"):
+        tokenize_pandas_udf(cfg)
+
+
 def test_stemmed_bm25_rank_identity(spark):
     """Full stemmed pipeline: tokenize (pandas-UDF porter) -> stats -> BM25
     top-k must match the NumPy oracle running the same stemmed config, on a

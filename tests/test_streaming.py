@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import pandas as pd
 import pyspark.sql.functions as F
 import pytest
 
@@ -100,3 +101,64 @@ def test_streaming_assemble_documents(spark, stream_dir, transcripts_pdf):
     assert len(got) == len(want)
     for conv_id, row in want.iterrows():
         assert got[conv_id] == (row["text"], row["n"]), conv_id
+
+
+@pytest.fixture(scope="module")
+def blank_stream_dir(transcripts_pdf, tmp_path_factory):
+    """Three turns of one conversation: an empty one, a blank one and one
+    of four English words."""
+    d = tmp_path_factory.mktemp("blank_turns_stream")
+    pdf = transcripts_pdf.head(3).copy()
+    pdf["conv_id"] = pdf["conv_id"].iloc[0]
+    pdf["turn_idx"] = pd.Series([0, 1, 2], index=pdf.index).astype(
+        pdf["turn_idx"].dtype
+    )
+    pdf["text"] = ["", "   ", "The running dogs jumped"]
+    pdf.to_parquet(
+        d / "part0.parquet", index=False,
+        coerce_timestamps="us", allow_truncated_timestamps=True,
+    )
+    return str(d)
+
+
+def test_streaming_turn_counts_empty_turn(spark, blank_stream_dir):
+    """An empty or blank turn counts 0 tokens (token_count_expr), not 1."""
+    stream = spark.readStream.schema(transcripts_schema()).parquet(blank_stream_dir)
+    agg = streaming_turn_counts(stream, window="1 day", watermark="1 hour")
+    q = (
+        agg.writeStream.outputMode("complete")
+        .format("memory")
+        .queryName("blank_turns_out")
+        .start()
+    )
+    try:
+        q.processAllAvailable()
+    finally:
+        q.stop()
+    row = spark.sql(
+        "select sum(n_turns) as t, sum(n_tokens) as n from blank_turns_out"
+    ).collect()[0]
+    assert (row["t"], row["n"]) == (3, 4)
+
+
+def test_incremental_term_stats_stemmed(spark, blank_stream_dir, tmp_path_factory):
+    """A stem profile tokenizes through the analyzer UDF (the native
+    expression cannot stem) and matches the oracle's term counts."""
+    from collections import Counter
+
+    from document_retrieval_spark.config import TokenizerConfig
+    from document_retrieval_spark.oracle import oracle_tokenize
+
+    profile = TokenizerConfig(lowercase=True, stopwords=(), stem_lang="porter")
+    out = str(tmp_path_factory.mktemp("stem_delta_out"))
+    ckpt = str(tmp_path_factory.mktemp("stem_ckpt"))
+    stream = spark.readStream.schema(transcripts_schema()).parquet(blank_stream_dir)
+    q = incremental_term_stats(stream, profile, out, ckpt)
+    q.awaitTermination(120)
+    got = {
+        r["term"]: (r["tf_delta"], r["df_delta"])
+        for r in spark.read.parquet(out).collect()
+    }
+    want = Counter(oracle_tokenize("The running dogs jumped", profile))
+    assert got == {t: (n, 1) for t, n in want.items()}
+    assert "run" in got and "jump" in got

@@ -353,6 +353,15 @@ _ANN_BASE = f"""
 
 
 
+# The staged-tf gates' oracles read the stage of this scale only, so at any
+# other scale the two sides would score different corpora.
+ORACLE_STAGE_SF = "sf0.01"
+STAGED_GATES = ("bm25_topk_stemmed", "bm25_topk_lemma")
+# scales whose stage is committed under .staged/: the oracle's, and sf0.001,
+# which tests/test_curation_ops.py pins byte for byte
+_COMMITTED_STAGE_SFS = (ORACLE_STAGE_SF, "sf0.001")
+
+
 def _stemmed_bm25_sql() -> str:
     """Oracle twin of bm25_topk_stemmed: scores from the engine-staged
     stemmed tf parquet (.staged/stemmed_tf/), the tf the Spark query
@@ -360,7 +369,7 @@ def _stemmed_bm25_sql() -> str:
     Pinned to sf0.01 — the driver's correctness scale; the Spark side
     (re)writes this table deterministically whenever the gate runs."""
     return _staged_tf_bm25_sql(
-        os.path.join(_stemmed_tf_path("sf0.01"), "*.parquet"),
+        os.path.join(_stemmed_tf_path(ORACLE_STAGE_SF), "*.parquet"),
         _analyzed_query_values(_stemmed_profile()),
     )
 
@@ -372,7 +381,7 @@ def _lemma_bm25_sql() -> str:
     both sides score from it; lemmatizer correctness itself is covered by
     tests/test_lemma.py pinned vectors + nltk differential."""
     return _staged_tf_bm25_sql(
-        os.path.join(_lemma_tf_path("sf0.01"), "*.parquet"),
+        os.path.join(_lemma_tf_path(ORACLE_STAGE_SF), "*.parquet"),
         _analyzed_query_values(_lemma_profile()),
     )
 
@@ -1361,8 +1370,7 @@ def _q_bm25_topk_stemmed(spark, sf_dir):
     while stemmer correctness itself is covered by the differential tests
     in tests/test_stem.py (engine vs independent NumPy/pure-Python oracle).
     """
-    return _staged_tf_topk(spark, sf_dir, _stemmed_profile(),
-                           _stemmed_tf_path(sf_dir))
+    return _staged_gate(spark, sf_dir, _stemmed_profile(), _stemmed_tf_path)
 
 
 def _q_bm25_topk_lemma(spark, sf_dir):
@@ -1373,8 +1381,7 @@ def _q_bm25_topk_lemma(spark, sf_dir):
     parquet under .staged/lemma_tf/<sf>/ and the DuckDB twin scores from
     it; lemmatizer correctness is covered by tests/test_lemma.py (pinned
     Morphy vectors, nltk differential when importable)."""
-    return _staged_tf_topk(spark, sf_dir, _lemma_profile(),
-                           _lemma_tf_path(sf_dir))
+    return _staged_gate(spark, sf_dir, _lemma_profile(), _lemma_tf_path)
 
 
 def _write_staged(df: DataFrame, path: str) -> None:
@@ -1396,6 +1403,19 @@ def _write_staged(df: DataFrame, path: str) -> None:
     pq.write_table(
         table, os.path.join(path, "part-00000.zstd.parquet"), compression="zstd"
     )
+
+
+def _staged_gate(spark, sf_dir, profile, stage_path):
+    """A staged-tf gate at `sf_dir`: the stage goes to `stage_path(sf_dir)`
+    in the tree at a scale whose stage is committed, and otherwise to a
+    temporary dir removed once written (no oracle reads it there), so a gate
+    run leaves the source tree clean at any scale."""
+    import tempfile
+
+    if os.path.basename(os.path.normpath(sf_dir)) in _COMMITTED_STAGE_SFS:
+        return _staged_tf_topk(spark, sf_dir, profile, stage_path(sf_dir))
+    with tempfile.TemporaryDirectory(prefix="staged_tf_") as tmp:
+        return _staged_tf_topk(spark, sf_dir, profile, os.path.join(tmp, "tf"))
 
 
 def _staged_tf_topk(spark, sf_dir, profile, path):

@@ -194,18 +194,3 @@ def gen_queries(
         )
     return pd.DataFrame(rows)
 
-
-def write_fixture(out_dir: str, n_conversations: int, n_queries: int, seed: int = 42, **kw):
-    """Materialize transcripts + queries as parquet under out_dir."""
-    import os
-
-    os.makedirs(out_dir, exist_ok=True)
-    tr = gen_transcripts(n_conversations, seed=seed, **kw)
-    q = gen_queries(tr, n_queries, seed=seed + 1)
-    # microsecond timestamps: Spark's typed parquet reader rejects ns INT64
-    tr.to_parquet(
-        os.path.join(out_dir, "transcripts.parquet"), index=False,
-        coerce_timestamps="us", allow_truncated_timestamps=True,
-    )
-    q.to_parquet(os.path.join(out_dir, "queries.parquet"), index=False)
-    return tr, q

@@ -1,4 +1,4 @@
-from .text import tokenize_expr, tokenize_pandas_udf, squeeze_ws  # noqa: F401
+from .text import tokenize_expr, tokenize_pandas_udf  # noqa: F401
 from .analysis import (  # noqa: F401
     add_quality_columns,
     lang_id_expr,

@@ -238,8 +238,3 @@ def morphy_noun(word: str) -> str:
         return word[:-2]  # "boxes"->"box", "benches"->"bench"
     return word[:-1]  # regular plural: "s" -> ""
 
-
-def lemmatize_en(word: str) -> str:
-    """The reference's per-token call (`bm25_ranking.ipynb cell 1:16-17`):
-    noun-mode morphy, unchanged when no rule fires."""
-    return morphy_noun(word)

@@ -24,7 +24,7 @@ Reference parity notes:
 - '_'-joined bigrams appended to unigrams (`cell 1:23-25`)
   -> ``F.zip_with`` over shifted slices + ``F.concat``;
 - whitespace squeeze loop (`cosine_similarity_bm25_reranking.py:62-64`)
-  -> single ``F.regexp_replace(text, " +", " ")``.
+  -> nothing: the split on ``PY_WS_SPLIT`` already collapses whitespace runs.
 """
 
 from __future__ import annotations
@@ -46,11 +46,6 @@ PY_WS_SPLIT = (
     "[\\s\\u001c-\\u001f\\u0085\\u00a0\\u1680"
     "\\u2000-\\u200a\\u2028\\u2029\\u202f\\u205f\\u3000]+"
 )
-
-
-def squeeze_ws(col: Column) -> Column:
-    """F10: collapse repeated spaces (the reference loops .replace 10x)."""
-    return F.regexp_replace(col, " +", " ")
 
 
 def _normalize_expr(col: Column, cfg: TokenizerConfig) -> Column:

@@ -38,7 +38,6 @@ conversation it changes nothing.
 
 from __future__ import annotations
 
-import json
 import os
 import time
 from dataclasses import dataclass
@@ -677,19 +676,6 @@ def _file_schema(df: DataFrame, part: str | None = None) -> dict:
     return StructType(
         [StructField(f.name, f.dataType) for f in fields]
     ).jsonValue()
-
-
-def _current_postings_dir(out_dir: str) -> str:
-    """Resolve the published version's postings dir (local paths; used by
-    tests/tools that inspect the physical layout)."""
-    out = out_dir.rstrip("/")
-    p = os.path.join(out, CURRENT)
-    if os.path.exists(p):
-        with open(p) as f:
-            v = int(json.load(f).get("version", 0))
-        if v > 0:
-            return os.path.join(out, "postings", f"v={v}")
-    return os.path.join(out, "postings")
 
 
 @dataclass

@@ -45,17 +45,3 @@ def assemble_documents(transcripts: DataFrame, lang_col: str | None = None) -> D
     )
     return agg
 
-
-def explode_turns(transcripts: DataFrame) -> DataFrame:
-    """Turn-granular view (sentence-level indexing precedent,
-    `team_run1.py:80-99`): keeps (conv_id, turn_idx) as the composite doc key
-    instead of the reference's string-concatenated `{docid}_{idx}`."""
-    return transcripts.select(
-        F.concat_ws("_", "conv_id", "turn_idx").alias("docid"),
-        "conv_id",
-        "turn_idx",
-        "role",
-        "text",
-        "tool",
-        "ts",
-    )

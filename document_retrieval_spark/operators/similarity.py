@@ -11,9 +11,8 @@ IndexFlatL2 over embeddings, `faiss_based_ANN_Implementation.py:279-287`,
   `n_centroids` vectors act as centroids (seeded data -> deterministic, and
   exactly reproducible by the SQL oracle, unlike trained k-means); every
   vector is assigned to its nearest centroid, probes search only the
-  `n_probe` nearest clusters. At 100 TB this turns a full scan into a
-  partition-pruned scan of n_probe/n_centroids of the data (cluster id is a
-  partition column on write).
+  `n_probe` nearest clusters, so a probe scores n_probe/n_centroids of the
+  vectors instead of all of them.
 
 All float math is done in float64 with sequential left-fold accumulation so
 an ANSI-SQL oracle (DuckDB) matches to the last ulp; scores are rounded to
@@ -267,73 +266,3 @@ def embedding_near_dup_pairs(
         .distinct()  # a pair may share both assigned clusters
     )
 
-
-def write_ivf_index(
-    vectors: DataFrame,
-    path: str,
-    n_centroids: int = 8,
-    train_iters: int = 3,
-) -> None:
-    """Persist a cluster-partitioned IVF layout: vectors written
-    partitionBy(cluster) + the trained centroid table. At scale a probe scan
-    then reads only n_probe/n_centroids of the data — parquet PARTITION
-    pruning, not just row-group skipping."""
-    centroids = kmeans_cosine_train(vectors, k=n_centroids, iters=train_iters)
-    assigned = assign_clusters(vectors, centroids)
-    assigned.write.mode("overwrite").partitionBy("cluster").parquet(
-        f"{path.rstrip('/')}/vectors"
-    )
-    centroids.write.mode("overwrite").parquet(f"{path.rstrip('/')}/centroids")
-
-
-def search_ivf_index(
-    spark,
-    path: str,
-    probes: DataFrame,
-    n_probe: int = 2,
-    k: int = 10,
-) -> DataFrame:
-    """Query a persisted IVF index -> (probe_id, rank, vec_id, cos).
-
-    The touched-cluster set (bounded by n_probes * n_probe) is collected and
-    applied as an explicit IN filter on the partition column — a STATIC
-    partition-pruned scan (visible as `PartitionFilters` in the plan),
-    independent of dynamic-partition-pruning heuristics."""
-    base = path.rstrip("/")
-    centroids = spark.read.parquet(f"{base}/centroids")
-    assigned = spark.read.parquet(f"{base}/vectors")
-    probe_clusters = (
-        topk_per_group(
-            probes.crossJoin(F.broadcast(centroids.select(
-                "centroid_id", F.col("embedding").alias("c_emb")
-            ))).withColumn(
-                "ccos", F.round(cosine_expr(F.col("embedding"), F.col("c_emb")), 6)
-            ),
-            ["probe_id"],
-            "ccos",
-            "centroid_id",
-            n_probe,
-            rank_col="crank",
-        )
-        .select("probe_id", F.col("centroid_id").alias("cluster"))
-    )
-    # collect the (bounded) probe->cluster routing ONCE and rebuild it as a
-    # local relation: reusing the lazy probe_clusters plan in the join would
-    # re-run the probes x centroids scoring as a second job per query
-    routing_schema = probe_clusters.select("probe_id", "cluster").schema
-    rows = [(r["probe_id"], r["cluster"]) for r in probe_clusters.collect()]
-    touched = sorted({c for _, c in rows})
-    # explicit schema: an empty probe set (or no probe/centroid match) must
-    # yield an empty result, not an infer-from-empty createDataFrame error
-    probe_clusters = spark.createDataFrame(rows, schema=routing_schema)
-    pruned = assigned.filter(F.col("cluster").isin(touched))
-    p = probes.select("probe_id", F.col("embedding").alias("p_emb"))
-    scored = (
-        pruned.join(F.broadcast(probe_clusters), "cluster")
-        .join(F.broadcast(p), "probe_id")
-        .filter(F.col("vec_id") != F.col("probe_id"))
-        .withColumn("cos", F.round(cosine_expr(F.col("embedding"), F.col("p_emb")), 6))
-    )
-    return topk_per_group(scored, ["probe_id"], "cos", "vec_id", k).select(
-        "probe_id", "rank", "vec_id", "cos"
-    )

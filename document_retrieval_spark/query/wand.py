@@ -59,6 +59,9 @@ from ..operators.postings import _Blocks, _quotient_np
 
 _EMPTY_I64 = np.empty(0, dtype=np.int64)
 _EMPTY_F64 = np.empty(0, dtype=np.float64)
+# Most distinct terms a batch pushes into the postings scan as an IN-list;
+# above it the broadcast join alone drops the untouched terms' segments.
+MAX_PUSHDOWN_TERMS = 50_000
 
 
 class _Cursor:
@@ -342,7 +345,6 @@ def wand_topk(
     k: int = 10,
     lang_col: str | None = None,
     terms: list[str] | None = None,
-    max_pushdown_terms: int = 50_000,
     n_query_parts: int | None = None,
     term_dict: DataFrame | None = None,
     avgdl: float | None = None,
@@ -361,8 +363,7 @@ def wand_topk(
     `term` for every index. Kept so that existing callers still work.
     """
     touched = _touched_segments(
-        query_terms, postings, coll, bm25, lang_col, terms,
-        max_pushdown_terms, avgdl
+        query_terms, postings, coll, bm25, lang_col, terms, avgdl
     )
 
     def score_group(table: pa.Table) -> pa.Table:
@@ -460,7 +461,6 @@ def _touched_segments(
     bm25: BM25Config,
     lang_col: str | None,
     terms: list[str] | None,
-    max_pushdown_terms: int,
     avgdl: float | None = None,
 ) -> DataFrame:
     """Shared probe stage of both WAND layouts: validate the config, prune
@@ -502,13 +502,13 @@ def _touched_segments(
             r["term"]
             for r in query_terms.select("term")
             .distinct()
-            .limit(max_pushdown_terms + 1)
+            .limit(MAX_PUSHDOWN_TERMS + 1)
             .collect()
         ]
     # Above the cap there is no IN-list: the broadcast join below already
     # drops every segment of an untouched term, only without the scan
     # pushdown.
-    if len(terms) <= max_pushdown_terms:
+    if len(terms) <= MAX_PUSHDOWN_TERMS:
         postings = postings.filter(F.col("term").isin(list(terms)))
     touched = postings.join(F.broadcast(query_terms), join_keys)
     if lang_col:
@@ -537,7 +537,6 @@ def wand_topk_docpart(
     k: int = 10,
     n_buckets: int | None = None,
     terms: list[str] | None = None,
-    max_pushdown_terms: int = 50_000,
     n_docs: int | None = None,
     term_dict: DataFrame | None = None,
     avgdl: float | None = None,
@@ -579,8 +578,7 @@ def wand_topk_docpart(
             "wand_topk with lang_col for a language-partitioned index"
         )
     touched = _touched_segments(
-        query_terms, postings, coll, bm25, None, terms, max_pushdown_terms,
-        avgdl
+        query_terms, postings, coll, bm25, None, terms, avgdl
     )
     spark = touched.sparkSession
     if n_buckets is None:

@@ -395,9 +395,9 @@ def _assert_postings_files(out, cfg):
     count, and each file is term-clustered for the probe's IN-filter."""
     import pyarrow.parquet as pq
 
-    from document_retrieval_spark.index.build import _current_postings_dir
+    from index_layout import current_postings_dir
 
-    base = _current_postings_dir(out)
+    base = current_postings_dir(out)
     lang = cfg.index.lang_col
     for g in range(cfg.index.n_shard_groups):
         gdir = os.path.join(base, f"group={g}")

@@ -18,6 +18,7 @@ from document_retrieval_spark.config import (
 )
 from document_retrieval_spark.index import IndexBuilder, load_index
 from document_retrieval_spark.query import prepare_query_terms
+from document_retrieval_spark.query import wand as wand_mod
 from document_retrieval_spark.query.wand import wand_topk, wand_topk_docpart
 
 BM25 = BM25Config()
@@ -65,9 +66,10 @@ def test_builder_persists_term_keyed_tables(spark, built):
     assert "term_id" not in idx.postings.columns
 
 
-def test_id_pushdown_matches_string_path(spark, index, tdict, queries_df):
+def test_id_pushdown_matches_string_path(spark, index, tdict, queries_df,
+                                         monkeypatch):
     """wand_topk answers the same with and without term_dict=, through the
-    IN-list probe and, above max_pushdown_terms=2, the bare broadcast-join
+    IN-list probe and, above MAX_PUSHDOWN_TERMS=2, the bare broadcast-join
     probe (no semi-join), and on a postings frame that still carries a
     legacy `term_id` column."""
     from pyspark.sql import functions as F
@@ -81,8 +83,10 @@ def test_id_pushdown_matches_string_path(spark, index, tdict, queries_df):
         got = wand_topk(qt, index.postings, index.doc_map, index.coll, BM25,
                         k=10, **kw)
         assert _rows(got) == want
-        capped = wand_topk(qt, index.postings, index.doc_map, index.coll,
-                           BM25, k=10, max_pushdown_terms=2, **kw)
+        with monkeypatch.context() as m:
+            m.setattr(wand_mod, "MAX_PUSHDOWN_TERMS", 2)
+            capped = wand_topk(qt, index.postings, index.doc_map, index.coll,
+                               BM25, k=10, **kw)
         plan = capped._jdf.queryExecution().executedPlan().toString()
         assert "LeftSemi" not in plan
         assert _rows(capped) == want

@@ -86,11 +86,11 @@ def test_lang_index_build_resume_and_route(spark, multilang, lang_cfg,
 
     # postings are physically partitioned by language (partition pruning for
     # the per-language routing — "load only that language's model")
-    from document_retrieval_spark.index.build import _current_postings_dir
+    from index_layout import current_postings_dir
 
     assert any(
         d.startswith("lang=")
-        for d in os.listdir(os.path.join(_current_postings_dir(out), "group=0"))
+        for d in os.listdir(os.path.join(current_postings_dir(out), "group=0"))
     )
 
     # load + route queries per language; compare against per-language oracles

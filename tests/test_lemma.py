@@ -14,9 +14,15 @@ import pytest
 from document_retrieval_spark.config import BM25Config, TokenizerConfig
 from document_retrieval_spark.functions.morphy import (
     NOUN_EXCEPTIONS,
-    lemmatize_en,
     morphy_noun,
 )
+
+
+def lemmatize_en(word: str) -> str:
+    """The reference's per-token call (`bm25_ranking.ipynb cell 1:16-17`):
+    noun-mode morphy, unchanged when no rule fires."""
+    return morphy_noun(word)
+
 
 # pinned to WordNet Morphy noun-mode behavior (pos='n' is the
 # WordNetLemmatizer.lemmatize default — the reference's call shape,

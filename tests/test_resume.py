@@ -117,18 +117,18 @@ def test_reduced_shard_groups_drop_stale_dirs(spark, transcripts_df, cfg,
     """Shrinking n_shard_groups between builds on the same out_dir must not
     leave stale postings/group=G (G >= new count) behind: load_index's
     partition discovery would read duplicate/stale segments."""
-    from document_retrieval_spark.index.build import _current_postings_dir
+    from index_layout import current_postings_dir
 
     out = str(tmp_path_factory.mktemp("idx_shrink"))
     IndexBuilder(spark, cfg, out).build(transcripts_df)  # 4 groups
-    assert os.path.isdir(os.path.join(_current_postings_dir(out), "group=3"))
+    assert os.path.isdir(os.path.join(current_postings_dir(out), "group=3"))
     cfg2 = EngineConfig(
         tokenizer=cfg.tokenizer, bm25=cfg.bm25,
         index=IndexConfig(n_shards=8, n_shard_groups=2, salt_df_threshold=10,
                           n_salts=4, block_size=16),
     )
     IndexBuilder(spark, cfg2, out).build(transcripts_df)
-    left = {d for d in os.listdir(_current_postings_dir(out))
+    left = {d for d in os.listdir(current_postings_dir(out))
             if d.startswith("group=")}
     assert left == {"group=0", "group=1"}
     # content identical to a fresh 2-group build

@@ -77,38 +77,6 @@ def test_trained_ivf_recall_beats_bar(vectors, probes):
     assert sum(recalls) / len(recalls) >= 0.9, recalls
 
 
-def test_ivf_index_write_search_partition_pruned(spark, vectors, probes,
-                                                 tmp_path_factory):
-    """Persisted IVF: cluster-partitioned layout, static partition-pruned
-    search, results equal the in-memory trained IVF."""
-    import os
-
-    from document_retrieval_spark.operators.similarity import (
-        search_ivf_index,
-        write_ivf_index,
-    )
-
-    path = str(tmp_path_factory.mktemp("ivf_idx"))
-    write_ivf_index(vectors, path, n_centroids=8, train_iters=3)
-    parts = {d for d in os.listdir(os.path.join(path, "vectors"))
-             if d.startswith("cluster=")}
-    assert len(parts) >= 2  # physically cluster-partitioned
-
-    res = search_ivf_index(spark, path, probes, n_probe=4, k=10)
-    got = {}
-    for r in res.collect():
-        got.setdefault(r["probe_id"], []).append((r["rank"], r["vec_id"], r["cos"]))
-    mem = {}
-    for r in ivf_cosine_topk(vectors, probes, n_centroids=8, n_probe=4, k=10,
-                             train_iters=3).collect():
-        mem.setdefault(r["probe_id"], []).append((r["rank"], r["vec_id"], r["cos"]))
-    assert got == mem
-    # the scan is partition-pruned: the physical plan's partition filter
-    # mentions the cluster IN-list
-    plan = res._jdf.queryExecution().executedPlan().toString()
-    assert "cluster" in plan
-
-
 def test_embedding_near_dup_recall_vs_brute(spark, vectors):
     """Cluster-bucketed embedding near-dup (multi-probe assignment) must
     recover every brute-force pair above the threshold on the fixture —
@@ -145,22 +113,6 @@ def test_embedding_near_dup_recall_vs_brute(spark, vectors):
         assert got <= brute  # no false positives by construction
         recall = len(got & brute) / max(len(brute), 1)
         assert recall >= 0.9, (train_iters, recall, len(brute))
-
-
-def test_ivf_search_empty_probes(spark, vectors, probes, tmp_path_factory):
-    """An empty probe set returns an empty result frame, not an
-    infer-schema-from-empty createDataFrame crash (ADVICE r2)."""
-    from document_retrieval_spark.operators.similarity import (
-        search_ivf_index,
-        write_ivf_index,
-    )
-
-    path = str(tmp_path_factory.mktemp("ivf_empty"))
-    write_ivf_index(vectors, path, n_centroids=4, train_iters=1)
-    empty = probes.filter(F.col("probe_id") < 0)
-    res = search_ivf_index(spark, path, empty, n_probe=2, k=5)
-    assert res.count() == 0
-    assert res.columns == ["probe_id", "rank", "vec_id", "cos"]
 
 
 def test_near_dup_cluster_skew_guard(spark, vectors):

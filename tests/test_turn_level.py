@@ -6,8 +6,10 @@ from __future__ import annotations
 
 import math
 
+from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
+
 from document_retrieval_spark.config import REFERENCE_PROFILE, BM25Config
-from document_retrieval_spark.operators.assemble import explode_turns
 from document_retrieval_spark.operators.stats import (
     build_term_stats,
     collection_stats,
@@ -16,6 +18,21 @@ from document_retrieval_spark.operators.stats import (
 )
 from document_retrieval_spark.oracle import build_oracle_index, oracle_topk
 from document_retrieval_spark.query import bm25_score_exhaustive, prepare_query_terms
+
+
+def explode_turns(transcripts: DataFrame) -> DataFrame:
+    """Turn-granular view (sentence-level indexing precedent,
+    `team_run1.py:80-99`): keeps (conv_id, turn_idx) as the composite doc key
+    instead of the reference's string-concatenated `{docid}_{idx}`."""
+    return transcripts.select(
+        F.concat_ws("_", "conv_id", "turn_idx").alias("docid"),
+        "conv_id",
+        "turn_idx",
+        "role",
+        "text",
+        "tool",
+        "ts",
+    )
 
 
 def test_turn_level_bm25_matches_oracle(spark, transcripts_df, transcripts_pdf,

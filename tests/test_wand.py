@@ -27,6 +27,7 @@ from document_retrieval_spark.operators.stats import (
 )
 from document_retrieval_spark.oracle import oracle_topk
 from document_retrieval_spark.query import bm25_score_exhaustive, prepare_query_terms
+from document_retrieval_spark.query import wand as wand_mod
 from document_retrieval_spark.query.wand import wand_topk
 
 K = 10
@@ -126,16 +127,15 @@ def test_wand_explicit_term_list_short_circuits_collect(built, queries_df):
     assert a == b
 
 
-def test_wand_semijoin_prune_above_pushdown_cap(built, queries_df):
-    """Above max_pushdown_terms the probe drops the IN-literal pushdown and
+def test_wand_semijoin_prune_above_pushdown_cap(built, queries_df, monkeypatch):
+    """Above MAX_PUSHDOWN_TERMS the probe drops the IN-literal pushdown and
     leaves pruning to the broadcast query-term join; results identical."""
     docs, docs_ord, tf, coll, stats, postings = built
     bm25 = BM25Config()
     qt = prepare_query_terms(queries_df, REFERENCE_PROFILE, bm25)
     a = _collect_topk(wand_topk(qt, postings, docs_ord, coll, bm25, k=K))
-    b = _collect_topk(
-        wand_topk(qt, postings, docs_ord, coll, bm25, k=K, max_pushdown_terms=2)
-    )
+    monkeypatch.setattr(wand_mod, "MAX_PUSHDOWN_TERMS", 2)
+    b = _collect_topk(wand_topk(qt, postings, docs_ord, coll, bm25, k=K))
     assert a == b
 
 

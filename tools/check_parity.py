@@ -5,11 +5,16 @@ at the same sf dir, compare row count + schema + order-insensitive values
 (columns sorted by name, rows sorted, floats compared exactly after the
 entry-level rounding).
 
+The staged-tf gates (`STAGED_GATES`) compare only at the scale whose stage
+their oracles read (`ORACLE_STAGE_SF`); elsewhere their Spark side runs and
+the compare is reported as SKIP, counted apart from PASS and FAIL.
+
     python tools/check_parity.py [sf_dir] [query ...]
 """
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 
@@ -57,7 +62,8 @@ def main() -> int:
         )
 
     qs, oracles = entry_mod.queries(), entry_mod.oracle_sql()
-    failures = []
+    off_stage = os.path.basename(os.path.normpath(sf_dir)) != entry_mod.ORACLE_STAGE_SF
+    failures, skipped, passed = [], [], 0
     for name, fn in qs.items():
         if only and name not in only:
             continue
@@ -69,7 +75,12 @@ def main() -> int:
             print(f"FAIL  {name}: spark error: {e}")
             continue
         if name not in oracles:
+            skipped.append(name)
             print(f"SKIP  {name}: no oracle ({len(sdf)} rows, rows-only check)")
+            continue
+        if off_stage and name in entry_mod.STAGED_GATES:
+            skipped.append(name)
+            print(f"SKIP  {name}: oracle reads the {entry_mod.ORACLE_STAGE_SF} stage")
             continue
         try:
             odf = con.sql(oracles[name]).df()
@@ -106,10 +117,13 @@ def main() -> int:
         tag = "PASS " if status.startswith("ok") else "FAIL "
         if tag == "FAIL ":
             failures.append(name)
+        else:
+            passed += 1
         print(f"{tag} {name}: rows={len(s)} {status} [{time.time()-t0:.1f}s]")
 
     spark.stop()
-    print(f"\n{len(failures)} failures" + (f": {failures}" if failures else ""))
+    print(f"\n{passed} passed, {len(skipped)} skipped, {len(failures)} failures"
+          + (f": {failures}" if failures else ""))
     return 1 if failures else 0
 
 

@@ -12,10 +12,14 @@ perfbench builds it), its term list, avgdl and n_docs passed. Each call
 is collected.
 
 With ``--batch N`` it builds the perfbench batch index instead (one cold
-build over all 2,000 conversations) and measures ``wand_topk`` calls of N
-queries each, as perfbench's batch workload makes them: consecutive
-N-query slices of the query set (wrapping round), avgdl passed, no term
-list. The ``--warm`` untimed calls take the last N queries.
+build over all 2,000 conversations) and measures calls of N queries each
+through the ``--scorer``, as perfbench's batch workload makes them:
+``wand`` runs ``wand_topk`` over consecutive N-query slices of the query
+set (wrapping round), avgdl passed, no term list; ``exhaustive``
+(``bm25_score_exhaustive``) and ``cosine`` (``cosine_topk``) run the first
+N queries on every call, over perfbench's inputs: the tf as
+``(term, docid, tf)``, ``doc_map``'s ``(docid, dl)`` and a persisted
+``doc_norms``. The ``--warm`` untimed calls take the last N queries.
 
 For every measured call it reads, from /proc and for this process tree
 only, the CPU seconds of
@@ -37,7 +41,8 @@ The same JIT totals, with wall and CPU seconds, are reported for the
 set-up (session start, corpus generation, build, compact, load).
 
     python tools/lookup_cpu_split.py [--seed 60] [--queries 10] [--warm 2]
-        [--batch N] [--driver-java-options "-XX:..."]
+        [--batch N [--scorer {wand,exhaustive,cosine}]]
+        [--driver-java-options "-XX:..."]
 
 ``--driver-java-options`` replaces the JVM options get_spark sets as
 ``spark.driver.defaultJavaOptions`` (its C2 thresholds); pass "" to run
@@ -171,15 +176,23 @@ def main(argv=None) -> int:
     ap.add_argument("--queries", type=int, default=10)
     ap.add_argument("--warm", type=int, default=2)
     ap.add_argument("--batch", type=int, default=0,
-                    help="measure N-query wand_topk calls on the batch index")
+                    help="measure N-query calls on the batch index")
+    ap.add_argument("--scorer", choices=("wand", "exhaustive", "cosine"),
+                    default="wand", help="the batch calls' scorer")
     ap.add_argument("--driver-java-options", default=None)
     args = ap.parse_args(argv)
+    if args.scorer != "wand" and not args.batch:
+        ap.error("--scorer needs --batch")
 
     from document_retrieval_spark.config import EngineConfig, IndexConfig
     from document_retrieval_spark.fixtures import gen_queries, gen_transcripts
     from document_retrieval_spark.index.build import IndexBuilder, load_index
     from document_retrieval_spark.oracle.bm25 import oracle_tokenize
-    from document_retrieval_spark.query import prepare_query_terms
+    from document_retrieval_spark.query import (
+        bm25_score_exhaustive,
+        prepare_query_terms,
+    )
+    from document_retrieval_spark.query.cosine import cosine_topk, doc_norms
     from document_retrieval_spark.query.wand import (
         wand_topk,
         wand_topk_docpart,
@@ -221,6 +234,11 @@ def main(argv=None) -> int:
         idx = load_index(spark, out)
         coll = idx.coll.first()
         avgdl, n_docs = float(coll["avgdl"]), int(coll["n_docs"])
+        if args.scorer != "wand":  # perfbench's batch inputs
+            tf = idx.tf.select("term", "docid", "tf")
+            doc_stats = idx.doc_map.select("docid", "dl")
+            norms = doc_norms(tf, idx.term_stats).persist()
+            norms.count()
 
         c_setup, jit_setup = cpu_split(), jit_counts(spark)
         setup = {
@@ -246,6 +264,8 @@ def main(argv=None) -> int:
                 return shaped.iloc[[i]]
             if i < 0:
                 return queries.iloc[-args.batch:]
+            if args.scorer != "wand":
+                return queries.iloc[:args.batch]
             lo = i * args.batch % len(queries)
             return queries.iloc[lo:lo + args.batch]
 
@@ -262,6 +282,11 @@ def main(argv=None) -> int:
             if layout == "docpart":
                 res = wand_topk_docpart(qt, idx.postings, idx.doc_map, idx.coll,
                                         cfg.bm25, n_docs=n_docs, **kw)
+            elif layout == "exhaustive":
+                res = bm25_score_exhaustive(qt, tf, idx.term_stats, doc_stats,
+                                            cfg.bm25, k=10)
+            elif layout == "cosine":
+                res = cosine_topk(qt, tf, idx.term_stats, k=10, doc_norm=norms)
             else:
                 res = wand_topk(qt, idx.postings, idx.doc_map, idx.coll,
                                 cfg.bm25, **kw)
@@ -295,7 +320,7 @@ def main(argv=None) -> int:
                              + row["python_workers_ms"])
             return {k: round(v, 1) for k, v in row.items()}
 
-        layouts = ("wand",) if args.batch else ("wand", "docpart")
+        layouts = (args.scorer,) if args.batch else ("wand", "docpart")
         for i in range(args.warm):
             for layout in layouts:
                 call(layout, -1 - i)
@@ -309,7 +334,7 @@ def main(argv=None) -> int:
         shutil.rmtree(work, ignore_errors=True)
 
     report = {"seed": args.seed, "cores": cores, "warm": args.warm,
-              "batch": args.batch,
+              "batch": args.batch, "scorer": args.scorer,
               "tier4_invocation_threshold": tier4, "setup": setup}
     for layout, rows in calls.items():
         med = {k: statistics.median(r[k] for r in rows) for k in rows[0]}
